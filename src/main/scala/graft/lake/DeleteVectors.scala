@@ -1,5 +1,13 @@
 package graft.lake
 
+import scala.collection.mutable
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.parquet.io.ColumnIOFactory
+import org.apache.parquet.io.api.{Binary, Converter, GroupConverter, PrimitiveConverter, RecordMaterializer}
+import org.apache.parquet.schema.MessageType
+import org.apache.spark.broadcast.Broadcast
+
 /** v3 deletion vectors (M37) — the marquee Iceberg-v3 MoR change the
   * reference's own upgrade story targets (README.md:13-16: EMR ≥ 7.12 /
   * Iceberg ≥ 1.10 is exactly the DV-capable floor): position deletes for
@@ -9,12 +17,17 @@ package graft.lake
   * Representation: sorted positions encoded as delta varints (LEB128)
   * behind a version byte. Dense runs cost ~1 byte/position, sparse
   * deletes ~2-5 bytes — 10-50× smaller than the 2-column parquet rows
-  * they replace, which shrinks both the delete-file footprint and the
-  * broadcast the MoR anti-join ships to every task. A DV "file" is a
-  * small parquet of `(file_path, dv, cnt)` rows — one row per targeted
-  * data file, written distributed (the bitmap for each data file is
-  * built executor-side from that file's grouped positions; nothing
-  * row-scale crosses the driver).
+  * they replace. A DV "file" is a small parquet of `(file_path, dv, cnt)`
+  * rows — one row per targeted data file, written distributed (the
+  * bitmap for each data file is built executor-side from that file's
+  * grouped positions; nothing row-scale crosses the driver).
+  *
+  * The bitmap is also the READ form of every position-scoped delete:
+  * within the delete broadcast budget, [[load]] reads a scan's classic
+  * position-delete files and DV files on the driver (parquet footers and
+  * column chunks, no Spark job), folds position rows per data file into
+  * bitmaps, and the scan filters through one broadcast [[Membership]]
+  * test — so a v2 table and its v3 twin pay the same, compact, read.
   *
   * Scoping mirrors position deletes: data files are immutable and
   * uniquely pathed, so a DV can only ever hit the file it was written
@@ -69,7 +82,7 @@ object DeleteVectors {
   def decode(bytes: Array[Byte]): Array[Long] = {
     require(bytes.nonEmpty && bytes(0) == Version,
       s"unknown deletion-vector format version: ${bytes.headOption.getOrElse(-1)}")
-    val out = scala.collection.mutable.ArrayBuffer.empty[Long]
+    val out = mutable.ArrayBuilder.make[Long]
     var prev = -1L
     var i = 1
     while (i < bytes.length) {
@@ -91,20 +104,109 @@ object DeleteVectors {
       prev += delta
       out += prev
     }
-    out.toArray
+    out.result()
   }
 
-  /** Per-JVM memoized decode, keyed by byte-array IDENTITY (a broadcast
-    * deserializes once per executor, so every task sees the same array
-    * instances): each bitmap decodes once per executor, membership tests
-    * binary-search the cached sorted positions. The crude size cap keeps
-    * a long-lived executor serving many tables/broadcasts bounded. */
-  private val decodeCache =
-    new java.util.concurrent.ConcurrentHashMap[Array[Byte], Array[Long]]()
+  /** Every bitmap of a read, keyed by the data file it hits. */
+  type Bitmaps = Map[String, Array[Array[Byte]]]
 
-  def contains(bytes: Array[Byte], pos: Long): Boolean = {
-    if (decodeCache.size > 4096) decodeCache.clear()
-    val arr = decodeCache.computeIfAbsent(bytes, decode(_))
-    java.util.Arrays.binarySearch(arr, pos) >= 0
+  /** Driver-side load of position-delete files (`file_path`, `pos`) and
+    * DV files (`file_path`, `dv`) into per-data-file bitmaps, straight
+    * through parquet-hadoop: no Spark job, only the two needed columns
+    * are read. Position rows of one data file — across every position
+    * file — fold into one bitmap (duplicates collapse); DV bitmaps are
+    * kept as written. Only rows naming one of `scanned` (the data files
+    * the read scans) are kept; rows with a null file or position name
+    * nothing, as in the anti-join they replace. */
+  def load(conf: Configuration, positionFiles: Seq[String],
+      dvFiles: Seq[String], scanned: Set[String]): Bitmaps = {
+    val positions = mutable.HashMap.empty[String, mutable.ArrayBuilder.ofLong]
+    val dvs = mutable.HashMap.empty[String, mutable.ArrayBuffer[Array[Byte]]]
+    positionFiles.foreach(scan(conf, _, "pos") { r =>
+      if (r.hasPos && scanned.contains(r.file))
+        positions.getOrElseUpdate(r.file, new mutable.ArrayBuilder.ofLong) += r.pos
+    })
+    dvFiles.foreach(scan(conf, _, "dv") { r =>
+      if (r.dv != null && scanned.contains(r.file))
+        dvs.getOrElseUpdate(r.file, mutable.ArrayBuffer.empty) += r.dv
+    })
+    (positions.keySet ++ dvs.keySet).iterator.map { f =>
+      val folded = positions.get(f).map { b =>
+        val ps = b.result(); java.util.Arrays.sort(ps); encode(ps)
+      }
+      f -> (folded.toArray ++ dvs.get(f).map(_.toArray).getOrElse(Array.empty))
+    }.toMap
+  }
+
+  /** One delete-file row as the scan's converter leaves it. */
+  private final class DeleteRow extends GroupConverter {
+    var file: String = _
+    var pos = 0L
+    var hasPos = false
+    var dv: Array[Byte] = _
+    private val fileConv = new PrimitiveConverter {
+      override def addBinary(v: Binary): Unit = file = v.toStringUsingUTF8
+    }
+    private val payloadConv = new PrimitiveConverter {
+      override def addLong(v: Long): Unit = { pos = v; hasPos = true }
+      override def addBinary(v: Binary): Unit = dv = v.getBytes
+    }
+    override def getConverter(i: Int): Converter =
+      if (i == 0) fileConv else payloadConv
+    override def start(): Unit = { file = null; hasPos = false; dv = null }
+    override def end(): Unit = ()
+  }
+
+  /** Calls `onRow` for each row of one delete file, reading only its
+    * `file_path` and `payload` columns. */
+  private def scan(conf: Configuration, path: String, payload: String)(
+      onRow: DeleteRow => Unit): Unit = {
+    val reader = StatsPruning.open(conf, java.nio.file.Paths.get(path))
+    try {
+      val fileSchema = reader.getFooter.getFileMetaData.getSchema
+      def field(name: String) = fileSchema.getType(fileSchema.getFieldIndex(name))
+      val requested = new MessageType(fileSchema.getName,
+        field("file_path"), field(payload))
+      reader.setRequestedSchema(requested)
+      val io = new ColumnIOFactory().getColumnIO(requested, fileSchema)
+      val row = new DeleteRow
+      val materializer = new RecordMaterializer[DeleteRow] {
+        override def getCurrentRecord: DeleteRow = row
+        override def getRootConverter: GroupConverter = row
+      }
+      var pages = reader.readNextRowGroup()
+      while (pages != null) {
+        val records = io.getRecordReader(pages, materializer)
+        var i = 0L
+        while (i < pages.getRowCount) { onRow(records.read()); i += 1 }
+        pages = reader.readNextRowGroup()
+      }
+    } finally reader.close()
+  }
+
+  /** Membership of (data file, position) in broadcast bitmaps — the
+    * predicate of the MoR delete filter. A deserialized copy lives in one
+    * task, so each data file's bitmaps decode (and merge into one sorted
+    * array) at most once per task, on the first row of that file the
+    * task sees; the decoded arrays go with the task. */
+  final class Membership(bitmaps: Broadcast[Bitmaps]) extends Serializable {
+    @transient private[this] var decoded: mutable.HashMap[String, Array[Long]] = _
+    @transient private[this] var lastFile: String = _
+    @transient private[this] var last: Array[Long] = _
+
+    def contains(file: String, pos: Long): Boolean = {
+      if (file == null) return false
+      if (!file.equals(lastFile)) {
+        if (decoded == null) decoded = mutable.HashMap.empty
+        last = decoded.getOrElseUpdate(file, bitmaps.value.get(file) match {
+          case None => Array.emptyLongArray
+          case Some(Array(one)) => decode(one)
+          case Some(many) =>
+            val all = many.flatMap(decode); java.util.Arrays.sort(all); all
+        })
+        lastFile = file
+      }
+      last.length > 0 && java.util.Arrays.binarySearch(last, pos) >= 0
+    }
   }
 }

