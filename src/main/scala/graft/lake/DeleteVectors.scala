@@ -138,6 +138,23 @@ object DeleteVectors {
     }.toMap
   }
 
+  /** Data files the rows of one position-delete or DV file name, read
+    * on the driver from its `file_path` column alone (no Spark job);
+    * null names nothing. */
+  def targets(conf: Configuration, deleteFile: String): Set[String] = {
+    val out = mutable.HashSet.empty[String]
+    scan(conf, deleteFile) { r => if (r.file != null) out += r.file }
+    out.toSet
+  }
+
+  /** Deleted positions a DV file records: the sum of its `cnt` column,
+    * read on the driver (one row per targeted data file). */
+  def deletedCount(conf: Configuration, dvFile: String): Long = {
+    var n = 0L
+    scan(conf, dvFile, "cnt") { r => if (r.hasPos) n += r.pos }
+    n
+  }
+
   /** One delete-file row as the scan's converter leaves it. */
   private final class DeleteRow extends GroupConverter {
     var file: String = _
@@ -147,6 +164,7 @@ object DeleteVectors {
     private val fileConv = new PrimitiveConverter {
       override def addBinary(v: Binary): Unit = file = v.toStringUsingUTF8
     }
+    // `pos` and `cnt` both land in `pos`/`hasPos`
     private val payloadConv = new PrimitiveConverter {
       override def addLong(v: Long): Unit = { pos = v; hasPos = true }
       override def addBinary(v: Binary): Unit = dv = v.getBytes
@@ -158,15 +176,15 @@ object DeleteVectors {
   }
 
   /** Calls `onRow` for each row of one delete file, reading only its
-    * `file_path` and `payload` columns. */
-  private def scan(conf: Configuration, path: String, payload: String)(
+    * `file_path` column and the optional `payload` column. */
+  private def scan(conf: Configuration, path: String, payload: String*)(
       onRow: DeleteRow => Unit): Unit = {
     val reader = StatsPruning.open(conf, java.nio.file.Paths.get(path))
     try {
       val fileSchema = reader.getFooter.getFileMetaData.getSchema
       def field(name: String) = fileSchema.getType(fileSchema.getFieldIndex(name))
       val requested = new MessageType(fileSchema.getName,
-        field("file_path"), field(payload))
+        ("file_path" +: payload).map(field): _*)
       reader.setRequestedSchema(requested)
       val io = new ColumnIOFactory().getColumnIO(requested, fileSchema)
       val row = new DeleteRow

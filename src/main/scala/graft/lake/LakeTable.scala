@@ -256,13 +256,17 @@ class LakeTable(
     * and pruning push through the union), and compaction rewrites files
     * into the current epoch, so the union collapses back to one scan
     * over time. Tables with no such history keep the exact single-scan
-    * plan they always had. */
+    * plan they always had.
+    *
+    * Scans are planned from metadata and never listed: each epoch's scan
+    * is a [[LakeFileIndex]] over the files' recorded paths and sizes, so
+    * no file count launches a listing job. */
   private def scanFiles(files: Seq[DataFileMeta], withRowIdField: Boolean): DataFrame = {
     val want =
       if (withRowIdField) schema.fields :+ StructField(RowIdCol, LongType)
       else schema.fields // parquet schema projection ignores a physical _row_id
     def scanOne(phys: Seq[StructField], fs: Seq[DataFileMeta]): DataFrame = {
-      val raw = spark.read.schema(StructType(phys)).parquet(fs.map(_.path): _*)
+      val raw = scanData(spark, StructType(phys), fs)
         .withColumn(FileCol, normPath(col("_metadata.file_path")))
         .withColumn(PosCol, col("_metadata.row_index"))
       if (phys == want.toSeq) raw
@@ -582,24 +586,18 @@ class LakeTable(
   }
 
   /** Retained files a fresh batch of delete files could hide rows in —
-    * the changelog's scan scope. Position deletes name their target
-    * paths: read from the (small) delete parquet, distinct-collected at
-    * metadata scale (bounded by file count, not deleted-row count).
+    * the changelog's scan scope. Position deletes and DVs name their
+    * target paths: the `file_path` column of the (small) delete parquet,
+    * read on the driver ([[DeleteVectors.targets]], no Spark job).
     * Equality deletes can hit any retained file with a strictly older
     * sequence number. */
   private def changelogTouchedFiles(
       retained: Seq[DataFileMeta],
       newDeletes: Seq[DeleteFileMeta]): Seq[DataFileMeta] = {
-    val pos = newDeletes.filter(_.kind == "position")
-    val dv = newDeletes.filter(_.kind == "dv")
-    val posTargets: Set[String] =
-      (if (pos.isEmpty) Set.empty[String]
-       else spark.read.schema(DeleteSchema).parquet(pos.map(_.path): _*)
-         .select("file_path").distinct().collect().map(_.getString(0)).toSet) ++
-      // DV rows name their target file directly — one metadata-scale read
-      (if (dv.isEmpty) Set.empty[String]
-       else spark.read.schema(DvSchema).parquet(dv.map(_.path): _*)
-         .select("file_path").distinct().collect().map(_.getString(0)).toSet)
+    val conf = spark.sessionState.newHadoopConf()
+    val posTargets: Set[String] = newDeletes
+      .filter(f => f.kind == "position" || f.kind == "dv")
+      .flatMap(f => DeleteVectors.targets(conf, f.path)).toSet
     val eqMaxSeq = newDeletes.filter(_.kind == "equality")
       .map(_.dataSequenceNumber).maxOption
     retained.filter(f => posTargets.contains(f.path) ||
@@ -830,12 +828,11 @@ class LakeTable(
     val dvs = fs.filter(_.kind == "dv")
     Seq(
       if (classic.isEmpty) None
-      else Some(spark.read.schema(DeleteSchema)
-        .parquet(classic.map(_.path): _*)),
+      else Some(scanDeletes(spark, DeleteSchema, classic)),
       if (dvs.isEmpty) None
       else Some {
         import spark.implicits._
-        spark.read.schema(DvSchema).parquet(dvs.map(_.path): _*)
+        scanDeletes(spark, DvSchema, dvs)
           .select(col("file_path"), col("dv")).as[(String, Array[Byte])]
           .flatMap { case (fp, bytes) =>
             DeleteVectors.decode(bytes).iterator.map(fp -> _) }
@@ -933,7 +930,7 @@ class LakeTable(
             }
             val fileSchema = StatsPruning.readFooter(hadoopConf,
               java.nio.file.Paths.get(ef.path), new StructType()).schema
-            spark.read.schema(fileSchema).parquet(ef.path).select(sel: _*)
+            scanDeletes(spark, fileSchema, Seq(ef)).select(sel: _*)
               .withColumn(DelSeqCol, lit(ef.dataSequenceNumber))
           }.reduce(_ unionByName _)
             .groupBy(cols.map(col): _*)
@@ -1021,27 +1018,23 @@ class LakeTable(
     (if (partCopies.nonEmpty) writer.partitionBy(partCopies: _*) else writer)
       .parquet(commitDir.toString)
 
-    val paths = listParquetFiles(commitDir).sorted
-    if (paths.isEmpty) return Nil
-    // one job for all per-file row counts (footer-count scan, no data read)
-    val counts = spark.read.schema(schema).parquet(paths.map(_.toString): _*)
-      .groupBy(normPath(col("_metadata.file_path")).as("fp")).count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    // empty partitions can leave zero-row part files — drop them physically
-    val (kept, empty) = paths.partition(p => counts.getOrElse(p.toString, 0L) > 0)
-    empty.foreach(Files.deleteIfExists(_))
-    // file-skipping bounds from the footers just written (driver-side,
-    // bounded by this commit's file count, no data read)
+    // row counts and file-skipping bounds from the footers just written:
+    // one driver-side open per file (bounded by this commit's file count),
+    // no Spark job and no data read
     val hadoopConf = spark.sessionState.newHadoopConf()
+    val footers = listParquetFiles(commitDir).sorted
+      .map(p => p -> StatsPruning.countAndStats(hadoopConf, p, schema))
+    // empty partitions can leave zero-row part files — drop them physically
+    val (kept, empty) = footers.partition(_._2._1 > 0)
+    empty.foreach(e => Files.deleteIfExists(e._1))
     var rowId = firstRowId
-    kept.map { p =>
-      val n = counts.getOrElse(p.toString, 0L)
+    kept.map { case (p, (n, stats)) =>
       val m = DataFileMeta(
         path = p.toString,
         partitionValues = partitionValuesFromPath(p),
         rowCount = n,
         sizeBytes = Files.size(p),
-        stats = StatsPruning.collectStats(hadoopConf, p, schema),
+        stats = stats,
         firstRowId = if (withRowIdCol) -1L else rowId,
         explicitRowIds = withRowIdCol,
         dataSequenceNumber = seq)
@@ -1065,32 +1058,43 @@ class LakeTable(
   }
 
   /** Write a position-delete file set; returns None (and leaves no orphan
-    * files) when the predicate matched nothing. One data pass: write, then
-    * a footer-only count of what was written. Routes to deletion vectors
-    * when the table asks for them ([[deleteFormat]]). */
+    * files) when the predicate matched nothing. One data pass: the write,
+    * then each file's row count from its footer on the driver. Routes to
+    * deletion vectors when the table asks for them
+    * ([[validatedDeleteFormat]]). */
   private def writeDeleteFiles(
       coords: DataFrame, seq: Long): Option[(Seq[DeleteFileMeta], Long)] = {
     if (validatedDeleteFormat == "dv") return writeDeleteVectors(coords, seq)
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    writeDeleteSet(coords.repartition(deleteFanOut, col("file_path")), "position", seq)(
+      StatsPruning.rowCount(hadoopConf, _))
+  }
+
+  /** Tasks a delete write fans out to, by hash of the target data file:
+    * all rows of one data file land in one task, the output file count is
+    * bounded by the table's file count, and no single-task coalesce(1)
+    * funnels the write (VERDICT r1 #5). */
+  private def deleteFanOut: Int = math.max(1, math.min(dataFiles.size / 8, 128))
+
+  /** Writes `rows` as one `kind` delete-file set under `deletes/`, then
+    * counts each file's deleted rows with `count` on the driver. Zero-row
+    * part files (empty shuffle partitions) are removed so the deletes dir
+    * does not accrete them; a set with no deleted row is removed whole
+    * (None). Returns the kept files' metadata and the total. */
+  private def writeDeleteSet(rows: DataFrame, kind: String, seq: Long)(
+      count: Path => Long): Option[(Seq[DeleteFileMeta], Long)] = {
     val delDir = location.resolve("deletes")
     Files.createDirectories(delDir)
-    val delPath = delDir.resolve(UUID.randomUUID().toString)
-    // Fan out by target data file — co-locates delete rows with their file
-    // (read side broadcasts per-file) and bounds output files by the table
-    // file count, with no single-task coalesce(1) funnel (VERDICT r1 #5).
-    val parts = math.max(1, math.min(dataFiles.size / 8, 128))
-    coords.repartitionByRange(parts, col("file_path"))
-      .write.parquet(delPath.toString)
-    val perFile = spark.read.schema(DeleteSchema).parquet(delPath.toString)
-      .groupBy(normPath(col("_metadata.file_path")).as("fp")).count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val total = perFile.values.sum
+    val delPath = delDir.resolve(
+      (if (kind == "dv") "dv-" else "") + UUID.randomUUID().toString)
+    rows.write.parquet(delPath.toString)
+    val counted = listParquetFiles(delPath).sorted.map(p => p -> count(p))
+    val total = counted.map(_._2).sum
     if (total == 0) { deleteRecursively(delPath); return None }
-    val metas = listParquetFiles(delPath).flatMap { p =>
-      perFile.get(p.toString).filter(_ > 0)
-        .map(n => DeleteFileMeta(p.toString, "position", n,
-          dataSequenceNumber = seq))
-    }
-    Some((metas, total))
+    val (kept, empty) = counted.partition(_._2 > 0)
+    empty.foreach(e => Files.deleteIfExists(e._1))
+    Some((kept.map { case (p, n) =>
+      DeleteFileMeta(p.toString, kind, n, dataSequenceNumber = seq) }, total))
   }
 
   /** v3 deletion vectors (M37): one bitmap row per targeted data file.
@@ -1102,17 +1106,13 @@ class LakeTable(
   private def writeDeleteVectors(
       coords: DataFrame, seq: Long): Option[(Seq[DeleteFileMeta], Long)] = {
     import spark.implicits._
-    val delDir = location.resolve("deletes")
-    Files.createDirectories(delDir)
-    val delPath = delDir.resolve(s"dv-${UUID.randomUUID()}")
     // same bounded fan-out as the classic path (not the session's full
     // shuffle-partition count — review r7); rows for one data file
     // co-locate by the hash partitioning, grouped in-memory per task
     // (memory bounded by the task's deleted positions, the same bound
     // the sort below needs anyway)
-    val parts = math.max(1, math.min(dataFiles.size / 8, 128))
-    coords.select(col("file_path"), col("pos")).as[(String, Long)]
-      .repartition(parts, col("file_path"))
+    val dvs = coords.select(col("file_path"), col("pos")).as[(String, Long)]
+      .repartition(deleteFanOut, col("file_path"))
       .mapPartitions { it =>
         val acc = scala.collection.mutable.HashMap
           .empty[String, scala.collection.mutable.ArrayBuffer[Long]]
@@ -1126,23 +1126,10 @@ class LakeTable(
         }
       }
       .toDF("file_path", "dv", "cnt")
-      .write.parquet(delPath.toString)
-    val perFile = spark.read.schema(DvSchema).parquet(delPath.toString)
-      .groupBy(normPath(col("_metadata.file_path")).as("fp"))
-      .agg(sum("cnt").as("n"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val total = perFile.values.sum
-    if (total == 0) { deleteRecursively(delPath); return None }
-    // physically drop empty part files (empty shuffle partitions) so the
-    // deletes dir doesn't accrete zero-row parquet per commit
-    val (kept, empty) = listParquetFiles(delPath)
-      .partition(p => perFile.getOrElse(p.toString, 0L) > 0)
-    empty.foreach(Files.deleteIfExists(_))
-    val metas = kept.map { p =>
-      DeleteFileMeta(p.toString, "dv", perFile(p.toString),
-        dataSequenceNumber = seq)
-    }
-    Some((metas, total))
+    // a DV file's deleted rows are the sum of its `cnt` column, read on
+    // the driver (one row per targeted data file)
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    writeDeleteSet(dvs, "dv", seq)(p => DeleteVectors.deletedCount(hadoopConf, p.toString))
   }
 
   /** Consolidate this table's live position-scoped delete files
@@ -1933,7 +1920,7 @@ class LakeTable(
     * driver-side, no Spark job. */
   private def footerRowCount(files: Seq[Path]): Long = {
     val conf = spark.sessionState.newHadoopConf()
-    files.map(StatsPruning.readFooter(conf, _, new StructType()).rowCount).sum
+    files.map(StatsPruning.rowCount(conf, _)).sum
   }
 
   /** CDC-style equality upsert (Iceberg's streaming-upsert pattern): ONE
@@ -2021,7 +2008,10 @@ class LakeTable(
     // failed guard aborts before any commit; the orphaned data files
     // are reclaimed by the age-gated orphan sweep.
     explicitKeys.filter(_ => written0.nonEmpty).foreach { ks =>
-      val uncovered = spark.read.parquet(written0.map(_.path): _*)
+      // scanned with the files' own (footer) schema, as they were written
+      val fileSchema = StatsPruning.readFooter(spark.sessionState.newHadoopConf(),
+        java.nio.file.Paths.get(written0.head.path), new StructType()).schema
+      val uncovered = scanData(spark, fileSchema, written0)
         .select(keyCols.map(col): _*)
         .except(ks.select(keyCols.map(col): _*))
         .limit(1).count()
@@ -2450,13 +2440,25 @@ object LakeTable {
     StructField("file_path", StringType), StructField("dv", BinaryType),
     StructField("cnt", LongType)))
 
+  /** Scan of lake data files, planned from their recorded paths and
+    * sizes ([[LakeFileIndex]]). */
+  private[lake] def scanData(spark: SparkSession, schema: StructType,
+      files: Seq[DataFileMeta]): DataFrame =
+    LakeFileIndex.scan(spark, schema, files.map(f => f.path -> f.sizeBytes))
+
+  /** Scan of delete files, planned from their recorded paths; delete
+    * files record no size, so each is stat'ed on the driver. */
+  private[lake] def scanDeletes(spark: SparkSession, schema: StructType,
+      files: Seq[DeleteFileMeta]): DataFrame =
+    LakeFileIndex.scan(spark, schema, files.map(_.path -> 0L))
+
   /** `_metadata.file_path` is a *percent-encoded* URI (`file:///…`;
     * space → `%20`, `%` → `%25` — Spark's SparkPath keeps the url-encoded
     * form), while metadata stores plain absolute filesystem paths from
     * `Files.walk`. Before this decoded (VERDICT r3 #1), a warehouse path
-    * containing a space or `%` made every per-file count lookup miss —
-    * `writeDataFiles` then classified fresh files as zero-row and deleted
-    * them (silent data loss). Normalized in SQL so joins on file path
+    * containing a space or `%` made every lookup of a scanned row's file
+    * in metadata miss (then: fresh files classified zero-row and deleted,
+    * silent data loss). Normalized in SQL so joins on file path
     * never need a UDF: strip the local scheme, protect literal `+`
     * (legal raw in URI paths, but form-decoding maps it to a space), then
     * percent-decode. */

@@ -66,13 +66,12 @@ object Procedures {
   private def maxAssignedRowId(t: LakeTable): Long = {
     val implicitHigh = t.meta.computedNextRowId
     val expl = t.meta.snapshots.flatMap(_.dataFiles)
-      .filter(_.explicitRowIds).map(_.path).distinct
-      .filter(p => Files.exists(Paths.get(p)))
+      .filter(_.explicitRowIds).groupBy(_.path).values.map(_.head).toSeq
+      .filter(f => Files.exists(Paths.get(f.path)))
     if (expl.isEmpty) implicitHigh
     else {
-      val mx = t.spark.read
-        .schema(StructType(Seq(StructField(RowIdCol, LongType))))
-        .parquet(expl: _*)
+      val mx = scanData(t.spark,
+        StructType(Seq(StructField(RowIdCol, LongType))), expl)
         .agg(max(col(RowIdCol))).first()
       val explicitHigh = if (mx.isNullAt(0)) 0L else mx.getLong(0) + 1
       math.max(implicitHigh, explicitHigh)
@@ -171,18 +170,14 @@ object Procedures {
     val dvFiles = t.deleteFiles.filter(_.kind == "dv")
     val eqFiles = t.deleteFiles.filter(_.kind == "equality")
 
-    // (delete file, referenced data file) pairs — metadata-scale, one
-    // footer-light job over the (small) delete files only. DV rows name
-    // their target file directly (M37), no bitmap decode needed here.
-    val refs: Seq[(String, String)] =
-      (if (posFiles.isEmpty) Nil
-       else spark.read.schema(DeleteSchema).parquet(posFiles.map(_.path): _*)
-         .select(normPath(col("_metadata.file_path")).as("src"), col("file_path").as("ref"))
-         .distinct().collect().map(r => (r.getString(0), r.getString(1))).toSeq) ++
-      (if (dvFiles.isEmpty) Nil
-       else spark.read.schema(DvSchema).parquet(dvFiles.map(_.path): _*)
-         .select(normPath(col("_metadata.file_path")).as("src"), col("file_path").as("ref"))
-         .distinct().collect().map(r => (r.getString(0), r.getString(1))).toSeq)
+    // (delete file, referenced data file) pairs — metadata-scale, read on
+    // the driver from the `file_path` column of the (small) delete files
+    // only, no Spark job. DV rows name their target file directly (M37),
+    // no bitmap decode needed here.
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val refs: Seq[(String, String)] = (posFiles ++ dvFiles).flatMap { df =>
+      DeleteVectors.targets(hadoopConf, df.path).toSeq.map(df.path -> _)
+    }
 
     // Indexed once (VERDICT r4 #4): per-file lookups below are O(1)/O(log n)
     // instead of a linear scan per data file — a 100k-file table with a

@@ -53,8 +53,22 @@ import org.apache.spark.internal.Logging
   *     payload type of the stable `QueryExecutionListener` callback
   *     (reads only its public `observedMetrics`).
   *
+  *  7. **`LakeFileIndex`** — pins `execution.datasources.{FileIndex,
+  *     HadoopFsRelation, PartitionDirectory, FileStatusWithMetadata}`:
+  *     every lake scan is a `HadoopFsRelation` over a file index built
+  *     from table metadata (recorded sizes, no listing), wrapped by the
+  *     public `SparkSession.baseRelationToDataFrame`. Breakage modes:
+  *     compile error on a signature change; a listing job or a changed
+  *     `_metadata.file_path` / `inputFiles` if the relation's contract
+  *     drifts. Canaries: LakeTableSpec's job-count tests (building a MoR
+  *     read, a MoR DELETE); the `inputFiles` pruning asserts in
+  *     LakeTableSpec, SchemaEvolutionSpec and AddFilesSpec;
+  *     TableStatsSpec's SMJ→BHJ flip (`sizeInBytes` now comes from
+  *     recorded sizes); StreamingSpec, since seam 5's
+  *     `LogicalRelation.isStreaming` flip now lands on this relation.
+  *
   * [[check]] logs one WARN when the running Spark is not the pinned
-  * minor — cheap early signal that the six canaries above deserve a
+  * minor — cheap early signal that the seven canaries above deserve a
   * look before trusting a new runtime. */
 object SparkSeams extends Logging {
   /** Spark minor these seams were written and tested against. */
@@ -69,7 +83,8 @@ object SparkSeams extends Logging {
       logWarning(
         s"graft's Spark-internal seams are pinned to Spark $PinnedMinor.x " +
           s"but this runtime is $v — run the seam canaries (TableStatsSpec, " +
-          "ExtensionsSpec, StreamingSpec, LakeTableSpec) before trusting it; " +
+          "ExtensionsSpec, StreamingSpec, LakeTableSpec, SchemaEvolutionSpec, " +
+          "AddFilesSpec) before trusting it; " +
           "see graft.lake.SparkSeams for the seam inventory")
     }
   }

@@ -73,7 +73,7 @@ object StatsPruning {
           .ParquetToSparkSchemaConverter(
             org.apache.spark.sql.internal.SQLConf.get)
           .convert(footer.getFileMetaData.getSchema),
-        footer.getBlocks.asScala.map(_.getRowCount).sum,
+        rowsOf(footer),
         statsOf(footer, tableSchema))
     } finally reader.close()
   }
@@ -81,11 +81,29 @@ object StatsPruning {
   /** Footer-only stats collection for one written file. */
   def collectStats(
       conf: Configuration, file: java.nio.file.Path,
-      schema: StructType): Map[String, ColStats] = {
+      schema: StructType): Map[String, ColStats] = countAndStats(conf, file, schema)._2
+
+  /** Row count and column bounds of one written file, from one footer
+    * open — a writer's whole per-file bookkeeping, with no Spark job. */
+  def countAndStats(
+      conf: Configuration, file: java.nio.file.Path,
+      schema: StructType): (Long, Map[String, ColStats]) = {
     val reader = open(conf, file)
-    try statsOf(reader.getFooter, schema)
+    try {
+      val footer = reader.getFooter
+      (rowsOf(footer), statsOf(footer, schema))
+    } finally reader.close()
+  }
+
+  /** Row count of one parquet file, from its footer. */
+  def rowCount(conf: Configuration, file: java.nio.file.Path): Long = {
+    val reader = open(conf, file)
+    try rowsOf(reader.getFooter)
     finally reader.close()
   }
+
+  private def rowsOf(footer: org.apache.parquet.hadoop.metadata.ParquetMetadata): Long =
+    footer.getBlocks.asScala.map(_.getRowCount).sum
 
   private def statsOf(
       footer: org.apache.parquet.hadoop.metadata.ParquetMetadata,

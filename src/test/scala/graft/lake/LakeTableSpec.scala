@@ -45,6 +45,30 @@ class LakeTableSpec extends SparkSpec {
   private def ids(t: LakeTable): Seq[Int] =
     t.read().select("id").collect().map(_.getInt(0)).sorted.toSeq
 
+  /** Rows 1..66 written as 33 data files, one past Spark's
+    * parallel-listing threshold (32 paths) for a path-list read. */
+  private def wideRows: DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(
+      (1 to 66).map(i => Row(i, Seq("a", "b", "c")(i % 3), i * 10.0)), 33), schema)
+
+  /** Spark jobs started while `body` runs, the listener bus drained
+    * before and after so no earlier job leaks in and none is missed. */
+  private def jobsDuring(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    jobs.get()
+  }
+
   test("snapshot summaries auto-stamp the Iceberg standard keys (M61): " +
     "commit observability never costs a scan") {
     val cat = freshCatalog(); cat.createNamespace("db")
@@ -150,30 +174,81 @@ class LakeTableSpec extends SparkSpec {
       .append(df(sixRows: _*))
       .addEqualityDeletes(df((2, "x", 0.0)).select("id"), Seq("id"))
       .addEqualityDeletes(df((4, "x", 0.0)).select("id"), Seq("id"))
+    // past 32 data files a path-list read would run a listing job
+    val wpos = cat.createTable("db", "jwpos", schema, props = morProps)
+      .append(wideRows).delete(col("id") === 2).delete(col("id") === 4)
+    val wdv = cat.createTable("db", "jwdv", schema,
+      props = morProps ++ Map("format-version" -> "3", "write.delete.format" -> "dv"))
+      .append(wideRows).delete(col("id") === 2).delete(col("id") === 4)
     assert(pos.deleteFiles.count(_.kind == "position") == 2)
     assert(dv.deleteFiles.count(_.kind == "dv") == 2)
     assert(eq.deleteFiles.count(_.kind == "equality") == 2)
+    assert(wpos.dataFiles.size >= 33 && wdv.dataFiles.size >= 33)
+    assert(wpos.deleteFiles.count(_.kind == "position") == 2)
+    assert(wdv.deleteFiles.count(_.kind == "dv") == 2)
     val sql = new LakeSql(cat)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    def jobsToBuild(build: => DataFrame): Int = {
-      org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
-      jobs.set(0)
-      build.queryExecution.executedPlan
-      org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
-      jobs.get()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try for (t <- Seq(pos, dv, eq)) {
+    def jobsToBuild(build: => DataFrame): Int =
+      jobsDuring(build.queryExecution.executedPlan)
+    val wide = (1 to 66).filterNot(Set(2, 4))
+    for ((t, want) <- Seq(pos -> Seq(1, 3, 5, 6), dv -> Seq(1, 3, 5, 6),
+        eq -> Seq(1, 3, 5, 6), wpos -> wide, wdv -> wide)) {
       assert(jobsToBuild(t.read()) == 0, s"${t.name}: LakeTable.read")
       assert(jobsToBuild(sql.run(s"SELECT id, amount FROM ${t.name}")) == 0,
         s"${t.name}: LakeSql SELECT")
-      assert(ids(t) == Seq(1, 3, 5, 6), t.name)
-    } finally spark.sparkContext.removeSparkListener(listener)
+      assert(ids(t) == want, t.name)
+    }
+  }
+
+  test("a MoR DELETE runs only the fan-out shuffle and the write: no " +
+    "listing, sampling or count job, position deletes and DVs") {
+    val cat = freshCatalog(); cat.createNamespace("db")
+    val pos = cat.createTable("db", "djpos", schema, props = morProps)
+      .append(wideRows)
+    val dv = cat.createTable("db", "djdv", schema,
+      props = morProps ++ Map("format-version" -> "3", "write.delete.format" -> "dv"))
+      .append(wideRows)
+    for (t0 <- Seq(pos, dv)) {
+      assert(t0.dataFiles.size >= 33, t0.name)
+      var t = t0
+      val jobs = jobsDuring { t = t0.delete(col("id") % 5 === 0) }
+      assert(jobs <= 2, s"${t0.name}: $jobs jobs")
+      assert(t.deleteFiles.nonEmpty && t.deleteFiles.map(_.rowCount).sum == 13, t0.name)
+      assert(ids(t) == (1 to 66).filterNot(_ % 5 == 0), t0.name)
+    }
+  }
+
+  test("write bookkeeping from footers: recorded row counts equal the " +
+    "files' rows, no zero-row file is kept, a zeroed size still reads") {
+    val cat = freshCatalog(); cat.createNamespace("db")
+    val v2 = cat.createTable("db", "bk2", schema, Seq("category"), morProps)
+    val v3 = cat.createTable("db", "bk3", schema, Seq("category"),
+      morProps ++ Map("format-version" -> "3", "write.delete.format" -> "dv"))
+    for (t0 <- Seq(v2, v3)) {
+      val t = t0.append(wideRows)
+        .delete(col("id") % 7 === 0)
+        .update(Map("amount" -> lit(-1.0)), col("id") % 4 === 0)
+        .delete(col("category") === "b" && col("id") > 40)
+        .consolidatePositionDeletes()._1
+      assert(t.deleteFiles.size == 1, t.name)
+      val want = (1 to 66).filterNot(i => i % 7 == 0 || (i % 3 == 1 && i > 40))
+      assert(ids(t) == want, t.name)
+      for (f <- t.meta.snapshots.flatMap(_.dataFiles).distinctBy(_.path))
+        assert(f.rowCount == spark.read.parquet(f.path).count(), f.path)
+      for (f <- t.meta.snapshots.flatMap(_.deleteFiles).distinctBy(_.path)) {
+        val rows = spark.read.parquet(f.path)
+        val n = if (f.kind == "dv") rows.agg(sum("cnt")).head().getLong(0) else rows.count()
+        assert(f.rowCount == n, f.path)
+      }
+      for (dir <- Seq("data", "deletes"); p <- LakeTable.listParquetFiles(t.location.resolve(dir)))
+        assert(spark.read.parquet(p.toString).count() > 0, s"zero-row file $p")
+      // sizes not recorded: every file is stat'ed on the driver instead
+      val zeroed = new LakeTable(spark, t.location, t.meta.copy(
+        snapshots = t.meta.snapshots.map(s =>
+          s.copy(dataFiles = s.dataFiles.map(_.copy(sizeBytes = 0L))))))
+      assert(zeroed.dataFiles.forall(_.sizeBytes == 0L))
+      assert(zeroed.read().orderBy("id").collect().toSeq ==
+        t.read().orderBy("id").collect().toSeq, t.name)
+    }
   }
 
   test("strict reader rejects v2 tables with live delete files (README.md:5-7)") {
