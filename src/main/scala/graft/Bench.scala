@@ -29,11 +29,12 @@ object Bench {
   private def materialize(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    val spark = SparkSession.builder()
+  /** The one Spark session config of the dev mains (Bench, Verify,
+    * JobProfile, PlanDump): every timed, dumped or verified plan is
+    * planned under the same settings. Each caller sets its own log
+    * level. */
+  def session(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")): SparkSession =
+    SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
@@ -50,6 +51,11 @@ object Bench {
       .config("spark.sql.extensions", "graft.lake.LakeExtensions")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
+    val spark = session()
     spark.sparkContext.setLogLevel("ERROR")
 
     // Contention sentinel (VERDICT r16 #4): a fixed single-thread spin

@@ -1,12 +1,11 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool for the optimization rounds: dump `.explain("formatted")`
   * for named registry queries into `<outDir>/<name>_<tag>.txt` so plan
   * claims in OPTIMIZATION_*.md are checkable without running Spark.
-  * Same session config as [[Bench]] (the plans must be the ones the
+  * Session from [[Bench.session]] (the plans must be the ones the
   * bench executes). Not part of the driver contract; never timed.
   *
   * Usage: runMain graft.PlanDump <sfDir> <outDir> <tag> <query>[,query...]
@@ -17,16 +16,7 @@ object PlanDump {
       "usage: PlanDump <sfDir> <outDir> <tag> <query>[,query...]")
     val Array(sfDir, outDir, tag) = args.take(3)
     val names = args.drop(3).flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4096")
-      .config("spark.sql.extensions", "graft.lake.LakeExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Bench.session()
     spark.sparkContext.setLogLevel("ERROR")
     // SPARK_GRAFT_PLANDUMP_NOCUT=1 disables the LAZY lineage cuts (the
     // [[Cut]] seam) so the dumped plan shows the full subtree above

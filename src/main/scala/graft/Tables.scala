@@ -9,9 +9,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * are pushed down by Catalyst (verified via explain in the specs).
   */
 object Tables {
-  val all: Seq[String] = Seq("region", "nation", "customer", "supplier",
-    "part", "orders", "lineitem", "events", "documents", "embeddings")
-
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") {
       // events.ts has shipped as both TIMESTAMP(NANOS) (read as LongType
@@ -31,8 +28,4 @@ object Tables {
         case _ => df
       }
     } else spark.read.parquet(s"$dir/$name.parquet")
-
-  /** Register every testdata table as a temp view (used by the SQL path). */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    all.foreach(n => apply(spark, dir, n).createOrReplaceTempView(n))
 }

@@ -49,24 +49,7 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events.ts
-      // object-state aggregates (BoundedTopK, KLL/CMS sketches, HLL,
-      // collect_list cuts) run in ObjectHashAggregate, whose default
-      // 128-distinct-keys-per-partition sort fallback pessimizes the
-      // thousands-of-groups shape this engine aggregates constantly
-      // (measured: q149 1.8 s -> 1.5 s at sf0.1); 4096 keys of KB-scale
-      // state is still MB-scale memory per partition
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4096")
-      // native CoW row-level DML REQUIRES the extensions (the ReplaceData
-      // scan is a NativeReadRule splice — q58-q60)
-      .config("spark.sql.extensions", "graft.lake.LakeExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Bench.session()
     spark.sparkContext.setLogLevel("WARN")
     // dev loop (mirrors Bench's SPARK_GRAFT_BENCH_ONLY): restrict the dump
     // to a comma-separated subset; the driver never sets this

@@ -124,9 +124,6 @@ object TextOps {
     }
   }
 
-  /** (doc_id, text) → one row per (doc_id, band, sig): k minhashes over
-    * the 3-gram shingle set, banded `bands` × `rowsPerBand`. One compiled
-    * pass per document — tokenize, shingle, and hash never re-evaluate. */
   /** Small inputs arrive as one file split; fan the CPU-bound signature
     * loop out to all cores. (At scale the source already has enough
     * splits and this is a no-op.) */
@@ -135,18 +132,10 @@ object TextOps {
     if (docs.rdd.getNumPartitions < target) docs.repartition(target) else docs
   }
 
-  def minhashBands(
-      docs: DataFrame, bands: Int = 64, rowsPerBand: Int = 2): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    parallelized(docs).as[(Long, String)].flatMap { case (id, text) =>
-      minhashRows(id, shingleSet(text), bands, rowsPerBand)
-    }.toDF("doc_id", "band", "sig")
-  }
-
-  /** [[minhashBands]] over an already-shingled (doc_id, sh) table — the
+  /** (doc_id, sh) → one row per (doc_id, band, sig): k minhashes over an
+    * already-shingled table, banded `bands` × `rowsPerBand` — the
     * one-checkpointed-shingle-pass shape (see
-    * [[simhashBandsFromShingles]]). */
+    * [[simhashBandsFromShingles]]). One compiled pass per document. */
   def minhashBandsFromShingles(
       docsSh: DataFrame, bands: Int = 64, rowsPerBand: Int = 2): DataFrame = {
     val spark = docsSh.sparkSession
@@ -186,33 +175,19 @@ object TextOps {
     }
   }
 
-  /** (doc_id, text) → one row per (doc_id, band, sig): 64-bit SimHash
+  /** (doc_id, sh) → one row per (doc_id, band, sig): 64-bit SimHash
     * over the shingle set (sign of per-bit ±1 sums of shingle hashes),
     * banded into `bands` × (64/bands)-bit values. Shingles rather than
     * raw tokens: shared-vocabulary corpora make whole-doc token sets
-    * collide across unrelated documents. */
-  def simhashBands(docs: DataFrame, bands: Int = 8): DataFrame = {
-    require(bands >= 1 && bands <= 64 && 64 % bands == 0,
-      s"bands must divide 64 (got $bands): 0 divides by zero, >64 makes " +
-        "every signature 0 (corpus-wide bucket collision), non-divisors " +
-        "silently drop the top hash bits")
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val bitsPerBand = 64 / bands
-    parallelized(docs).as[(Long, String)].flatMap { case (id, text) =>
-      val sh = shingleSet(text)
-      if (sh.isEmpty) Nil
-      else simhashRows(id, sh, bands, bitsPerBand)
-    }.toDF("doc_id", "band", "sig")
-  }
-
-  /** [[simhashBands]] over an already-shingled (doc_id, sh) table —
-    * for callers that checkpoint ONE shingle pass and feed it to
+    * collide across unrelated documents. Takes an already-shingled
+    * table so callers checkpoint ONE shingle pass and feed it to
     * banding, lossless supplements and exact verify alike (q35's r15
     * shape; re-shingling per consumer doubled its corpus passes). */
   def simhashBandsFromShingles(docsSh: DataFrame, bands: Int = 8): DataFrame = {
     require(bands >= 1 && bands <= 64 && 64 % bands == 0,
-      s"bands must divide 64 (got $bands)")
+      s"bands must divide 64 (got $bands): 0 divides by zero, >64 makes " +
+        "every signature 0 (corpus-wide bucket collision), non-divisors " +
+        "silently drop the top hash bits")
     val spark = docsSh.sparkSession
     import spark.implicits._
     val bitsPerBand = 64 / bands

@@ -9,7 +9,7 @@ import org.apache.spark.sql.{Column, Encoder, Encoders}
   * never exceeds `k` entries. */
 case class TopKBuf(k: Int, items: Array[Long])
 
-/** Bounded TOP-K-SMALLEST aggregate over a packed LONG sort key — the
+/** Bounded TOP-K-SMALLEST-DISTINCT aggregate over a packed LONG sort key — the
   * scale-correct "K best per group" device: where `collect_list` +
   * `array_sort` + `slice` buffers EVERY group member (r13 measured q149's
   * candidate cut at ~4.9 s buffering 2 000-element lists per anchor) and
@@ -22,10 +22,14 @@ case class TopKBuf(k: Int, items: Array[Long])
   * Keys pack (priority, id) into one long — e.g. q149 packs
   * `(hamming << 56) | vec_id` so ascending long order IS the
   * (hamming ASC, id ASC) candidate rule and ties are impossible (ids are
-  * unique). Allocation discipline: inserts into a full buffer shift in
-  * place; only the warmup inserts (first K) reallocate. */
-class BoundedTopK(k: Int, distinct: Boolean = false)
-    extends Aggregator[Long, TopKBuf, Seq[Long]] {
+  * unique). Repeated keys count once: q149's band join emits the same
+  * candidate pair once per colliding band, and a dup occupying two of the
+  * K slots would crowd out a real candidate — so the dedup rides the
+  * O(log K) insert probe map-side instead of an extra `.distinct()`
+  * shuffle over the (much larger) input stream. Allocation discipline:
+  * inserts into a full buffer shift in place; only the warmup inserts
+  * (first K) reallocate. */
+class BoundedTopK(k: Int) extends Aggregator[Long, TopKBuf, Seq[Long]] {
   require(k > 0, s"bounded_topk: k must be positive, got $k")
 
   override def zero: TopKBuf = TopKBuf(k, Array.emptyLongArray)
@@ -34,25 +38,18 @@ class BoundedTopK(k: Int, distinct: Boolean = false)
     val it = b.items
     val n = it.length
     if (n < b.k) {
-      var pos = java.util.Arrays.binarySearch(it, v)
-      if (pos >= 0) {
-        // `distinct` dedups MAP-SIDE in O(log K): q149's band join emits
-        // the same candidate pair once per colliding band, and a dup
-        // occupying two of the K slots would crowd out a real candidate
-        if (distinct) return b
-        pos = pos + 1 // duplicates allowed: insert after the equal run
-      } else pos = -pos - 1
+      val found = java.util.Arrays.binarySearch(it, v)
+      if (found >= 0) return b // already held: count once
+      val pos = -found - 1
       val out = new Array[Long](n + 1)
       System.arraycopy(it, 0, out, 0, pos)
       out(pos) = v
       System.arraycopy(it, pos, out, pos + 1, n - pos)
       TopKBuf(b.k, out)
     } else if (v < it(n - 1)) {
-      var pos = java.util.Arrays.binarySearch(it, v)
-      if (pos >= 0) {
-        if (distinct) return b
-        pos = pos + 1
-      } else pos = -pos - 1
+      val found = java.util.Arrays.binarySearch(it, v)
+      if (found >= 0) return b
+      val pos = -found - 1
       System.arraycopy(it, pos, it, pos + 1, n - 1 - pos)
       it(pos) = v
       b
@@ -68,7 +65,7 @@ class BoundedTopK(k: Int, distinct: Boolean = false)
     var i = 0; var j = 0; var o = 0
     while (o < out.length && (i < a.length || j < b.length)) {
       if (j >= b.length || (i < a.length && a(i) <= b(j))) {
-        if (distinct && i < a.length && j < b.length && a(i) == b(j))
+        if (i < a.length && j < b.length && a(i) == b(j))
           j += 1 // same value on both sides: emit once
         out(o) = a(i); i += 1
       } else { out(o) = b(j); j += 1 }
@@ -88,15 +85,7 @@ class BoundedTopK(k: Int, distinct: Boolean = false)
 
 object TopK {
   /** `bounded_topk(k, packedKey)` → ARRAY<BIGINT> of the K smallest
-    * packed keys, ascending. */
-  def smallestK(k: Int, packed: Column): Column =
-    udaf(new BoundedTopK(k), Encoders.scalaLong).apply(packed)
-
-  /** Like [[smallestK]] but value-DISTINCT: repeated keys count once.
-    * The dedup rides the O(log K) insert probe map-side — no extra
-    * `.distinct()` shuffle over the (much larger) input stream. q149's
-    * band join needs this: one candidate pair arrives once per
-    * colliding band. */
+    * DISTINCT packed keys, ascending. */
   def smallestKDistinct(k: Int, packed: Column): Column =
-    udaf(new BoundedTopK(k, distinct = true), Encoders.scalaLong).apply(packed)
+    udaf(new BoundedTopK(k), Encoders.scalaLong).apply(packed)
 }

@@ -24,8 +24,6 @@ object VectorOps {
   def dot(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
 
-  def l2Norm(a: Column): Column = sqrt(dot(a, a))
-
   /** Cosine similarity via the codegen'd catalyst expression. */
   def cosine(a: Column, b: Column): Column =
     ColumnBridge.column(CosineSimilarity.coerced(

@@ -306,8 +306,6 @@ private[lake] final class PartitionedRowWriters(
     o.rows += 1L
   }
 
-  def totalRows: Long = open.valuesIterator.map(_.rows).sum
-
   def commit(): Seq[DataFilePart] = open.values.toSeq.map { o =>
     o.writer.close(); DataFilePart(o.path, o.rows, o.pv)
   }

@@ -771,31 +771,15 @@ class LakeV2Table(t: LakeTable, pinnedSnapshot: Option[Long] = None)
 }
 
 /** Hive-path renderings of filter values for metadata-level partition
-  * pruning, covering BOTH value domains a constraint can arrive in:
+  * pruning. A constraint can arrive in two value domains —
   * catalyst-internal literals (NativeReadRule's splice) and v1-external
-  * source-filter values (the bridged/DML ScanBuilder). Pruning at this
-  * level is load-bearing — a file dropped here is never re-checked by
-  * the filter above the scan — so any value that is not byte-identical
-  * to `partitionValuesFromPath`'s rendering returns None and the
-  * constraint simply doesn't prune. One definition for both paths: the
-  * internal-value bug class was fixed on the splice side first and the
-  * external copy drifted (review r6), exactly what sharing prevents. */
+  * source-filter values (the bridged/DML ScanBuilder) — and both reach
+  * this one renderer through [[PartitionTransform.toInternal]]. Pruning
+  * at this level is load-bearing — a file dropped here is never
+  * re-checked by the filter above the scan — so any value that is not
+  * byte-identical to `partitionValuesFromPath`'s rendering returns None
+  * and the constraint simply doesn't prune. */
 private[lake] object PartitionFilterValues {
-
-  /** v1 source-filter (external) values: java.sql / java.time types. */
-  def external(v: Any): Option[String] = v match {
-    case null => None
-    case s: String => Some(s)
-    case s: org.apache.spark.unsafe.types.UTF8String => Some(s.toString)
-    case b: java.lang.Boolean => Some(b.toString)
-    case n: java.lang.Byte => Some(n.toString)
-    case n: java.lang.Short => Some(n.toString)
-    case n: java.lang.Integer => Some(n.toString)
-    case n: java.lang.Long => Some(n.toString)
-    case d: java.sql.Date => Some(d.toString)          // "2026-01-01"
-    case d: java.time.LocalDate => Some(d.toString)
-    case _ => None // timestamps/floats/decimals: conservative, no prune
-  }
 
   /** Catalyst-internal literal values (dates are epoch-day Ints). */
   def internal(v: Any, dt: org.apache.spark.sql.types.DataType): Option[String] = {

@@ -37,8 +37,9 @@ class LakeSql(val catalog: LakeCatalog) {
 
   private def spark = catalog.spark
 
-  // let the LakeExtensions resolution rule (if installed) resolve
-  // lake.db.t / glue_catalog.db.t references in SELECTs natively
+  // point the DSv2 catalog (LakeSparkCatalog, when the session registers
+  // it as `lake` / `glue_catalog`) at this warehouse, so lake.db.t /
+  // glue_catalog.db.t references in SELECTs resolve to the same tables
   spark.conf.set(LakeExtensions.WarehouseConf, catalog.warehouse.toString)
   V1StatsRule.install(spark) // bridged-scan stats for the planner (M50)
 

@@ -2294,7 +2294,8 @@ class LakeTable(
   }
 
   /** Tag a retained snapshot with a stable name (Iceberg tag): readable
-    * via [[readTag]] and protected from expire_snapshots until dropped. */
+    * as `VERSION AS OF '<tag>'` and protected from expire_snapshots until
+    * dropped. */
   def tagSnapshot(name: String, snapshotId: Long): LakeTable = {
     if (!meta.snapshots.exists(_.id == snapshotId))
       throw new IllegalArgumentException(
@@ -2309,11 +2310,6 @@ class LakeTable(
       throw new IllegalArgumentException(s"no tag $name on ${meta.name}")
     withMeta(meta.copy(tags = meta.tags - name))
   }
-
-  /** Time travel by tag name. */
-  def readTag(name: String): DataFrame =
-    readSnapshot(meta.tags.getOrElse(name,
-      throw new IllegalArgumentException(s"no tag $name on ${meta.name}")))
 
   // -------------------------------------------------------------- branches
 
@@ -2362,9 +2358,6 @@ class LakeTable(
     val head = branchHead(name)
     withMeta(meta.copy(currentSnapshotId = head))
   }
-
-  /** Scan a branch's head state (same MoR semantics as any scan). */
-  def readBranch(name: String): DataFrame = readSnapshot(branchHead(name))
 
   /** Roll the table back to a retained snapshot: a NEW commit whose
     * content is the old snapshot's file lists — history is preserved

@@ -240,7 +240,7 @@ object Meta {
     val m = mapper.readValue(s, classOf[TableMetadata])
     // Jackson + erased Map[String, Long] yields boxed Integers for small
     // ids at runtime — normalize here, or every tag/branch consumer on a
-    // RELOADED handle (readTag, onBranch, VERSION AS OF, expiry
+    // RELOADED handle (onBranch, VERSION AS OF, expiry
     // protection) hits ClassCastException the moment an id fits in 32 bits
     def longs(xs: Map[String, Long]): Map[String, Long] =
       xs.asInstanceOf[Map[String, Any]].map { case (k, v) =>

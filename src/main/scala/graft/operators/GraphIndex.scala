@@ -394,67 +394,4 @@ object GraphIndex {
         .select(col("vec_id").as("qid"), col("v").as("qv")),
       ef, hops)
   }
-
-  /** The PRODUCTION search shape (VERDICT r18 stretch #6): multi-seed
-    * entry + a data-dependent convergence loop instead of the fixed
-    * hop budget — HNSW's actual layer-0 search. Each query enters at
-    * the `seeds` lowest corpus ids (its own excluded) and hops until
-    * its top-`ef` beam is UNCHANGED between rounds (or `maxHops`, the
-    * runaway bound). Deterministic given the graph — but the hop count
-    * is data-dependent, so this is the spec-gated variant
-    * (GraphIndexSpec measures the recall lift over [[beamSearch]]'s
-    * fixed-hop form at both SFs); the fixed-hop walk stays the
-    * oracle-replayable subset. Convergence check: one ≤ ef·|queries|
-    * driver pull per hop — bounded by the caller's query batch. */
-  def beamSearchConverge(emb: DataFrame, kept: DataFrame,
-      queries: DataFrame, ef: Int, seeds: Int,
-      maxHops: Int = 32): DataFrame = {
-    val q = broadcast(queries)
-    // seeds+1 lowest corpus ids (one spare in case a query IS a seed):
-    // a bounded broadcast frame, so the query×seed expansion is the
-    // family's accepted one-sided-tiny crossJoin shape
-    val entry = emb.select(col("vec_id")).orderBy("vec_id")
-      .limit(seeds + 1).localCheckpoint(true)
-    var beam = q.select(col("qid")).crossJoin(broadcast(entry))
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"),
-        struct(col("vec_id").as("ns"), col("vec_id")).as("p"))
-      .groupBy("qid")
-      .agg(slice(sort_array(collect_list(col("p"))), 1, seeds).as("top"))
-      .select(col("qid"), explode(col("top.vec_id")).as("vec_id"))
-    var scored: DataFrame = null
-    var last: Set[(Long, Long)] = null
-    var hop = 0
-    var converged = false
-    while (hop < maxHops && !converged) {
-      hop += 1
-      val x = beam.unionByName(
-          beam.join(kept, beam("vec_id") === kept("src"))
-            .select(beam("qid"), kept("dst").as("vec_id")))
-        .distinct()
-      scored = x.join(emb, "vec_id").join(q, "qid")
-        .filter(col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("vec_id"),
-          VectorOps.cosine(col("v"), col("qv")).as("sim"))
-        .localCheckpoint(true)
-      beam = scored
-        .select(col("qid"), struct((-col("sim")).as("ns"),
-          col("vec_id")).as("p"))
-        .groupBy("qid")
-        .agg(slice(sort_array(collect_list(col("p"))), 1, ef).as("top"))
-        .select(col("qid"), explode(col("top.vec_id")).as("vec_id"))
-        .localCheckpoint(true) // compared across hops + next expansion
-      val cur = beam.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      converged = last != null && cur == last
-      last = cur
-    }
-    scored
-      .select(col("qid"), struct((-col("sim")).as("ns"),
-        col("vec_id")).as("p"))
-      .groupBy("qid")
-      .agg(slice(sort_array(collect_list(col("p"))), 1, 5).as("top"))
-      .select(col("qid"), posexplode(col("top")))
-      .select(col("qid"), (col("pos") + 1).cast("int").as("rank"),
-        col("col.vec_id").as("vec_id"), (-col("col.ns")).as("sim"))
-  }
 }

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.Cms
@@ -61,9 +60,9 @@ object SketchHeavyHitters {
   }
 
   /** Every window candidate's CMS estimate per trailing `window`-day
-    * anchor — (day, k, est_cnt), the shared core of [[rollingTopK]] and
-    * q159's bound gate. O(days·window) merges, O(days·window·s)
-    * estimates — from STORED state only. */
+    * anchor — (day, k, est_cnt), the core of q159's bound gate; a
+    * window's top-k is its k largest `est_cnt` rows. O(days·window)
+    * merges, O(days·window·s) estimates — from STORED state only. */
   def rollingCandidateEstimates(daily: DataFrame, window: Int = 7,
       depth: Int = graft.functions.CmsState.DefaultDepth,
       width: Int = graft.functions.CmsState.DefaultWidth): DataFrame = {
@@ -82,21 +81,5 @@ object SketchHeavyHitters {
       .select(col("day"), col("sk"), explode(col("cand")).as("k"))
       .select(col("day"), col("k"),
         Cms.estimate(col("sk"), col("k")).as("est_cnt"))
-  }
-
-  /** Top-k keys per trailing `window`-day anchor, recounted against the
-    * merged window sketch; ties break on key. */
-  def rollingTopK(daily: DataFrame, window: Int = 7, k: Int = 5,
-                  depth: Int = graft.functions.CmsState.DefaultDepth,
-                  width: Int = graft.functions.CmsState.DefaultWidth)
-      : DataFrame = {
-    val est = rollingCandidateEstimates(daily, window, depth, width)
-    // the window is |days|-scale rows × <s·window candidates — a
-    // dimension-scale rank, not a fact-scale one (GlobalRank territory)
-    val w = Window.partitionBy("day")
-      .orderBy(col("est_cnt").desc, col("k"))
-    est.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .orderBy("day", "rk")
   }
 }

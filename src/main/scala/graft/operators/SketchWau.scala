@@ -54,15 +54,4 @@ object SketchWau {
         .as("wau_approx"))
       .orderBy("day")
   }
-
-  /** Incremental refresh: fold freshly-arrived events into the stored
-    * daily table — new days appear, late events merge INTO their day's
-    * existing sketch (sketch-union, never a rebuild). The M54
-    * incremental-MV step for a COUNT DISTINCT measure. */
-  def mergeNewEvents(daily: DataFrame, newEvents: DataFrame,
-                     lgConfigK: Int = 12): DataFrame =
-    daily
-      .unionByName(dailySketches(newEvents, lgConfigK))
-      .groupBy("d")
-      .agg(hll_union_agg(col("sketch")).as("sketch"))
 }

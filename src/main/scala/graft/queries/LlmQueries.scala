@@ -3720,47 +3720,6 @@ object LlmQueries {
         .select(col("vec_id"), round(col("dist"), 4).as("adc"))
     })
 
-  /** The production IVFPQ pipeline with EXACT REFINE (the FAISS
-    * `IndexRefineFlat` wrapper): route (q153's IVF tier) → ADC-score the
-    * candidates (PQ tier) → keep the `shortlist` best by ADC → ONE
-    * candidate-bounded exact-cosine pass re-ranks the shortlist
-    * ([[exactRerank]]). The shortlist knob buys back what stacked
-    * compression loses: MEASURED on this corpus, ADC-only top-5 recall
-    * is 0.2–0.4 (IVF's 0.8 and PQ's 0.4 floors compound on near-random
-    * vectors) while shortlist-50 refine reaches 1.0 at both test SFs
-    * (LlmOpsSpec gate). Cost model at 100 TB: the exact pass touches
-    * `shortlist` raw vectors per query — the raw-vector store is read
-    * at O(queries·shortlist), never scanned. */
-  def ivfPqRefineTopK(s: SparkSession, dir: String, queryId: Long,
-      k: Int, shortlist: Int = 50): DataFrame = {
-    val e = t(s, dir, "embeddings")
-      .withColumn("v", VectorOps.toDoubleVec(col("embedding")))
-      .select(col("vec_id"), col("v"))
-    val cents = e.filter(col("vec_id") < IvfK).orderBy("vec_id")
-      .collect().map(_.getSeq[Double](1).toArray)
-    val queries = e.filter(col("vec_id") === queryId)
-      .select(col("vec_id").as("qid"), col("v").as("qv"))
-      .localCheckpoint(true)
-    val cand = ivfAssignCompiled(s, e, "vec_id", "v", cents, 1)
-      .join(broadcast(
-        ivfAssignCompiled(s, queries, "qid", "qv", cents, IvfProbes)),
-        "bucket")
-      .filter(col("vec_id") =!= col("qid"))
-      .select("vec_id").distinct()
-    val cb = e.filter(col("vec_id") < PqCodes).orderBy("vec_id")
-      .collect().map(_.getSeq[Double](1).toArray)
-    val qv = e.filter(col("vec_id") === queryId).head()
-      .getSeq[Double](1).toArray
-    val dtab = pqQueryDistTable(qv, cb)
-    val short = t(s, dir, "embeddings")
-      .join(cand, Seq("vec_id"), "left_semi")
-      .select(col("vec_id"), graft.functions.PqAdcScore
-        .score(col("embedding"), cb, dtab, PqM, PqSub, PqCodes).as("dist"))
-      .orderBy(col("dist"), col("vec_id")).limit(shortlist)
-      .select(col("vec_id"), lit(queryId).as("qid"))
-    exactRerank(e, queries, short, k)
-  }
-
   /** BPE tokenizer APPLICATION (r13) — q79's counting kernel is the
     * TRAINING side of byte-pair encoding; this is the inference side
     * every pipeline actually runs per document: encode words under a

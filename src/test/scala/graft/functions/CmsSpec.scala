@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{SparkSpec, Tables}
@@ -12,6 +13,16 @@ import graft.operators.SketchHeavyHitters
   * adversarial split, and the end-to-end rolling top-k vs exact window
   * counts on real events. */
 class CmsSpec extends SparkSpec {
+
+  /** Top-`k` (key, estimate) per anchor day from the stored-state
+    * candidate estimates, count descending with ties on key. */
+  private def rollingTopK(est: DataFrame, k: Int): Map[String, Seq[(Long, Long)]] =
+    est.collect()
+      .map(r => (r.getDate(0).toString, r.getLong(1), r.getLong(2)))
+      .groupBy(_._1).map { case (day, rows) =>
+        day -> rows.map(r => (r._2, r._3)).toSeq
+          .sortBy { case (key, c) => (-c, key) }.take(k)
+      }
 
   test("point estimates never undercount and respect the additive bound; " +
     "merge of part-sketches equals the one-stream sketch byte-for-byte") {
@@ -57,9 +68,9 @@ class CmsSpec extends SparkSpec {
     val daily = SketchHeavyHitters.dailyState(events, s = s)
     val cands = daily.select(explode(col("cands"))).as[Long].collect().toSet
     assert(cands.contains(42L), s"steady heavy hitter missing: $cands")
-    val top = SketchHeavyHitters.rollingTopK(daily, window = 5, k = 2)
-      .filter(col("day") === lit("2024-01-05").cast("date"))
-      .collect().map(r => r.getLong(1))
+    val top = rollingTopK(
+        SketchHeavyHitters.rollingCandidateEstimates(daily, window = 5), k = 2)
+      .getOrElse("2024-01-05", Nil).map(_._1)
     assert(top.contains(42L), s"rolling top-2 on the full window: ${top.toSeq}")
   }
 
@@ -70,10 +81,8 @@ class CmsSpec extends SparkSpec {
     // mass is deterministically zero on this data, so the comparison
     // below can demand exact counts (hashes are fixed — no flake)
     val daily = SketchHeavyHitters.dailyState(events, s = 100, width = 8192)
-    val got = SketchHeavyHitters
-      .rollingTopK(daily, window = 7, k = 3, width = 8192)
-      .collect()
-      .map(r => (r.getDate(0).toString, r.getLong(1), r.getLong(2), r.getInt(3)))
+    val got = rollingTopK(SketchHeavyHitters
+      .rollingCandidateEstimates(daily, window = 7, width = 8192), k = 3)
     assert(got.nonEmpty)
     // exact: same fan-out, real counts, same (cnt desc, key) tiebreak
     val exact = events
@@ -83,11 +92,10 @@ class CmsSpec extends SparkSpec {
       .groupBy("day", "k").agg(count(lit(1)).as("cnt"))
       .collect().map(r => (r.getDate(0).toString, r.getLong(1), r.getLong(2)))
       .groupBy(_._1)
-    val anchors = got.map(_._1).toSet
-    got.groupBy(_._1).foreach { case (day, rows) =>
+    val anchors = got.keySet
+    got.foreach { case (day, gotDay) =>
       val truth = exact(day).map(t => (t._2, t._3)).toSeq
         .sortBy { case (k, c) => (-c, k) }.take(3)
-      val gotDay = rows.sortBy(_._4).map(r => (r._2, r._3)).toSeq
       assert(gotDay == truth, s"$day: got=$gotDay exact=$truth")
     }
     // anchors cover the sketch table's day range (window fan-out)

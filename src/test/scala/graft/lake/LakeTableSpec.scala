@@ -864,17 +864,19 @@ class LakeTableSpec extends SparkSpec {
     assertThrows[IllegalArgumentException](t.tagSnapshot("x", 99))
     t = t.delete(col("id") <= 3)        // snapshot 2
     t = t.append(df((7, "d", 70.0)))    // snapshot 3
-    assert(t.readTag("baseline").count() == 6)
+    val sql = new LakeSql(cat)
+    def readTag(): DataFrame = sql.run("SELECT * FROM db.tag VERSION AS OF 'baseline'")
+    assert(readTag().count() == 6)
     // expiry must retain the tagged snapshot (and its files) even though
     // it is old enough to expire
     val r = Procedures.expireSnapshots(t, olderThanMs = Long.MaxValue, retainLast = 1)
     assert(r.table.meta.snapshots.map(_.id).sorted == Seq(1L, 3L)) // 2 expired
-    assert(r.table.readTag("baseline").count() == 6)
+    assert(readTag().count() == 6)
     // dropping the tag releases it for future expiry
     val t2 = r.table.dropTag("baseline")
     val r2 = Procedures.expireSnapshots(t2, Long.MaxValue, retainLast = 1)
     assert(r2.table.meta.snapshots.map(_.id) == Seq(3L))
-    assertThrows[IllegalArgumentException](r2.table.readTag("baseline"))
+    assertThrows[SqlParseException](readTag())
   }
 
   test("rollback restores a previous snapshot's content as a new commit") {
@@ -928,8 +930,8 @@ class LakeTableSpec extends SparkSpec {
     val mainView = cat.loadTable("db", "wap").get
     assert(ids(mainView) == Seq(1, 2, 3, 4, 5, 6),
       "main must not see unpublished branch commits")
-    assert(mainView.readBranch("audit").select("id").collect()
-      .map(_.getInt(0)).sorted.toSeq == Seq(2, 3, 4, 5, 6, 7))
+    assert(new LakeSql(cat).run("SELECT id FROM db.wap VERSION AS OF 'audit'")
+      .collect().map(_.getInt(0)).sorted.toSeq == Seq(2, 3, 4, 5, 6, 7))
     // branches round-trip the metadata JSON (boxed-Integer normalization)
     assert(mainView.meta.branches == Map("audit" -> 3L))
     // publish: main pointer moves to the branch head, history retained

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 
 import graft.{SparkSpec, Tables}
+import graft.lake.{LakeCatalog, LakeSql}
 import graft.queries.Registry
 
 /** Gates for the mergeable-HLL stored-aggregate device (G6 posture: the
@@ -10,7 +11,8 @@ import graft.queries.Registry
   * ships a different sketch — so the gates are (1) the HLL error
   * contract vs the EXACT q128, (2) parquet round-trip of the sketch
   * column with the refresh reading O(days) rows and never the events
-  * table, (3) late-event merge ≡ full rebuild. */
+  * table, (3) late events folded in by an incremental materialized-view
+  * refresh ≡ full rebuild. */
 class SketchWauSpec extends SparkSpec {
 
   private val sf01 = "/root/testdata/sf0.01"
@@ -65,14 +67,32 @@ class SketchWauSpec extends SparkSpec {
     "MV refresh for COUNT DISTINCT)") {
     val events = Tables(spark, sf01, "events")
     val lastDay = events.select(max(col("ts").cast("date"))).head().getDate(0)
-    val early = events.filter(col("ts").cast("date") < lit(lastDay))
-    val late = events.filter(col("ts").cast("date") >= lit(lastDay))
+    // late = the last day's even event ids: its odd ones are already
+    // sketched, so the late rows must union INTO a stored day
+    val isLate = col("ts").cast("date") >= lit(lastDay) && col("event_id") % 2 === 0
+    val early = events.filter(!isLate)
+    val late = events.filter(isLate)
     assert(late.limit(1).count() == 1, "fixture needs a non-empty last day")
-    // split-brain refresh: sketch the early days, then merge ONLY the
-    // late slice — late rows for already-sketched days must union in
-    val refreshed = SketchWau.mergeNewEvents(
-      SketchWau.dailySketches(early), late)
+    assert(early.filter(col("ts").cast("date") >= lit(lastDay)).limit(1).count() == 1,
+      "fixture needs an already-sketched last day")
+    // split-brain refresh: the stored daily table is a materialized view
+    // over the early events; appending ONLY the late slice and refreshing
+    // must union the new sketches in (hll_union_agg), not recompute
+    val cat = new LakeCatalog(spark,
+      java.nio.file.Files.createTempDirectory("graft-sketch-refresh"))
+    cat.createNamespace("db")
+    val cols = Seq(col("ts"), col("user_id"))
+    val ev = early.select(cols: _*)
+    cat.createTable("db", "ev", ev.schema).append(ev)
+    val sql = new LakeSql(cat)
+    sql.run("CREATE MATERIALIZED VIEW db.daily AS SELECT CAST(ts AS DATE) AS d, " +
+      "hll_sketch_agg(user_id) AS sketch FROM db.ev GROUP BY CAST(ts AS DATE)")
+    cat.loadTable("db", "ev").get.append(late.select(cols: _*))
+    val msg = sql.run("REFRESH MATERIALIZED VIEW db.daily").head().getString(0)
+    assert(msg.contains("incrementally"), msg)
+    val refreshed = sql.run("SELECT d, sketch FROM db.daily")
     val rebuilt = SketchWau.dailySketches(events)
+    assert(refreshed.count() == rebuilt.count(), "one stored row per day")
     val a = SketchWau.rollingWau(refreshed)
       .collect().map(r => r.getDate(0).toString -> r.getLong(1)).toMap
     val b = SketchWau.rollingWau(rebuilt)

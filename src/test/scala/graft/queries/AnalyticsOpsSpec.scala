@@ -417,10 +417,10 @@ class AnalyticsOpsSpec extends SparkSpec {
     val rows = (1 to 4000).map(_ => (rnd.nextInt(5), rnd.nextLong() & 0x00ffffffffffffffL))
     for (parts <- Seq(1, 7); k <- Seq(3, 64, 5000)) {
       val got = rows.toDF("g", "v").repartition(parts)
-        .groupBy("g").agg(TopK.smallestK(k, col("v")).as("top"))
+        .groupBy("g").agg(TopK.smallestKDistinct(k, col("v")).as("top"))
         .collect().map(r => r.getInt(0) -> r.getSeq[Long](1)).toMap
       val want = rows.groupBy(_._1).map { case (g, vs) =>
-        g -> vs.map(_._2).sorted.take(k).toSeq
+        g -> vs.map(_._2).distinct.sorted.take(k).toSeq
       }
       assert(got == want, s"parts=$parts k=$k")
     }

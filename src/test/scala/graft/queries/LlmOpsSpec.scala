@@ -5,12 +5,11 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.SparkSpec
-import graft.functions.{Multimodal, TextOps, VectorOps}
+import graft.functions.{TextOps, VectorOps}
 
 /** Recall/robustness checks for the hash-seeded LLM operators that the
   * DuckDB oracle can't replay (ANN), planted-duplicate validation of the
-  * LSH paths, the G6 approx-distinct error bound, and the multimodal
-  * plumbing. */
+  * LSH paths, and the G6 approx-distinct error bound. */
 class LlmOpsSpec extends SparkSpec {
 
   private def docsDf(rows: Seq[(Long, String)]): DataFrame =
@@ -39,8 +38,15 @@ class LlmOpsSpec extends SparkSpec {
       .select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(truth.size == 5, s"expected 5 planted pairs, got ${truth.size}")
 
+    // the compiled shingle pass the production banding consumes
+    import spark.implicits._
+    val docsSh = (base ++ dups).toDF("doc_id", "text")
+      .as[(Long, String)]
+      .map { case (id, txt) => (id, TextOps.shingleSet(txt)) }
+      .toDF("doc_id", "sh")
+
     // MinHash banding candidates
-    val mhBands = TextOps.minhashBands(docsDf(base ++ dups), 32, 4)
+    val mhBands = TextOps.minhashBandsFromShingles(docsSh, 32, 4)
     val mhCand = mhBands.as("x").join(mhBands.as("y"), Seq("band", "sig"))
       .filter(col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b")).distinct()
@@ -50,7 +56,7 @@ class LlmOpsSpec extends SparkSpec {
     assert(mhPairs.size < 200, s"candidate explosion: ${mhPairs.size}")
 
     // SimHash banding candidates
-    val shBands = TextOps.simhashBands(docsDf(base ++ dups), 4)
+    val shBands = TextOps.simhashBandsFromShingles(docsSh, 4)
     val shProbes = shBands.select(col("doc_id"), col("band"),
       explode(array(col("sig") +:
         (0 until 16).map(j => col("sig").bitwiseXOR(lit(1L << j))): _*)).as("sig"))
@@ -63,11 +69,6 @@ class LlmOpsSpec extends SparkSpec {
     // n-gram Jaccard prefix filtering (q56): lossless by construction —
     // candidates MUST cover truth (not just w.h.p. like the LSH paths)
     // while staying far below the 990-pair cross product
-    import spark.implicits._
-    val docsSh = (base ++ dups).toDF("doc_id", "text")
-      .as[(Long, String)]
-      .map { case (id, txt) => (id, TextOps.shingleSet(txt)) }
-      .toDF("doc_id", "sh")
     val pfCand = LlmQueries.prefixCandidates(docsSh)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(truth.subsetOf(pfCand), s"prefix filter missed ${truth -- pfCand}")
@@ -228,7 +229,7 @@ class LlmOpsSpec extends SparkSpec {
   }
 
   test("q153 IVFPQ: candidates pruned, ADC-only recall is the measured " +
-    "compression floor, and shortlist-50 exact refine restores top-5") {
+    "compression floor") {
     val res = LlmQueries.q153.run(spark, sf)
     val got = res.collect()
     assert(got.length == 5)
@@ -247,15 +248,6 @@ class LlmOpsSpec extends SparkSpec {
     // corpus (measured; the hash gate proves the ranking, not recall)
     val adcRecall = (exactTop & got.map(_.getLong(0)).toSet).size / 5.0
     info(f"IVFPQ ADC-only recall: $adcRecall%.1f")
-    // ...which is why production IVFPQ refines: ADC shortlist-50 →
-    // one exact candidate-bounded re-rank → full recall (deterministic
-    // on the fixed corpus: pinned codebooks, fixed tie-breaks)
-    val refined = LlmQueries.ivfPqRefineTopK(spark, sf, 0L, 5)
-      .collect().map(_.getLong(1)).toSet
-    val refineRecall = (exactTop & refined).size / 5.0
-    info(f"IVFPQ shortlist-50 refined recall: $refineRecall%.1f")
-    assert(refineRecall >= 0.8,
-      s"refine recall $refineRecall (exact=$exactTop refined=$refined)")
   }
 
   test("q155 BPE: rank-order replace-chain encoding equals an " +
@@ -587,7 +579,12 @@ class LlmOpsSpec extends SparkSpec {
       102L -> ("önce İSTANBUL Straße СТРАНИЦА çok GÜZEL veri seti " +
         "büyük ölçek temiz filtre kalite"),
       103L -> ("sonra İSTANBUL Straße СТРАНИЦА çok GÜZEL veri seti " +
-        "büyük ölçek temiz filtre derlem"))
+        "büyük ölçek temiz filtre derlem"),
+      // accented Latin capitals: the run below lowers to 102/103's
+      // "çok güzel veri seti büyük ölçek temiz filtre" only if both
+      // paths fold É/Ü/Ç/Ö alike
+      104L -> ("ÉCOLE Über ÇOK GÜZEL VERI SETI BÜYÜK ÖLÇEK TEMIZ FILTRE " +
+        "Ärger Ñandú"))
     val docs = docsDf(rows)
     val got = LlmQueries.winnowPairs(docs).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
@@ -724,237 +721,6 @@ class LlmOpsSpec extends SparkSpec {
     assert(relErr <= 3 * rsd, s"approx=$approx exact=$exact relErr=$relErr")
   }
 
-  test("multimodal decode parses real BMP and WAV headers (pure JVM)") {
-    import java.nio.{ByteBuffer, ByteOrder}
-    // 54-byte BMP header: 'BM', width=640 @18, height=-480 @22 (top-down)
-    val bmp = ByteBuffer.allocate(54).order(ByteOrder.LITTLE_ENDIAN)
-    bmp.put('B'.toByte).put('M'.toByte)
-    bmp.putInt(2, 54); bmp.putInt(10, 54); bmp.putInt(14, 40)
-    bmp.putInt(18, 640); bmp.putInt(22, -480); bmp.putShort(26, 1)
-    bmp.putShort(28, 24)
-    // canonical 44-byte WAV header + 8 bytes of PCM data:
-    // stereo 16-bit 44100 Hz → blockAlign 4, data 8 bytes = 2 frames
-    val wav = ByteBuffer.allocate(52).order(ByteOrder.LITTLE_ENDIAN)
-    wav.put("RIFF".getBytes); wav.putInt(4, 44); wav.position(8)
-    wav.put("WAVEfmt ".getBytes); wav.putInt(16, 16)
-    wav.putShort(20, 1); wav.putShort(22, 2); wav.putInt(24, 44100)
-    wav.putInt(28, 44100 * 4); wav.putShort(32, 4); wav.putShort(34, 16)
-    wav.position(36); wav.put("data".getBytes); wav.putInt(40, 8)
-
-    // real compressed images round-tripped through the JDK encoder —
-    // the decode side is the exact production path for JPEG/PNG bytes
-    def encoded(fmt: String, w: Int, h: Int): Array[Byte] = {
-      val img = new java.awt.image.BufferedImage(
-        w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-      img.setRGB(0, 0, 0x336699)
-      val bos = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(img, fmt, bos)
-      bos.toByteArray
-    }
-
-    val media = spark.createDataFrame(
-      spark.sparkContext.parallelize(Seq(
-        Row(1L, "image", bmp.array()),
-        Row(2L, "audio", wav.array()),
-        Row(3L, "image", "not a known container".getBytes),
-        Row(4L, "image", encoded("png", 320, 200)),
-        Row(5L, "image", encoded("jpg", 123, 45))), 1),
-      StructType(Seq(
-        StructField("media_id", LongType), StructField("kind", StringType),
-        StructField("payload", BinaryType))))
-    val feats = Multimodal.extractFeatures(spark, media)
-      .collect().map(f => f.media_id -> f).toMap
-    assert(feats(1L).width == 640 && feats(1L).height == 480)
-    assert(feats(1L).frames == 1)
-    assert(feats(2L).width == 44100, "WAV sample rate")
-    assert(feats(2L).height == 2, "WAV channels")
-    assert(feats(2L).frames == 2, "WAV PCM frame count")
-    // unknown containers still flow through the deterministic fallback
-    assert(feats(3L).width >= 64 && feats(3L).height >= 64)
-    // compressed formats decode for real through JDK ImageIO on executors
-    assert(feats(4L).width == 320 && feats(4L).height == 200, "PNG dims")
-    assert(feats(5L).width == 123 && feats(5L).height == 45, "JPEG dims")
-  }
-
-  test("audio features: real PCM16 / G.711 μ-law / A-law sample decode") {
-    import java.nio.{ByteBuffer, ByteOrder}
-    def wavBytes(fmtTag: Int, channels: Int, rate: Int, bits: Int,
-        data: Array[Byte]): Array[Byte] = {
-      val bb = ByteBuffer.allocate(44 + data.length).order(ByteOrder.LITTLE_ENDIAN)
-      bb.put("RIFF".getBytes); bb.putInt(36 + data.length); bb.put("WAVE".getBytes)
-      bb.put("fmt ".getBytes); bb.putInt(16)
-      bb.putShort(fmtTag.toShort); bb.putShort(channels.toShort); bb.putInt(rate)
-      val blockAlign = math.max(1, channels * (bits / 8))
-      bb.putInt(rate * blockAlign); bb.putShort(blockAlign.toShort)
-      bb.putShort(bits.toShort)
-      bb.put("data".getBytes); bb.putInt(data.length); bb.put(data)
-      bb.array()
-    }
-    // reference G.711 encoders (public spec) — round-trip partners for
-    // the production decoders
-    def linear2ulaw(pcm: Int): Byte = {
-      var s = pcm; val sign = if (s < 0) { s = -s; 0x80 } else 0
-      if (s > 32635) s = 32635
-      s += 0x84
-      var exp = 7; var mask = 0x4000
-      while (exp > 0 && (s & mask) == 0) { exp -= 1; mask >>= 1 }
-      (~(sign | (exp << 4) | ((s >> (exp + 3)) & 0x0f))).toByte
-    }
-    def linear2alaw(pcm: Int): Byte = {
-      var s = pcm; val sign = if (s >= 0) 0x80 else { s = -s; 0 }
-      if (s > 32767) s = 32767
-      var exp = 7; var mask = 0x4000
-      while (exp > 0 && (s & mask) == 0) { exp -= 1; mask >>= 1 }
-      val mant = if (exp == 0) (s >> 4) & 0x0f else (s >> (exp + 3)) & 0x0f
-      ((sign | (exp << 4) | mant) ^ 0x55).toByte
-    }
-
-    val n = 1000
-    val sine = Array.tabulate(n)(i =>
-      (16384 * math.sin(2 * math.Pi * i * 10 / n)).toInt)
-    val pcm16 = new Array[Byte](2 * n)
-    sine.indices.foreach { i =>
-      pcm16(2 * i) = (sine(i) & 0xff).toByte
-      pcm16(2 * i + 1) = ((sine(i) >> 8) & 0xff).toByte
-    }
-    val media = spark.createDataFrame(
-      spark.sparkContext.parallelize(Seq(
-        Row(1L, "audio", wavBytes(1, 1, 8000, 16, pcm16)),
-        Row(2L, "audio", wavBytes(7, 1, 8000, 8, sine.map(linear2ulaw))),
-        Row(3L, "audio", wavBytes(6, 1, 8000, 8, sine.map(linear2alaw))),
-        Row(4L, "audio", "not audio at all".getBytes)), 1),
-      StructType(Seq(
-        StructField("media_id", LongType), StructField("kind", StringType),
-        StructField("payload", BinaryType))))
-    val f = Multimodal.extractAudioFeatures(spark, media)
-      .collect().map(a => a.media_id -> a).toMap
-
-    // PCM16 ground truth: sine RMS = A/√2, peak = A (normalized /32768)
-    val want = 16384.0 / 32768
-    assert(f(1L).decoded && f(1L).sample_rate == 8000 && f(1L).n_samples == n)
-    assert(math.abs(f(1L).rms - want / math.sqrt(2)) < 0.005, s"pcm rms ${f(1L).rms}")
-    assert(math.abs(f(1L).peak - want) < 0.01, s"pcm peak ${f(1L).peak}")
-    // companded variants must reproduce the waveform stats within G.711
-    // quantization error (~0.4% of full scale at these amplitudes)
-    for (id <- Seq(2L, 3L)) {
-      assert(f(id).decoded, s"media $id should decode")
-      assert(math.abs(f(id).rms - f(1L).rms) < 0.01,
-        s"media $id rms ${f(id).rms} vs pcm ${f(1L).rms}")
-      assert(math.abs(f(id).peak - f(1L).peak) < 0.02,
-        s"media $id peak ${f(id).peak}")
-    }
-    // non-audio stays in the pipeline, clearly labeled
-    assert(!f(4L).decoded && f(4L).n_samples == 16)
-  }
-
-  test("MP4 box walk: real duration, tracks, dims, frame count, codecs") {
-    import graft.functions.Multimodal
-    def be32(v: Int): Array[Byte] = Array(
-      (v >>> 24).toByte, (v >>> 16).toByte, (v >>> 8).toByte, v.toByte)
-    def box(typ: String, payload: Array[Byte]): Array[Byte] =
-      be32(payload.length + 8) ++ typ.getBytes("US-ASCII") ++ payload
-    val ftyp = box("ftyp", "isom".getBytes ++ be32(0) ++ "avc1".getBytes)
-    // mvhd v0: ver/flags, ctime, mtime, timescale=1000, duration=5000
-    val mvhd = box("mvhd", be32(0) ++ be32(0) ++ be32(0) ++
-      be32(1000) ++ be32(5000) ++ Array.fill[Byte](80)(0))
-    // tkhd v0: width/height live at payload offsets 76/84 (16.16 fixed)
-    val tkhd = box("tkhd",
-      Array.fill[Byte](76)(0) ++ be32(320 << 16) ++ be32(240 << 16))
-    val hdlr = box("hdlr", be32(0) ++ be32(0) ++ "vide".getBytes ++
-      Array.fill[Byte](12)(0))
-    // stts: one entry — 150 samples (frames) of delta 400
-    val stts = box("stts", be32(0) ++ be32(1) ++ be32(150) ++ be32(400))
-    // stsd: one sample entry, fourcc avc1
-    val stsd = box("stsd", be32(0) ++ be32(1) ++
-      (be32(16) ++ "avc1".getBytes ++ Array.fill[Byte](8)(0)))
-    val mp4 = ftyp ++ box("moov", mvhd ++
-      box("trak", tkhd ++ box("mdia", hdlr ++
-        box("minf", box("stbl", stsd ++ stts)))))
-    val info = Multimodal.decodeMp4(mp4).get
-    assert(info.majorBrand == "isom")
-    assert(info.timescale == 1000L && info.durationMs == 5000L)
-    assert(info.trackCount == 1)
-    assert(info.width == 320 && info.height == 240)
-    assert(info.frames == 150)
-    assert(info.codecs == Seq("avc1"))
-    // the generic decode path serves real dims/frames for MP4 video now
-    import spark.implicits._
-    val feat = Multimodal.extractFeatures(spark,
-      Seq((9L, "video", mp4)).toDF("media_id", "kind", "payload"))
-      .collect().head
-    assert(feat.width == 320 && feat.height == 240 && feat.frames == 150)
-    // garbage that names ftyp but lies about sizes degrades, never throws
-    assert(Multimodal.decodeMp4(mp4.take(20)).isDefined ||
-      Multimodal.decodeMp4(mp4.take(20)).isEmpty)
-  }
-
-  test("Ogg/Opus page walk: channels + 48kHz granule duration") {
-    import graft.functions.Multimodal
-    def le16(v: Int) = Array(v.toByte, (v >>> 8).toByte)
-    def le32(v: Int) = Array(v.toByte, (v >>> 8).toByte, (v >>> 16).toByte, (v >>> 24).toByte)
-    def le64(v: Long) = le32((v & 0xffffffffL).toInt) ++ le32((v >>> 32).toInt)
-    def page(granule: Long, packet: Array[Byte]): Array[Byte] =
-      "OggS".getBytes ++ Array[Byte](0, 0) ++ le64(granule) ++
-        le32(1) ++ le32(0) ++ le32(0) ++
-        Array[Byte](1, packet.length.toByte) ++ packet // nsegs=1 + seg table
-    val opusHead = "OpusHead".getBytes ++ Array[Byte](1, 2) ++
-      le16(312) ++ le32(48000) ++ le16(0) ++ Array[Byte](0)
-    val ogg = page(0L, opusHead) ++ page(48312L, Array.fill[Byte](10)(7))
-    assert(Multimodal.decodeOpusOgg(ogg).contains((48000, 2, 48000L)))
-    // audio feature extraction surfaces the container metadata even
-    // though packet decode stays the labeled stand-in
-    import spark.implicits._
-    val df = Seq((1L, "audio", ogg)).toDF("media_id", "kind", "payload")
-    val f = Multimodal.extractAudioFeatures(spark, df).collect().head
-    assert(!f.decoded && f.sample_rate == 48000 && f.channels == 2 &&
-      f.n_samples == 48000)
-  }
-
-  test("codec provider seam (X6): a ServiceLoader-discovered provider " +
-    "upgrades compressed payloads to real decode; faults isolate") {
-    import graft.functions.{MediaCodecProvider, MediaCodecs, Multimodal}
-    import spark.implicits._
-    // deployment path: the provider registered via
-    // META-INF/services in test resources is discovered, no engine wiring
-    assert(MediaCodecs.providers.exists(_.name == "test-service-codec"))
-    // audio: 6 samples, 2 channels per the magic header → decoded=TRUE
-    // with the PROVIDER's values (rate 44100, peak 1.0 from its samples)
-    val aud = "GRAFTC1A".getBytes("US-ASCII") ++ Array[Byte](6, 2)
-    val af = Multimodal.extractAudioFeatures(spark,
-      Seq((1L, "audio", aud)).toDF("media_id", "kind", "payload"))
-      .collect().head
-    assert(af.decoded && af.sample_rate == 44100 && af.channels == 2 &&
-      af.n_samples == 6 && af.peak == 1.0)
-    // video: 32x24, 9 frames per the magic header → real dims, not the
-    // deterministic fake
-    val vid = "GRAFTC1V".getBytes("US-ASCII") ++ Array[Byte](32, 24, 9)
-    val vf = Multimodal.extractFeatures(spark,
-      Seq((2L, "video", vid)).toDF("media_id", "kind", "payload"))
-      .collect().head
-    assert(vf.width == 320 && vf.height == 240 && vf.frames == 9)
-    // a payload NO provider claims still degrades to the labeled
-    // stand-in — cardinality never depends on codec coverage
-    val unk = "NOTACODEC".getBytes("US-ASCII")
-    val uf = Multimodal.extractAudioFeatures(spark,
-      Seq((3L, "audio", unk)).toDF("media_id", "kind", "payload"))
-      .collect().head
-    assert(!uf.decoded)
-    // fault isolation: a provider that THROWS is treated as
-    // cannot-decode; later providers still serve the payload
-    val bomb = new MediaCodecProvider {
-      override def name = "bomb"
-      override def decodeAudio(b: Array[Byte]) = sys.error("codec crash")
-      override def decodeVideo(b: Array[Byte]) = sys.error("codec crash")
-    }
-    MediaCodecs.register(bomb)
-    try {
-      val af2 = Multimodal.extractAudioFeatures(spark,
-        Seq((4L, "audio", aud)).toDF("media_id", "kind", "payload"))
-        .collect().head
-      assert(af2.decoded && af2.sample_rate == 44100)
-    } finally MediaCodecs.unregister(bomb)
-  }
-
   test("dsum guards the 2^53 exactness bound at runtime") {
     import spark.implicits._
     // individual values must fit DECIMAL(18,6) (< 1e12); the bound is on
@@ -983,32 +749,6 @@ class LlmOpsSpec extends SparkSpec {
           case f: Filter if f.condition.toString.contains("UDF") => f
         }.nonEmpty))
     assert(trimmed, s"no bloom filter below a join:\n${df.queryExecution.optimizedPlan}")
-  }
-
-  test("multimodal: binary payload → partition-batched decode → feature aggs") {
-    val docs = graft.Tables(spark, sf, "documents")
-    val media = Multimodal.payloadFrom(docs, "doc_id", "text", "image")
-    assert(media.schema("payload").dataType == BinaryType)
-    val feats = Multimodal.extractFeatures(spark, media)
-    val n = docs.count()
-    assert(feats.count() == n)
-    // deterministic fake decode: stable across runs
-    val f1 = feats.filter(col("media_id") === 0).head()
-    val f2 = Multimodal.extractFeatures(spark, media)
-      .filter(col("media_id") === 0).head()
-    assert(f1 == f2)
-    // fingerprints distinguish distinct payloads
-    assert(feats.select(countDistinct(col("fingerprint"))).head().getLong(0) == n)
-    // resize plan: bounded output dims, plain column math
-    val resized = Multimodal.resizePlan(feats, maxSide = 128)
-    val bad = resized.filter(col("out_width") > 128 || col("out_height") > 128).count()
-    assert(bad == 0)
-    // frame sampling applies to video kind only
-    val video = Multimodal.payloadFrom(docs.limit(10), "doc_id", "text", "video")
-    val sampled = Multimodal.frameSamplePlan(
-      Multimodal.extractFeatures(spark, video), everyK = 10)
-    assert(sampled.count() == 10)
-    assert(sampled.filter(size(col("sampled_frames")) < 1).count() == 0)
   }
 
   private def ccOf(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
