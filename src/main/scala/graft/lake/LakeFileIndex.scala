@@ -52,7 +52,7 @@ private[lake] object LakeFileIndex {
 
   /** Parquet scan of `files` — (path, size in bytes) pairs — with
     * `schema`, planned from metadata. A size ≤ 0 means "not recorded"
-    * (delete files, metadata written before sizes were kept): that file
+    * (metadata written before sizes were kept): that file
     * is stat'ed on the driver instead. */
   def scan(spark: SparkSession, schema: StructType,
       files: Seq[(String, Long)]): DataFrame = {

@@ -501,7 +501,7 @@ private[lake] class LakeDeltaBatchWrite(
     val delMetas = cs.collect {
       case c if c.deletePath != null =>
         DeleteFileMeta(c.deletePath, c.deleteKind, c.deleteRows,
-          dataSequenceNumber = seq)
+          dataSequenceNumber = seq, sizeBytes = Files.size(Paths.get(c.deletePath)))
     }.toSeq
 
     // delta-written files record real footer stats (skipping keeps

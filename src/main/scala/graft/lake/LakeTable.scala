@@ -7,8 +7,12 @@ import java.util.{Comparator, UUID}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, CaseWhen, Cast, GreaterThan, LessThan, Literal, Not}
+import org.apache.spark.sql.catalyst.expressions.objects.Invoke
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BinaryType, IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.types.{BinaryType, IntegerType, LongType, ObjectType, StringType, StructField, StructType}
 
 /** Thrown when a strict (v2-MoR-incapable) reader hits live v2 delete
   * files — reproducing the "Databricks cannot read V2 merge-on-read
@@ -52,7 +56,9 @@ class MissingRowLineageException(msg: String) extends RuntimeException(msg)
   * one anti-join over their (file, pos) pairs. Equality deletes are scoped by
   * sequence number: they drop only rows from data files strictly older
   * than the delete commit, so a key re-inserted after a DELETE stays
-  * visible; their anti-join is broadcast within the same budget.
+  * visible. Within the same budget their keys load on the driver, reduced
+  * to the highest delete sequence per key, and apply as one broadcast
+  * filter per column set; past it, as one anti-join per column set.
   * Building a read launches no Spark job. Writes produce
   * immutable parquet data files; every mutation is a new snapshot
   * committed via Meta.commit.
@@ -840,27 +846,41 @@ class LakeTable(
       }).flatten.reduce(_ unionByName _)
   }
 
-  /** Whether `fs` fit `spark.graft.dv.broadcastBudgetBytes` (default
-    * 64 MiB) by on-disk parquet size — a metadata-scale stat call per
-    * file, zero data I/O. Fails SAFE: a file whose size cannot be read
-    * counts as over budget (a 0-byte default would silently restore the
-    * unconditional broadcast this gate exists to drop — VERDICT r15 wrong
-    * #2: v2 tables, the upgrade path's starting state, cannot write DVs,
-    * so a large MoR delete wave before compaction forced a multi-GB
-    * broadcast). */
-  private def withinDeleteBudget(fs: Seq[DeleteFileMeta]): Boolean = {
+  /** Whether what the driver would hold for `fs` fits
+    * `spark.graft.dv.broadcastBudgetBytes` (default 64 MiB): each file's
+    * on-disk parquet size as recorded at write time (a stat for metadata
+    * written before sizes were kept), plus, for equality files, their
+    * decoded keys ([[decodedKeyBytes]]) — zero data I/O. Fails SAFE: an
+    * unrecorded size that cannot be read counts as over budget (a 0-byte
+    * default would silently restore the unconditional broadcast this gate
+    * exists to drop — VERDICT r15 wrong #2: v2 tables, the upgrade path's
+    * starting state, cannot write DVs, so a large MoR delete wave before
+    * compaction forced a multi-GB broadcast). */
+  private[lake] def withinDeleteBudget(fs: Seq[DeleteFileMeta]): Boolean = {
     val budget = spark.conf
       .getOption("spark.graft.dv.broadcastBudgetBytes")
       .map(_.toLong).getOrElse(64L * 1024 * 1024)
     val sizes = fs.map(f =>
-      scala.util.Try(Files.size(java.nio.file.Paths.get(f.path))).toOption)
-    sizes.forall(_.isDefined) && sizes.flatten.sum <= budget
+      if (f.sizeBytes > 0) Some(f.sizeBytes)
+      else scala.util.Try(Files.size(java.nio.file.Paths.get(f.path))).toOption)
+    sizes.forall(_.isDefined) &&
+      sizes.flatten.sum + fs.map(decodedKeyBytes).sum <= budget
   }
+
+  /** Driver bytes of an equality file's keys once decoded, beyond the
+    * file itself: a hash-map entry with its boxed sequence number (48 B)
+    * and a boxed value per key column (32 B); string payloads are already
+    * counted by the file size. Position rows fold into bitmaps no larger
+    * than their file, so they add nothing. */
+  private def decodedKeyBytes(f: DeleteFileMeta): Long =
+    if (f.kind != "equality") 0L
+    else f.rowCount * (48L + 32L * f.equalityCols.size)
 
   /** MoR delete apply. Building it launches no Spark job: delete files
     * are read on the driver with parquet-hadoop, or scanned lazily with
     * explicit schemas, and every broadcast is gated by one budget rule
-    * ([[withinDeleteBudget]]). */
+    * ([[withinDeleteBudget]]). Within it, no delete kind adds a join or
+    * an exchange to the read. */
   private def applyDeletes(
       base: DataFrame, files: Seq[DataFileMeta],
       deletes: Seq[DeleteFileMeta]): DataFrame = {
@@ -895,26 +915,46 @@ class LakeTable(
           "left_anti")
       }
     val eqDeletes = deletes.filter(_.kind == "equality")
-    if (eqDeletes.isEmpty) afterPos
-    else {
-      // Strictly-older rule (Iceberg equality-delete semantics): the
-      // delete hides only rows whose data file predates the delete commit.
-      // One anti-join per equality-COLUMN-SET, not per delete file
-      // (VERDICT r3 next #8): all files sharing a column set union their
-      // rows tagged with their commit's sequence number, reduced to the
-      // max sequence per key — a delete at a higher sequence hides every
-      // data file a lower one did, so per-key max loses nothing — and a
-      // long DML history costs one broadcast join instead of N. The
-      // broadcast hints (delete side and the file-attribute side) follow
-      // the same budget; past it AQE picks every join of this branch.
-      val hint: DataFrame => DataFrame =
-        if (withinDeleteBudget(eqDeletes)) broadcast(_) else identity
-      val hadoopConf = spark.sessionState.newHadoopConf()
-      val withSeq = afterPos
-        .join(hint(fileAttrs(files)), afterPos(FileCol) === col(AttrPath), "left")
-      val cleaned = eqDeletes.groupBy(_.equalityCols).toSeq
-        .sortBy(_._1.mkString(","))
-        .foldLeft(withSeq) { case (df, (cols, efs)) =>
+    if (eqDeletes.isEmpty) return afterPos
+    // Strictly-older rule (Iceberg equality-delete semantics): the
+    // delete hides only rows whose data file predates the delete commit.
+    // One predicate per equality-COLUMN-SET, not per delete file
+    // (VERDICT r3 next #8): all files sharing a column set reduce to the
+    // max sequence per key — a delete at a higher sequence hides every
+    // data file a lower one did, so per-key max loses nothing.
+    val sets = eqDeletes.groupBy(_.equalityCols).toSeq.sortBy(_._1.mkString(","))
+    val loaded =
+      if (withinDeleteBudget(eqDeletes)) loadEqualityKeys(sets) else None
+    loaded match {
+      case Some(keys) =>
+        // Within budget: the keys and each scanned file's sequence ship
+        // in one broadcast variable; no join, no exchange. Only rows
+        // whose key some delete names look up their file's sequence.
+        val bc = spark.sparkContext.broadcast(DeleteVectors.EqualityDeletes(
+          keys, files.map(f => f.path -> f.dataSequenceNumber).toMap))
+        sets.map(_._1).zipWithIndex.foldLeft(afterPos) { case (df, (cols, i)) =>
+          val probe = Literal(new DeleteVectors.EqualityFilter(
+            bc, i, cols.map(schema(_).dataType).toArray),
+            ObjectType(classOf[DeleteVectors.EqualityFilter]))
+          def call(name: String, arg: Column) = Invoke(probe, name, LongType,
+            Seq(ColumnBridge.expression(arg)), propagateNull = false,
+            returnNullable = false)
+          val maxSeq = call("maxSeq", struct(cols.map(df(_)): _*))
+          val deleted = CaseWhen(
+            Seq(GreaterThan(maxSeq, Literal(Long.MinValue)) ->
+              LessThan(call("fileSeq", df(FileCol)), maxSeq)),
+            Literal(false))
+          df.filter(ColumnBridge.column(Not(deleted)))
+        }
+      case None =>
+        // Past the budget (or a key type the driver cannot match as the
+        // join does): one anti-join per column set over the union of its
+        // files' rows tagged with their sequence; AQE picks every join
+        // strategy of this branch from runtime stats.
+        val hadoopConf = spark.sessionState.newHadoopConf()
+        val withSeq = afterPos
+          .join(fileAttrs(files), afterPos(FileCol) === col(AttrPath), "left")
+        sets.foldLeft(withSeq) { case (df, (cols, efs)) =>
           val del = efs.map { ef =>
             // M48: the delete parquet carries the names/types of ITS
             // commit's epoch — select physically, surface currently.
@@ -937,10 +977,55 @@ class LakeTable(
             .agg(max(col(DelSeqCol)).as(DelSeqCol))
           val cond = cols.map(c => df(c) <=> del(c)).reduce(_ && _) &&
             df(AttrSeq) < del(DelSeqCol)
-          df.join(hint(del), cond, "left_anti")
-        }
-      cleaned.drop(AttrPath, AttrSeq, AttrFirst)
+          df.join(del, cond, "left_anti")
+        }.drop(AttrPath, AttrSeq, AttrFirst)
     }
+  }
+
+  /** Equality deletes loaded on the driver for the within-budget filter,
+    * one map per column set of `sets`: key tuple → highest delete
+    * sequence. Values are read exactly as the anti-join reads them — each
+    * file's physical column for its epoch (M48), cast to the current type
+    * with Spark's own `Cast` where that epoch's type differs — so keys
+    * match as the join's `<=>` matches them. None, to keep the
+    * anti-join, when a key type has no exact lookup form
+    * ([[DeleteVectors.isKeyType]]) or a file holds a key in a type other
+    * than its epoch's (the join would compare in a widened common type). */
+  private def loadEqualityKeys(sets: Seq[(Seq[String], Seq[DeleteFileMeta])])
+      : Option[Seq[java.util.HashMap[Any, java.lang.Long]]] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val resolver = spark.sessionState.conf.resolver
+    val tz = Option(spark.sessionState.conf.sessionLocalTimeZone)
+    val maxSeq: java.util.function.BiFunction[java.lang.Long, java.lang.Long, java.lang.Long] =
+      (a, b) => math.max(a, b)
+    def load(cols: Seq[String], efs: Seq[DeleteFileMeta]) = {
+      val cur = cols.map(schema(_))
+      val keys = new java.util.HashMap[Any, java.lang.Long]()
+      val complete = cur.forall(f => DeleteVectors.isKeyType(f.dataType)) &&
+        efs.forall { ef =>
+          val phys = cur.map(physicalField(_, ef.dataSequenceNumber))
+          val seq = java.lang.Long.valueOf(ef.dataSequenceNumber)
+          DeleteVectors.equalityKeys(conf, ef.path, phys.map(_.name), resolver) { types =>
+            if (cur.indices.exists(i =>
+                phys(i).dataType == cur(i).dataType && types(i) != cur(i).dataType)) None
+            else {
+              val casts = cur.indices.map(i =>
+                if (phys(i).dataType == cur(i).dataType) None
+                else Some(Cast(BoundReference(0, types(i), nullable = true),
+                  cur(i).dataType, tz)))
+              Some { values =>
+                casts.zipWithIndex.foreach { case (cast, i) =>
+                  cast.foreach(c => values(i) = c.eval(InternalRow(values(i))))
+                }
+                keys.merge(DeleteVectors.keyOf(values.length, values(_)), seq, maxSeq)
+              }
+            }
+          }
+        }
+      if (complete) Some(keys) else None
+    }
+    val loaded = sets.map { case (cols, efs) => load(cols, efs) }
+    if (loaded.forall(_.isDefined)) Some(loaded.flatten) else None
   }
 
   // ----------------------------------------------------------------- write
@@ -1094,7 +1179,8 @@ class LakeTable(
     val (kept, empty) = counted.partition(_._2 > 0)
     empty.foreach(e => Files.deleteIfExists(e._1))
     Some((kept.map { case (p, n) =>
-      DeleteFileMeta(p.toString, kind, n, dataSequenceNumber = seq) }, total))
+      DeleteFileMeta(p.toString, kind, n, dataSequenceNumber = seq,
+        sizeBytes = Files.size(p)) }, total))
   }
 
   /** v3 deletion vectors (M37): one bitmap row per targeted data file.
@@ -1911,7 +1997,7 @@ class LakeTable(
     val n = footerRowCount(written)
     if (n == 0) { deleteRecursively(delPath); return this }
     val delMeta = written
-      .map(p => DeleteFileMeta(p.toString, "equality", n, cols, seq))
+      .map(p => DeleteFileMeta(p.toString, "equality", n, cols, seq, Files.size(p)))
     commitSnapshot(newSnapshot("delete", dataFiles, deleteFiles ++ delMeta,
       Map("equality-delete-records" -> n.toString)))
   }
@@ -2043,7 +2129,7 @@ class LakeTable(
     val delCount = footerRowCount(delFiles)
     rebaseCommit(written0) { (h, files, start, seq) =>
       val delMeta = delFiles.map(p =>
-        DeleteFileMeta(p.toString, "equality", delCount, keyCols, seq))
+        DeleteFileMeta(p.toString, "equality", delCount, keyCols, seq, Files.size(p)))
       h.commitSnapshot(
         h.newSnapshot("upsert", h.dataFiles ++ files, h.deleteFiles ++ delMeta,
           Map("added-records" -> written.toString,
@@ -2439,11 +2525,11 @@ object LakeTable {
       files: Seq[DataFileMeta]): DataFrame =
     LakeFileIndex.scan(spark, schema, files.map(f => f.path -> f.sizeBytes))
 
-  /** Scan of delete files, planned from their recorded paths; delete
-    * files record no size, so each is stat'ed on the driver. */
+  /** Scan of delete files, planned from their recorded paths and sizes
+    * (a file without a recorded size is stat'ed on the driver). */
   private[lake] def scanDeletes(spark: SparkSession, schema: StructType,
       files: Seq[DeleteFileMeta]): DataFrame =
-    LakeFileIndex.scan(spark, schema, files.map(_.path -> 0L))
+    LakeFileIndex.scan(spark, schema, files.map(f => f.path -> f.sizeBytes))
 
   /** `_metadata.file_path` is a *percent-encoded* URI (`file:///…`;
     * space → `%20`, `%` → `%25` — Spark's SparkPath keeps the url-encoded

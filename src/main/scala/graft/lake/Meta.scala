@@ -70,7 +70,10 @@ final case class DeleteFileMeta(
     equalityCols: Seq[String] = Nil,
     /** Equality deletes apply only to data files with a strictly lower
       * sequence number — a key re-inserted after the delete stays live. */
-    dataSequenceNumber: Long = 0L)
+    dataSequenceNumber: Long = 0L,
+    /** On-disk size, recorded at write time; 0 in metadata written before
+      * sizes were kept (readers stat the file instead). */
+    sizeBytes: Long = 0L)
 
 final case class Snapshot(
     id: Long,

@@ -67,8 +67,17 @@ import org.apache.spark.internal.Logging
   *     recorded sizes); StreamingSpec, since seam 5's
   *     `LogicalRelation.isStreaming` flip now lands on this relation.
   *
+  *  8. **`DeleteVectors.EqualityFilter`** — pins
+  *     `catalyst.expressions.objects.Invoke` over a `Literal` of
+  *     `ObjectType`: the within-budget equality-delete filter calls the
+  *     filter object's methods from generated code, with arguments in
+  *     Catalyst's internal form (`InternalRow`, `UTF8String`) found by
+  *     reflection. Breakage modes: compile error on a constructor change;
+  *     a method-lookup failure at analysis if argument classes change.
+  *     Canary: EqualityDeleteSpec (every case reads both ways).
+  *
   * [[check]] logs one WARN when the running Spark is not the pinned
-  * minor — cheap early signal that the seven canaries above deserve a
+  * minor — cheap early signal that the eight canaries above deserve a
   * look before trusting a new runtime. */
 object SparkSeams extends Logging {
   /** Spark minor these seams were written and tested against. */
@@ -84,7 +93,7 @@ object SparkSeams extends Logging {
         s"graft's Spark-internal seams are pinned to Spark $PinnedMinor.x " +
           s"but this runtime is $v — run the seam canaries (TableStatsSpec, " +
           "ExtensionsSpec, StreamingSpec, LakeTableSpec, SchemaEvolutionSpec, " +
-          "AddFilesSpec) before trusting it; " +
+          "AddFilesSpec, EqualityDeleteSpec) before trusting it; " +
           "see graft.lake.SparkSeams for the seam inventory")
     }
   }

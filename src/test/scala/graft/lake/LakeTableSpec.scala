@@ -217,6 +217,66 @@ class LakeTableSpec extends SparkSpec {
     }
   }
 
+  test("an equality-deleted read runs no more jobs than its clean twin") {
+    val cat = freshCatalog(); cat.createNamespace("db")
+    val eq = cat.createTable("db", "ejeq", schema, props = morProps)
+      .append(wideRows)
+      .addEqualityDeletes(df((2, "x", 0.0), (4, "x", 0.0)).select("id"), Seq("id"))
+      .addEqualityDeletes(df((0, "c", 0.0)).select("category"), Seq("category"))
+    val clean = cat.createTable("db", "ejclean", schema)
+      .append(wideRows.filter(!col("id").isin(2, 4) && col("category") =!= "c"))
+    assert(eq.deleteFiles.count(_.kind == "equality") == 2)
+    def jobsToCollect(t: LakeTable): (Int, Seq[Int]) = {
+      val read = t.read()
+      var got = Seq.empty[Int]
+      val jobs = jobsDuring { got = read.collect().map(_.getInt(0)).sorted.toSeq }
+      (jobs, got)
+    }
+    val (eqJobs, eqIds) = jobsToCollect(eq)
+    val (cleanJobs, cleanIds) = jobsToCollect(clean)
+    assert(eqIds == cleanIds && eqIds.nonEmpty)
+    assert(eqJobs <= cleanJobs, s"equality-deleted read: $eqJobs jobs, clean: $cleanJobs")
+  }
+
+  test("delete-file sizes are recorded at write; metadata without them " +
+    "still reads, and an unreadable unrecorded size is over budget") {
+    val cat = freshCatalog(); cat.createNamespace("db")
+    val t = cat.createTable("db", "dsz", schema, props = morProps)
+      .append(df(sixRows: _*))
+      .delete(col("id") === 2)
+      .addEqualityDeletes(df((4, "x", 0.0)).select("id"), Seq("id"))
+    assert(t.deleteFiles.map(_.kind).toSet == Set("position", "equality"))
+    t.deleteFiles.foreach(f =>
+      assert(f.sizeBytes == Files.size(java.nio.file.Paths.get(f.path)), f))
+    // the manifest as written before sizes were kept: no `sizeBytes`
+    val snap = t.currentSnapshot.get
+    val mapper = com.fasterxml.jackson.databind.json.JsonMapper.builder()
+      .addModule(com.fasterxml.jackson.module.scala.DefaultScalaModule).build()
+    val tree = mapper.valueToTree[com.fasterxml.jackson.databind.node.ObjectNode](
+      ManifestData(snap.dataFiles, snap.deleteFiles))
+    tree.get("deleteFiles").forEach(f =>
+      f.asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode].remove("sizeBytes"))
+    assert(!mapper.writeValueAsString(tree.get("deleteFiles")).contains("sizeBytes"))
+    val legacy = Files.createTempFile("graft-legacy-manifest-", ".json")
+    Files.write(legacy, mapper.writeValueAsBytes(tree))
+    val old = Meta.materialize(snap.copy(manifestPath = Some(legacy.toString)))
+    assert(old.deleteFiles.size == 2 && old.deleteFiles.forall(_.sizeBytes == 0L),
+      old.deleteFiles)
+    assert(old.dataFiles == snap.dataFiles)
+    val want = Seq(1, 3, 5, 6)
+    assert(ids(t) == want)
+    // the same read through the size-less metadata: stat fallback
+    val legacyHandle = new LakeTable(spark, t.location,
+      t.meta.copy(snapshots = t.meta.snapshots.map(s =>
+        if (s.id == snap.id) old else s)))
+    assert(ids(legacyHandle) == want)
+    assert(legacyHandle.withinDeleteBudget(old.deleteFiles))
+    // fail safe: an unrecorded size that cannot be stat'ed is over budget
+    val gone = old.deleteFiles.head.copy(path = t.location.resolve("missing.parquet").toString)
+    assert(!legacyHandle.withinDeleteBudget(Seq(gone)))
+    assert(legacyHandle.withinDeleteBudget(Seq(gone.copy(sizeBytes = 1L))))
+  }
+
   test("write bookkeeping from footers: recorded row counts equal the " +
     "files' rows, no zero-row file is kept, a zeroed size still reads") {
     val cat = freshCatalog(); cat.createNamespace("db")
@@ -569,10 +629,17 @@ class LakeTableSpec extends SparkSpec {
     assert(ids(t) == Seq(1, 4))
     assert(t.read().filter(col("id") === 1).head().getDouble(2) == 11.0)
     // 3 equality files, 2 column sets → exactly 2 anti-joins in the plan
+    // past the budget; within it, broadcast filters with no join or exchange
     assert(t.deleteFiles.count(_.kind == "equality") == 3)
-    val plan = t.read().queryExecution.executedPlan.toString
-    val antiJoins = "LeftAnti".r.findAllIn(plan).size
-    assert(antiJoins == 2, s"expected 2 anti-joins (one per column set):\n$plan")
+    spark.conf.set("spark.graft.dv.broadcastBudgetBytes", "0")
+    try {
+      val plan = t.read().queryExecution.executedPlan.toString
+      val antiJoins = "LeftAnti".r.findAllIn(plan).size
+      assert(antiJoins == 2, s"expected 2 anti-joins (one per column set):\n$plan")
+      assert(ids(t) == Seq(1, 4))
+    } finally spark.conf.unset("spark.graft.dv.broadcastBudgetBytes")
+    val within = t.read().queryExecution.executedPlan.toString
+    assert(!within.contains("LeftAnti") && !within.contains("BroadcastExchange"), within)
     // re-deleting id=1 at a later sequence hides the re-insert too
     // (max-sequence reduction must keep the newest delete per key)
     t = t.addEqualityDeletes(df((1, "x", 0.0)).select("id"), Seq("id"))
