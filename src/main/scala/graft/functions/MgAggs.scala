@@ -19,7 +19,7 @@ import org.apache.spark.sql.{Column, Encoder, Encoders}
   * error bound: sum both maps, and if more than `s` counters survive,
   * subtract the (s+1)-th largest count from all and drop non-positives.
   *
-  * Guarantees (spec-gated, StreamingSpec): for a stream of n total
+  * Guarantees (spec-gated, AggFuzzSpec): for a stream of n total
   * updates, every reported count is in [true − n/(s+1), true], and any
   * key with true count > n/(s+1) is PRESENT in the summary — under any
   * partitioning, micro-batch slicing, or merge tree. Counts are

@@ -13,8 +13,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
   *    `aggregate(transform(sequence(0, 63), i -> IF(element_at(v, i+1)
   *    >= 0D, shiftleft(1L, i), 0L)), 0L, (acc, x) -> acc | x)` — 64
   *    interpreted lambda evaluations per row on q37/q125/q148/q149,
-  *    the whole graph family (q162/q165/q182/q183/q187/q188 via
-  *    GraphIndex), and the streaming vector ingest;
+  *    and the whole graph family (q162/q165/q182/q183/q187/q188 via
+  *    GraphIndex);
   *  - the squared-norm zero-vector guard
   *    `aggregate(v, 0D, (acc, x) -> acc + x * x)` — dim interpreted
   *    lambda evaluations per row at every corpus entry point of the

@@ -44,11 +44,13 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * executor→parquet directly (Spark's own `ParquetWriteSupport` encodes
   * `InternalRow`s, so files are byte-compatible with session writes),
   * and the driver-side [[LakeDeltaBatchWrite.commit]] lands ONE MoR
-  * snapshot from a handle reloaded at commit time — CAS-ing against the
-  * metadata version current then, the same optimistic-concurrency rule
-  * as every other commit path. The LakeSql dispatcher remains the
-  * fallback surface for all three statements (and the only one for CoW
-  * write modes — the native path is always merge-on-read).
+  * snapshot through the ANALYSIS-TIME handle, so a commit that landed
+  * since the scan fails the CAS with CommitConflictException instead of
+  * committing deletes against rewritten files (the reason is spelled
+  * out on [[LakeDeltaBatchWrite]]). This class serves merge-on-read
+  * tables; copy-on-write tables plan through
+  * [[LakeCowRowLevelOperation]]. The LakeSql dispatcher remains the
+  * fallback surface for all three statements.
   */
 private[lake] class LakeRowLevelOperation(
     t: LakeTable, cmd: RowLevelOperation.Command) extends SupportsDelta {

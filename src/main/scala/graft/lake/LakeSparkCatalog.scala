@@ -27,12 +27,16 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *   DELETE FROM / UPDATE / MERGE INTO (merge-on-read tables) /
   *   CALL lake.system.<procedure>(…)
   *
-  * plan natively through Catalyst, with the MoR-aware scan (position/
-  * equality-delete anti-joins) at the leaf via the V1Scan bridge, writes
-  * via the V1Write bridge, row-level DML via SupportsRowLevelOperations
-  * delta writes ([[LakeRowLevelOperation]]), and maintenance procedures
-  * via ProcedureCatalog ([[LakeProcedures]]). Copy-on-write DML stays on
-  * the LakeSql dispatcher.
+  * plan natively through Catalyst. Reads splice [[LakeTable.read]]'s own
+  * MoR-aware plan in at the leaf ([[NativeReadRule]]): within
+  * `spark.graft.dv.broadcastBudgetBytes` every delete kind applies as a
+  * broadcast filter, past it as an anti-join; time travel and
+  * metadata-column selects stay on the V1Scan bridge. Writes go through
+  * the V1Write bridge; row-level DML through SupportsRowLevelOperations,
+  * where `newRowLevelOperationBuilder` plans delta writes on
+  * merge-on-read tables ([[LakeRowLevelOperation]]) and file rewrites on
+  * copy-on-write tables ([[LakeCowRowLevelOperation]]); maintenance
+  * procedures through ProcedureCatalog ([[LakeProcedures]]).
   *
   * The warehouse root is read from `spark.graft.warehouse` at every call,
   * so one registered catalog serves whatever warehouse the session

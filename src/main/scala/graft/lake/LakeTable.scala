@@ -2038,14 +2038,13 @@ class LakeTable(
     * over `keyCols` hides every strictly-older row of those keys, so the
     * new rows REPLACE the key's previous row set atomically. This is
     * exactly what rebuilding a changed doc's derived index rows needs
-    * (a doc owns MANY posting/shingle/sigband rows): retire + rebuild in
+    * (a doc owns MANY posting/shingle rows): retire + rebuild in
     * ONE commit, O(changed keys' rows) I/O, never a table scan. Same
     * rebase/replay convergence as upsertByKey — rows within one batch
     * share the commit's sequence number, so they all survive their own
     * delete. */
-  def replaceByKey(rows: DataFrame, keyCols: Seq[String],
-      extraProps: Map[String, String] = Map.empty): LakeTable =
-    equalityReplace(rows, keyCols, "replaceByKey", extraProps = extraProps)
+  def replaceByKey(rows: DataFrame, keyCols: Seq[String]): LakeTable =
+    equalityReplace(rows, keyCols, "replaceByKey")
 
   /** Explicit-key variant: the equality delete covers `keys` (one column
     * per `keyCols` entry) rather than being derived from `rows`, so a
@@ -2053,29 +2052,20 @@ class LakeTable(
     * SAME commit as every other key's rebuild. Two callers need this
     * (both found as r17 crash/staleness windows): a doc re-crawled to
     * fewer tokens than one shingle owns zero new posting rows but must
-    * still lose its old ones, and a vector that re-embedded to a
-    * non-finite norm must leave the signature index with NO replacement
-    * rows — in one commit, so no crash point separates its retire from
-    * its peers' rebuild. `keys` must cover every key present in `rows`
-    * (guarded — a row outside the delete's cover would APPEND next to
-    * its old rows instead of replacing them). */
+    * still lose its old ones, and a vector re-embedded to zero norm
+    * must leave the graph tables with NO replacement rows
+    * ([[graft.operators.GraphIndex.reembed]]) — in one commit, so no
+    * crash point separates its retire from its peers' rebuild. `keys`
+    * must cover every key present in `rows` (guarded — a row outside
+    * the delete's cover would APPEND next to its old rows instead of
+    * replacing them). */
   def replaceByKey(rows: DataFrame, keyCols: Seq[String],
       keys: DataFrame): LakeTable =
     equalityReplace(rows, keyCols, "replaceByKey", Some(keys))
 
-  /** Explicit-key + atomic-props variant: `extraProps` lands in the
-    * SAME commit as the replacement (the [[append]] convention) — the
-    * streaming graph ingest stamps its batch-id gate on the final edge
-    * swap this way, so a crash can never separate the data from the
-    * replay marker. */
-  def replaceByKey(rows: DataFrame, keyCols: Seq[String],
-      keys: DataFrame, extraProps: Map[String, String]): LakeTable =
-    equalityReplace(rows, keyCols, "replaceByKey", Some(keys), extraProps)
-
   private def equalityReplace(
       rows: DataFrame, keyCols: Seq[String], op: String,
-      explicitKeys: Option[DataFrame] = None,
-      extraProps: Map[String, String] = Map.empty): LakeTable = {
+      explicitKeys: Option[DataFrame] = None): LakeTable = {
     if (!isMorDelete)
       throw new IllegalStateException(
         s"$op on ${meta.name}: equality-delete upserts require " +
@@ -2109,16 +2099,11 @@ class LakeTable(
     if (written == 0) {
       // nothing to add: with explicit keys this is a pure retire — the
       // single-commit contract still holds (one delete-only commit);
-      // without them the derived key set is empty too, a no-op. Any
-      // extraProps land in a follow-up metadata commit here (the
-      // delete-only corner); a crash between the two replays the
-      // retire, which is idempotent by value.
-      val retired = explicitKeys match {
+      // without them the derived key set is empty too, a no-op.
+      return explicitKeys match {
         case Some(ks) => addEqualityDeletes(ks, keyCols)
         case None => this
       }
-      return if (extraProps.isEmpty) retired
-        else retired.setProperties(extraProps)
     }
     val delDir = location.resolve("deletes")
     Files.createDirectories(delDir)
@@ -2134,12 +2119,7 @@ class LakeTable(
         h.newSnapshot("upsert", h.dataFiles ++ files, h.deleteFiles ++ delMeta,
           Map("added-records" -> written.toString,
             "equality-delete-records" -> delCount.toString)),
-        m => {
-          val m2 = if (m.nextRowId >= 0)
-            m.copy(nextRowId = start + written) else m
-          if (extraProps.isEmpty) m2
-          else m2.copy(props = m2.props ++ extraProps)
-        })
+        m => if (m.nextRowId >= 0) m.copy(nextRowId = start + written) else m)
     }
   }
 

@@ -100,16 +100,7 @@ object Bm25Index {
   private[operators] def counterDelta(catalog: LakeCatalog, db: String,
       eventId: Long, dn: Long, ddl: Long): Boolean = {
     require(eventId > 0, s"maintenance eventId must be positive: $eventId")
-    counterDeltaMarked(catalog, db, s"e$eventId", dn, ddl)
-  }
-
-  /** Marker-string core: batch maintenance mints `e<eventId>` markers,
-    * the streaming ingest mints `s<batchId>` — two disjoint event-id
-    * spaces over ONE exactly-once mechanism, so a stream and the
-    * nightly jobs can share an index without a batch id colliding with
-    * an event id and silently swallowing its delta. */
-  private[graft] def counterDeltaMarked(catalog: LakeCatalog, db: String,
-      marker: String, dn: Long, ddl: Long): Boolean = {
+    val marker = s"e$eventId"
     var attempts = 0
     while (true) {
       val t = catalog.loadTable(db, "cstats").get
@@ -137,7 +128,7 @@ object Bm25Index {
   private[operators] val CounterRetention = StandingState.Retention
 
   def provision(catalog: LakeCatalog, db: String, docs: DataFrame): Unit = {
-    val mor = graft.streaming.StreamIngest.MorProps
+    val mor = StandingState.MorProps
     val tk = tokens(docs).localCheckpoint(true) // postings + lens + stats
     val lens = tk.select(col("doc_id"), size(col("tk")).cast("long").as("dl"))
       .localCheckpoint(true)
@@ -166,28 +157,14 @@ object Bm25Index {
     * replaceByKey so a retry replaces its own first attempt. */
   def append(catalog: LakeCatalog, db: String, docs: DataFrame,
       eventId: Long): Unit = {
-    require(eventId > 0, s"maintenance eventId must be positive: $eventId")
-    appendDocs(catalog, db, docs, s"e$eventId")
-  }
-
-  /** The append core. The streaming ingest
-    * ([[graft.streaming.StreamIngest.bm25Ingest]]) calls it with an
-    * `s<batchId>` marker and the sink's replay gate as `gateProps`: the
-    * gate rides the FINAL (lens) index commit atomically, the counter
-    * is marker-gated, and the tfpost commit replays idempotently by
-    * value — so a crash at any point converges on redelivery and a
-    * fully-committed batch is dropped whole. */
-  private[graft] def appendDocs(catalog: LakeCatalog, db: String,
-      docs: DataFrame, marker: String,
-      gateProps: Map[String, String] = Map.empty): Unit = {
     val lens = lensOf(docs).localCheckpoint(true)
     val ids = lens.select("doc_id")
     val (an, adl) = statsOf(lens)
-    counterDeltaMarked(catalog, db, marker, an, adl)
+    counterDelta(catalog, db, eventId, an, adl)
     catalog.loadTable(db, "tfpost").get
       .replaceByKey(postingsOf(docs), Seq("doc_id"), keys = ids)
     catalog.loadTable(db, "lens").get
-      .replaceByKey(lens, Seq("doc_id"), keys = ids, extraProps = gateProps)
+      .replaceByKey(lens, Seq("doc_id"), keys = ids)
   }
 
   /** Takedown/retention: subtract exactly the stored contribution (the

@@ -130,7 +130,7 @@ object GraphIndex {
 
   // ------------------------------------------------------- lifecycle
 
-  private def mor = graft.streaming.StreamIngest.MorProps
+  private def mor = StandingState.MorProps
 
   /** One-time standing build: the full q162+q182 pipeline over the
     * embeddable slice of `vectors` (vec_id, v), landed as the three
@@ -192,28 +192,15 @@ object GraphIndex {
     * edge swap covering the new anchors PLUS every standing anchor a
     * new signature band-collides with (a new vector can enter an old
     * anchor's top-10 — and can displace its kept set). Zero-norm rows
-    * bypass (the X50 ingest rule: they are not graph members). */
-  def append(catalog: LakeCatalog, db: String, vectors: DataFrame): Unit =
-    appendVectors(catalog, db, vectors, replay = false)
-
-  /** The append core. `replay = true` is the STREAMING form
-    * ([[graft.streaming.StreamIngest.graphIngest]]): a redelivered
-    * micro-batch's ids are already standing, every commit is
-    * replace-by-key idempotent by value, and `gateProps` rides the
-    * FINAL edge-swap commit atomically so the sink can drop the batch
-    * on the next redelivery. On replay the collision probe sees the
-    * batch's own standing rows; that only widens `affected` by ids the
-    * rebuild set already contains. */
-  private[graft] def appendVectors(catalog: LakeCatalog, db: String,
-      vectors: DataFrame, replay: Boolean,
-      gateProps: Map[String, String] = Map.empty): Unit = {
+    * bypass (q162's corpus rule: they are not graph members). Ids
+    * already in the graph are rejected. */
+  def append(catalog: LakeCatalog, db: String, vectors: DataFrame): Unit = {
     val nz = graphCorpus(vectors).localCheckpoint(true)
     val standing = catalog.loadTable(db, "gsig").get.read()
-    if (!replay)
-      require(nz.join(standing, "vec_id").limit(1).count() == 0,
-        s"GraphIndex.append on $db: batch contains ids already in the " +
-          "graph — re-embeds must go through reembed() so their old " +
-          "signatures' neighborhoods rebuild too")
+    require(nz.join(standing, "vec_id").limit(1).count() == 0,
+      s"GraphIndex.append on $db: batch contains ids already in the " +
+        "graph — re-embeds must go through reembed() so their old " +
+        "signatures' neighborhoods rebuild too")
     val newIds = nz.select("vec_id")
     val affected = BandedAnn.collidingIds(nz, standing, "vec_id", "sig")
     catalog.loadTable(db, "gvec").get
@@ -223,8 +210,7 @@ object GraphIndex {
     val rebuild = newIds.union(affected).distinct().localCheckpoint(true)
     catalog.loadTable(db, "gedges").get
       .replaceByKey(buildFor(catalog, db, rebuild), Seq("src"),
-        keys = rebuild.select(col("vec_id").as("src")),
-        extraProps = gateProps)
+        keys = rebuild.select(col("vec_id").as("src")))
   }
 
   /** Takedown/retention: the retired ids leave the corpus tables

@@ -4,14 +4,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.lake.LakeCatalog
-import graft.streaming.StreamIngest
 
 /** Standing-state MAINTENANCE for the incremental dedup/ANN index
-  * tables (X49 docs / X50 vectors — VERDICT r16 missing #1): the
-  * operation a nightly 100 TB pipeline runs the first week it exists.
-  * The incremental dedup (q167/X44) and IVF maintenance (q174) keep
-  * DERIVED state — shingle sets, rare-first prefix postings, signature
-  * bands, bucket assignments — as lake tables; when a standing document
+  * tables (X49 docs / X50 IVF assignments — VERDICT r16 missing #1):
+  * the operation a nightly 100 TB pipeline runs the first week it
+  * exists. The incremental dedup (q167) and IVF maintenance (q174) keep
+  * DERIVED state — shingle sets, rare-first prefix postings, bucket
+  * assignments — as lake tables; when a standing document
   * is DELETEd (takedown, retention) or UPDATEd (re-crawl), its derived
   * rows must retire with it, or the next incremental run generates
   * candidates against content the corpus no longer contains and
@@ -61,7 +60,7 @@ object IndexMaintenance {
     * MaintenanceSpec arcs. */
   def recrawlDocs(catalog: LakeCatalog, db: String, updated: DataFrame): Unit = {
     val spark = updated.sparkSession
-    val head = StreamIngest.loadHead(spark, catalog, db)
+    val head = StandingState.loadHead(spark, catalog, db)
     val sh = PrefixIndex.shingled(updated)
     val post = PrefixIndex.postings(PrefixIndex.hashed(sh), head)
     // explicit key set (ADVICE r17): a doc re-crawled to fewer tokens
@@ -75,39 +74,6 @@ object IndexMaintenance {
     catalog.loadTable(db, "shingles").get
       .replaceByKey(sh, Seq("doc_id"), keys = ids)
     catalog.loadTable(db, "docs").get.replaceByKey(updated, Seq("doc_id"))
-  }
-
-  // --------------------------------------------- vector dedup state
-
-  /** Retire vectors from the standing vector-dedup state (vectors +
-    * sigbands), equality delete on vec_id. Same ordering rationale as
-    * [[retireDocs]]. */
-  def retireVectors(catalog: LakeCatalog, db: String, ids: DataFrame): Unit =
-    Seq("sigbands", "vectors").foreach { t =>
-      catalog.loadTable(db, t).get.addEqualityDeletes(ids, Seq("vec_id"))
-    }
-
-  /** Re-embed upsert: replace `updated` vectors (vec_id, v) and rebuild
-    * their signature-band rows. Non-finite-norm vectors follow the
-    * ingest's bypass rule — replaced in the vectors table, RETIRED from
-    * the index (their old bands must not linger, their new signature is
-    * meaningless). */
-  def recrawlVectors(catalog: LakeCatalog, db: String, updated: DataFrame): Unit = {
-    val nz = updated.filter(StreamIngest.finiteNorm)
-    // ONE commit on the index (VERDICT r17 wrong #1 — the old
-    // delete-then-append pair had a crash point that left re-embedded
-    // vectors' old bands retired with the new ones absent): the rebuilt
-    // bands for the finite slice land WITH an equality delete covering
-    // ALL updated ids, so a vector that BECAME non-finite retires with
-    // no replacement rows in the same commit, and every crash state is
-    // one of {index old, index new} — under index-first ordering both
-    // degrade to duplicate admission of content being replaced, never
-    // to dropping an arrival (verify compares against the vectors
-    // table, which still holds the content any stale-band match names).
-    val ids = updated.select(col("vec_id"))
-    catalog.loadTable(db, "sigbands").get
-      .replaceByKey(StreamIngest.sigBands(nz), Seq("vec_id"), keys = ids)
-    catalog.loadTable(db, "vectors").get.replaceByKey(updated, Seq("vec_id"))
   }
 
   // --------------------------------------------- IVF assignment state

@@ -7,8 +7,9 @@ import graft.functions.TextOps
 
 /** The lossless near-dup prefix-index device (AllPairs/PPJoin family),
   * extracted from the q56 spelling so the batch queries (q34/q35/q56/
-  * q64/q161/q167 via `graft.queries.LlmQueries`) and the STREAMING
-  * ingest (`graft.streaming.StreamIngest.nearDupIngest`) share one
+  * q64/q161), the incremental runs over standing state (q167/q176/
+  * q181; all in `graft.queries.LlmQueries`) and the standing-state
+  * provisioning ([[StandingState.provisionNearDupState]]) share one
   * definition of every stage: shingle pass, xxhash64 order classes,
   * df-head order, rare-first prefix postings, in-bucket PPJoin filters,
   * and the budget-gated exact-Jaccard verify.
@@ -19,7 +20,7 @@ import graft.functions.TextOps
   * with jac ≥ 0.8 must collide on some prefix class (pigeonhole), so
   * candidate loss is impossible — and because only CONSISTENCY matters,
   * a new batch indexed under a STORED corpus's head joins losslessly
-  * against stored postings (q167, streaming ingest).
+  * against stored postings (q167).
   */
 object PrefixIndex {
 
@@ -214,9 +215,10 @@ object PrefixIndex {
     * aggregate that admits any candidate set when the full corpus fits
     * the budget — a bench win for the batch dedup queries, but a
     * per-trigger CORPUS-scale pass for callers whose shingle table is
-    * standing lake state that grows forever (the streaming ingest and
-    * q167's nightly shape bill themselves O(batch), so they pay only
-    * the candidate-level probes below, which are batch-scale). */
+    * standing lake state that grows forever (q167's nightly shape and
+    * its maintained-state arcs q176/q181 bill themselves O(batch), so
+    * they pay only the candidate-level probes below, which are
+    * batch-scale). */
   def verifyPairs(docsSh: DataFrame, cand: DataFrame,
       corpusPreGate: Boolean = true): DataFrame = {
     val budget = verifyBroadcastBudget(docsSh)

@@ -410,7 +410,7 @@ object LlmQueries {
     * shuffle is the bucket group over ~20% of postings. No df join, no
     * per-doc window. */
   // The prefix-index stages below live in graft.operators.PrefixIndex
-  // since r16 (shared verbatim with StreamIngest.nearDupIngest); the
+  // since r16 (shared with the standing-state provisioning); the
   // losslessness and budget arguments are documented there.
   import graft.operators.PrefixIndex
 
@@ -4601,7 +4601,7 @@ object LlmQueries {
       val stored = t(s, dir, "documents")
         .filter(!expr(IncrNewPred))
         .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-      graft.streaming.StreamIngest.provisionNearDupState(cat, "nd",
+      graft.operators.StandingState.provisionNearDupState(cat, "nd",
         StructType(Seq(StructField("doc_id", LongType),
           StructField("text", StringType))), stored)
       graft.operators.IndexMaintenance.retireDocs(cat, "nd",
@@ -4649,7 +4649,7 @@ object LlmQueries {
       incrementalNearDup(s,
         cat.loadTable("nd", "shingles").get.read(),
         cat.loadTable("nd", "postings").get.read(),
-        graft.streaming.StreamIngest.loadHead(s, cat, "nd"),
+        graft.operators.StandingState.loadHead(s, cat, "nd"),
         t(s, dir, "documents").filter(expr(IncrNewPred))
           .select("doc_id", "text"))
     })
@@ -4950,7 +4950,7 @@ object LlmQueries {
     val assignT = cat.createTable("ann", "assign", StructType(Seq(
         StructField("vec_id", LongType),
         StructField("bucket", LongType))),
-        props = graft.streaming.StreamIngest.MorProps)
+        props = graft.operators.StandingState.MorProps)
       .append(ivfAssignCompiled(s, train, "vec_id", "v", cents, 1)
         .select(col("vec_id"), col("bucket").cast("long").as("bucket")))
     (cents, assignT)
@@ -5127,7 +5127,7 @@ object LlmQueries {
       val wh = java.nio.file.Files.createTempDirectory("graft-ivfrb-wh")
       val cat = new graft.lake.LakeCatalog(s, wh)
       cat.createNamespace("ann")
-      graft.streaming.StreamIngest.provisionIvfState(cat, "ann", centsOld,
+      graft.operators.StandingState.provisionIvfState(cat, "ann", centsOld,
         standing, df => ivfAssignCompiled(s, df, "vec_id", "v", centsOld, 1))
       // drift 1 — the nightly batch append (M34 ∘ X45, q174's shape)
       cat.loadTable("ann", "vectors").get.append(batch)
@@ -5230,7 +5230,7 @@ object LlmQueries {
     (s, dir) => {
       val cat = ivfRebuildState(s, dir)
       // the published artifact: a bounded K×d driver pull (q174's note)
-      val cents = graft.streaming.StreamIngest.loadCentroids(s, cat, "ann")
+      val cents = graft.operators.StandingState.loadCentroids(s, cat, "ann")
       val queries = t(s, dir, "embeddings")
         .withColumn("v", VectorOps.toDoubleVec(col("embedding")))
         .filter(col("vec_id") < 4)

@@ -511,7 +511,7 @@ class ViewSpec extends SparkSpec {
         docSchema)
     def words(tag: String): String =
       (0 until 60).map(i => s"$tag$i").mkString(" ")
-    graft.streaming.StreamIngest.provisionNearDupState(cat, "nd", docSchema,
+    graft.operators.StandingState.provisionNearDupState(cat, "nd", docSchema,
       docs(1L -> words("aa"), 2L -> words("bb")))
 
     // a selection/projection MV over the postings index — the shape a
@@ -523,7 +523,7 @@ class ViewSpec extends SparkSpec {
     assert(mvDocs() == Set(1L, 2L))
 
     // append-only growth (a new doc's posting rows) stays incremental
-    val head = graft.streaming.StreamIngest.loadHead(spark, cat, "nd")
+    val head = graft.operators.StandingState.loadHead(spark, cat, "nd")
     val sh3 = graft.operators.PrefixIndex.shingled(docs(3L -> words("cc")))
     cat.loadTable("nd", "postings").get.append(
       graft.operators.PrefixIndex.postings(

@@ -8,10 +8,10 @@ import org.apache.spark.sql.types._
 
 import graft.SparkSpec
 import graft.lake.{LakeCatalog, Procedures}
-import graft.streaming.StreamIngest
+import graft.queries.LlmQueries
 
-/** Standing-state maintenance (X49/X50, VERDICT r16 missing #1): when a
-  * standing doc/vector is retired or re-crawled, the derived index
+/** Standing-state maintenance (X49, VERDICT r16 missing #1): when a
+  * standing doc is retired or re-crawled, the derived index
   * tables must reflect CURRENT state before the next incremental run —
   * planted arcs prove the three observable consequences:
   *   (a) an arrival near-dupping only the OLD content of a maintained
@@ -38,34 +38,38 @@ class MaintenanceSpec extends SparkSpec {
       spark.sparkContext.parallelize(rs.map { case (i, t) => Row(i, t) }, 1),
       docSchema)
 
-  /** A restartable ingest lane: one source dir + one streaming
-    * checkpoint, so each run() is a query RESTART whose batch ids
-    * continue (the production posture the per-table batch-id gate
-    * assumes — a fresh checkpoint would restart ids at 0 and read as
-    * already-committed replays). */
+  /** An ingest lane over the standing state: each run() asks the
+    * engine's incremental near-dup run (q167/q176's
+    * `incrementalNearDup`, over the stored shingles and postings under
+    * the stored head) which batch docs verify as near-dups, drops the
+    * batch side of a (batch, stored) pair and the larger id of a
+    * (batch, batch) pair, and lands the survivors in postings, shingles
+    * and docs — so later runs dedup against them. */
   private final class IngestLane(cat: LakeCatalog, db: String) {
-    private val src = Files.createTempDirectory("graft-maint-src")
-    private val ck = Files.createTempDirectory("graft-maint-ck")
-    private var n = 0
     def run(rs: Seq[(Long, String)]): Unit = {
-      val stage = Files.createTempDirectory("graft-maint-stage")
-      docsDf(rs).coalesce(1).write.parquet(s"$stage/c")
-      Files.walk(stage).filter(_.toString.endsWith(".parquet")).forEach { p =>
-        val dst = Files.copy(p, src.resolve(s"chunk$n-${p.getFileName}"))
-        Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(1_000_000L + n * 60_000L))
-        n += 1
-      }
-      val q = StreamIngest.nearDupIngest(spark, src.toString, docSchema,
-        cat, db, checkpointDir = Some(ck.toString))
-      q.processAllAvailable(); q.stop()
+      val head = StandingState.loadHead(spark, cat, db)
+      val batchIds = rs.map(_._1).toSet
+      val drops = LlmQueries.incrementalNearDup(spark,
+          cat.loadTable(db, "shingles").get.read(),
+          cat.loadTable(db, "postings").get.read(), head, docsDf(rs))
+        .select("doc_a", "doc_b").collect()
+        .map { r =>
+          val (a, b) = (r.getLong(0), r.getLong(1))
+          if (batchIds(a) && batchIds(b)) math.max(a, b)
+          else if (batchIds(a)) a else b
+        }.toSet
+      val survivors = docsDf(rs.filterNot { case (i, _) => drops(i) })
+      val sh = PrefixIndex.shingled(survivors)
+      cat.loadTable(db, "postings").get
+        .append(PrefixIndex.postings(PrefixIndex.hashed(sh), head))
+      cat.loadTable(db, "shingles").get.append(sh)
+      cat.loadTable(db, "docs").get.append(survivors)
     }
   }
 
-  private def idsOf(cat: LakeCatalog, db: String, table: String,
-      idCol: String = "doc_id"): Set[Long] =
+  private def idsOf(cat: LakeCatalog, db: String, table: String): Set[Long] =
     cat.loadTable(db, table).get.read()
-      .select(idCol).distinct().collect().map(_.getLong(0)).toSet
+      .select("doc_id").distinct().collect().map(_.getLong(0)).toSet
 
   test("doc maintenance: retire + recrawl reshape the next ingest " +
     "(stale pairs gone, rebuilt rows live), and compaction between " +
@@ -75,7 +79,7 @@ class MaintenanceSpec extends SparkSpec {
     val wh = Files.createTempDirectory("graft-maint-wh")
     val cat = new LakeCatalog(spark, wh)
     cat.createNamespace("nd")
-    StreamIngest.provisionNearDupState(cat, "nd", docSchema,
+    StandingState.provisionNearDupState(cat, "nd", docSchema,
       docsDf(Seq(1L -> dA, 2L -> dB)))
     val lane = new IngestLane(cat, "nd")
 
@@ -121,118 +125,6 @@ class MaintenanceSpec extends SparkSpec {
     assert(idsOf(cat, "nd", "postings") == expect)
   }
 
-  private val vecSchema = StructType(Seq(
-    StructField("vec_id", LongType),
-    StructField("v", ArrayType(DoubleType))))
-  private def vec(seed: Int): Array[Double] = {
-    val r = new scala.util.Random(seed)
-    Array.fill(64)(r.nextDouble() * 2 - 1)
-  }
-  private def ndv(v: Array[Double], seed: Int): Array[Double] = {
-    val r = new scala.util.Random(seed)
-    v.map(x => x * (1.0 + 0.01 * r.nextDouble()))
-  }
-  private def vecsDf(rs: Seq[(Long, Array[Double])]): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        rs.map { case (i, v) => Row(i, v.toSeq) }, 1),
-      vecSchema)
-
-  test("vector maintenance: retire + re-embed reshape the next " +
-    "vector-dedup ingest; non-finite re-embeds leave the index") {
-    val v1 = vec(11); val v2 = vec(12); val w = vec(13)
-    val wh = Files.createTempDirectory("graft-vmaint-wh")
-    val cat = new LakeCatalog(spark, wh)
-    cat.createNamespace("vd")
-    StreamIngest.provisionVectorDedupState(cat, "vd",
-      vecsDf(Seq(1L -> v1, 2L -> v2, 3L -> vec(14))))
-
-    IndexMaintenance.recrawlVectors(cat, "vd", vecsDf(Seq(1L -> w)))
-    IndexMaintenance.retireVectors(cat, "vd",
-      vecsDf(Seq(2L -> Array(0.0))).select("vec_id"))
-    // vector 3 re-embeds to a NaN vector: replaced in the landing
-    // table, RETIRED from the signature index (ingest bypass rule)
-    IndexMaintenance.recrawlVectors(cat, "vd",
-      vecsDf(Seq(3L -> { val a = vec(14); a(0) = Double.NaN; a })))
-
-    assert(idsOf(cat, "vd", "vectors", "vec_id") == Set(1L, 3L))
-    assert(idsOf(cat, "vd", "sigbands", "vec_id") == Set(1L),
-      "only finite-norm current vectors may be indexed")
-
-    //   10 = nd(old v1) → lands (1 re-embedded to w)
-    //   11 = nd(w)      → drops (rebuilt bands live)
-    //   12 = nd(old v2) → lands (2 retired)
-    val dir = Files.createTempDirectory("graft-vmaint-src")
-    vecsDf(Seq(10L -> ndv(v1, 21), 11L -> ndv(w, 22), 12L -> ndv(v2, 23)))
-      .write.parquet(s"$dir/c")
-    val q = StreamIngest.vectorDedupIngest(spark, s"$dir/c", vecSchema,
-      cat, "vd")
-    q.processAllAvailable(); q.stop()
-    assert(idsOf(cat, "vd", "vectors", "vec_id") == Set(1L, 3L, 10L, 12L),
-      s"vectors: ${idsOf(cat, "vd", "vectors", "vec_id")}")
-    assert(idsOf(cat, "vd", "sigbands", "vec_id") == Set(1L, 10L, 12L))
-  }
-
-  test("recrawlVectors crash-at-boundary (VERDICT r17 wrong #1): the " +
-    "index rebuild is ONE commit, and the only crash state degrades to " +
-    "duplicate admission — never a wrong drop — with retry converging") {
-    val v1 = vec(31); val v2 = vec(32); val w = vec(33)
-    val wh = Files.createTempDirectory("graft-crash-wh")
-    val cat = new LakeCatalog(spark, wh)
-    cat.createNamespace("vd")
-    StreamIngest.provisionVectorDedupState(cat, "vd",
-      vecsDf(Seq(1L -> v1, 2L -> v2)))
-
-    // ---- replay recrawlVectors' FIRST commit only (vec 1 re-embeds to
-    // w, vec 2 becomes non-finite) — the exact crash state: sigbands
-    // rebuilt, vectors table still holding the old embeddings
-    val updated = vecsDf(Seq(1L -> w,
-      2L -> { val a = vec(32); a(0) = Double.NaN; a }))
-    val nz = updated.filter(StreamIngest.finiteNorm)
-    val sbBefore = cat.loadTable("vd", "sigbands").get
-    val snapsBefore = sbBefore.meta.snapshots.size
-    sbBefore.replaceByKey(StreamIngest.sigBands(nz), Seq("vec_id"),
-      keys = updated.select("vec_id"))
-    // the structural fix: retire + rebuild of BOTH updated ids is ONE
-    // snapshot — there is no intermediate sigbands state to crash into
-    assert(cat.loadTable("vd", "sigbands").get.meta.snapshots.size
-      == snapsBefore + 1, "sigbands rebuild must be a single commit")
-    assert(idsOf(cat, "vd", "sigbands", "vec_id") == Set(1L),
-      "crash state: new bands live, became-non-finite id retired")
-
-    // an ingest DURING the crash window: near-dups of the content being
-    // replaced (old v1, old v2, new w) may LAND (duplicate admission of
-    // in-flight content — the benign direction; w verifies against the
-    // stored OLD v1, cosine far below tau, so no wrong drop), and a
-    // retry of the full maintenance then converges
-    val dir = Files.createTempDirectory("graft-crash-src")
-    vecsDf(Seq(10L -> ndv(v1, 41), 11L -> ndv(w, 42)))
-      .write.parquet(s"$dir/c")
-    val q = StreamIngest.vectorDedupIngest(spark, s"$dir/c", vecSchema,
-      cat, "vd")
-    q.processAllAvailable(); q.stop()
-    val landed = idsOf(cat, "vd", "vectors", "vec_id")
-    assert(landed.contains(10L) && landed.contains(11L),
-      s"crash-window arrivals must never be wrongly dropped: $landed")
-
-    // ---- retry to completion: the second run replays commit 1
-    // (idempotent by value — same bands, same delete cover) and lands
-    // commit 2; the final state equals a crash-free run's
-    IndexMaintenance.recrawlVectors(cat, "vd", updated)
-    val vecsNow = cat.loadTable("vd", "vectors").get.read()
-      .filter(col("vec_id") === 1L).collect()
-    assert(vecsNow.length == 1 &&
-      vecsNow(0).getSeq[Double](1) == w.toSeq,
-      "retry must land the re-embedded vector")
-    assert(!idsOf(cat, "vd", "vectors", "vec_id").contains(2L) ||
-      cat.loadTable("vd", "vectors").get.read()
-        .filter(col("vec_id") === 2L).collect()
-        .forall(_.getSeq[Double](1)(0).isNaN),
-      "retry must replace the became-non-finite vector")
-    assert(idsOf(cat, "vd", "sigbands", "vec_id") -- Set(10L, 11L)
-      == Set(1L), "index: only current finite vectors, rebuilt once")
-  }
-
   test("maintenance scan footprint is O(changed), measured (VERDICT " +
     "r17 #4): standing data files stay byte-identical, commit summaries " +
     "add only the changed docs' rows, and task input bytes stay far " +
@@ -243,7 +135,7 @@ class MaintenanceSpec extends SparkSpec {
     // a standing corpus big enough that an accidental table scan would
     // dominate the byte meter
     val standing = (1L to 400L).map(i => i -> words(s"w${i}x"))
-    StreamIngest.provisionNearDupState(cat, "nd", docSchema, docsDf(standing))
+    StandingState.provisionNearDupState(cat, "nd", docSchema, docsDf(standing))
 
     def fileSet(tn: String): Set[(String, Long)] =
       cat.loadTable("nd", tn).get.dataFiles
@@ -307,7 +199,7 @@ class MaintenanceSpec extends SparkSpec {
     val wh = Files.createTempDirectory("graft-empty-wh")
     val cat = new LakeCatalog(spark, wh)
     cat.createNamespace("nd")
-    StreamIngest.provisionNearDupState(cat, "nd", docSchema,
+    StandingState.provisionNearDupState(cat, "nd", docSchema,
       docsDf(Seq(1L -> dA, 2L -> words("psi"))))
     assert(idsOf(cat, "nd", "postings") == Set(1L, 2L))
 
@@ -340,10 +232,10 @@ class MaintenanceSpec extends SparkSpec {
     val wh = Files.createTempDirectory("graft-cmp-wh")
     val cat = new LakeCatalog(spark, wh)
     cat.createNamespace("nd")
-    StreamIngest.provisionNearDupState(cat, "nd", docSchema,
+    StandingState.provisionNearDupState(cat, "nd", docSchema,
       docsDf(Seq(1L -> dA)))
     val lane = new IngestLane(cat, "nd")
-    // several single-row batches → one file set per micro-batch
+    // several single-row batches → one file set per run
     lane.run(Seq(10L -> n1))
     lane.run(Seq(11L -> words("nu")))
     val postBefore = cat.loadTable("nd", "postings").get
@@ -362,46 +254,6 @@ class MaintenanceSpec extends SparkSpec {
     // nd(n1) still drops against survivor 10, novel lands
     lane.run(Seq(20L -> nd(n1), 21L -> n2))
     val expect = Set(1L, 10L, 11L, 21L)
-    assert(idsOf(cat, "nd", "docs") == expect,
-      s"docs: ${idsOf(cat, "nd", "docs")}")
-    assert(idsOf(cat, "nd", "postings") == expect)
-  }
-
-  test("maintenance lands between micro-batches of a LIVE ingest query: " +
-    "the sink's per-batch reload sees the maintained state without a " +
-    "restart") {
-    val dA = words("rho"); val dB = words("sigma"); val dC = words("tau")
-    val wh = Files.createTempDirectory("graft-live-wh")
-    val cat = new LakeCatalog(spark, wh)
-    cat.createNamespace("nd")
-    StreamIngest.provisionNearDupState(cat, "nd", docSchema,
-      docsDf(Seq(1L -> dA, 2L -> dB)))
-    val src = Files.createTempDirectory("graft-live-src")
-    val ck = Files.createTempDirectory("graft-live-ck")
-    def addChunk(n: Int, rs: Seq[(Long, String)]): Unit = {
-      val stage = Files.createTempDirectory(s"graft-live-st$n")
-      docsDf(rs).coalesce(1).write.parquet(s"$stage/c")
-      Files.walk(stage).filter(_.toString.endsWith(".parquet")).forEach { p =>
-        val dst = Files.copy(p, src.resolve(s"chunk$n-${p.getFileName}"))
-        Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(1_000_000L + n * 60_000L))
-      }
-    }
-    addChunk(0, Seq(10L -> nd(dA))) // drops against pristine doc 1
-    val q = StreamIngest.nearDupIngest(spark, src.toString, docSchema,
-      cat, "nd", checkpointDir = Some(ck.toString))
-    q.processAllAvailable()
-    assert(idsOf(cat, "nd", "docs") == Set(1L, 2L))
-
-    // the query is STILL RUNNING while maintenance commits land
-    IndexMaintenance.recrawlDocs(cat, "nd", docsDf(Seq(1L -> dC)))
-    IndexMaintenance.retireDocs(cat, "nd",
-      docsDf(Seq(2L -> "")).select("doc_id"))
-
-    //   20 = nd(old A) → lands, 21 = nd(new C) → drops, 22 = nd(B) → lands
-    addChunk(1, Seq(20L -> nd(dA), 21L -> nd(dC), 22L -> nd(dB)))
-    q.processAllAvailable(); q.stop()
-    val expect = Set(1L, 20L, 22L)
     assert(idsOf(cat, "nd", "docs") == expect,
       s"docs: ${idsOf(cat, "nd", "docs")}")
     assert(idsOf(cat, "nd", "postings") == expect)

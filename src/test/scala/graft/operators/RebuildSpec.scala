@@ -9,7 +9,6 @@ import org.apache.spark.sql.types._
 import graft.SparkSpec
 import graft.lake.LakeCatalog
 import graft.queries.LlmQueries
-import graft.streaming.StreamIngest
 
 /** Index REBUILD/republish (X52/X53 — VERDICT r17 missing #1).
   *
@@ -60,14 +59,14 @@ class RebuildSpec extends SparkSpec {
     val cat = new LakeCatalog(spark, wh)
     cat.createNamespace("nd")
     val fillers = (100L to 107L).map(i => i -> fillerOld(i.toInt))
-    StreamIngest.provisionNearDupState(cat, "nd", docSchema,
+    StandingState.provisionNearDupState(cat, "nd", docSchema,
       docsDf(Seq(1L -> sText) ++ fillers))
     // the drift: every filler re-crawled from the s1..s7 carrier to the
     // s4..s10 carrier, postings re-keyed under the STORED (old) head
     IndexMaintenance.recrawlDocs(cat, "nd",
       docsDf((100L to 107L).map(i => i -> fillerNew(i.toInt))))
 
-    val oldHead = StreamIngest.loadHead(spark, cat, "nd")
+    val oldHead = StandingState.loadHead(spark, cat, "nd")
     val shNow = cat.loadTable("nd", "shingles").get.read()
     val postOld = cat.loadTable("nd", "postings").get.read()
     val hashedNow = PrefixIndex.hashed(shNow)
@@ -111,66 +110,13 @@ class RebuildSpec extends SparkSpec {
     assert(pairs(shNow, postNow, headStored, arrival).contains((1L, 50L)),
       "post-rebuild incremental run must catch the pair")
 
-    // the streaming ingest reloads the head per micro-batch — no
-    // restart needed: the next batch drops A against the rebuilt index
-    val src = Files.createTempDirectory("graft-rbh-src")
-    arrival.coalesce(1).write.parquet(s"$src/c")
-    val q = StreamIngest.nearDupIngest(spark, s"$src/c", docSchema, cat, "nd")
-    q.processAllAvailable(); q.stop()
-    val docIds = cat.loadTable("nd", "docs").get.read()
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(!docIds.contains(50L),
-      s"arrival must drop against the rebuilt index: $docIds")
-  }
-
-  test("df-head rebuild lands between micro-batches of a LIVE ingest " +
-    "query: the per-batch head reload serves the new order without a " +
-    "restart, and arrivals drop against the re-keyed postings") {
-    val wh = Files.createTempDirectory("graft-rbl-wh")
-    val cat = new LakeCatalog(spark, wh)
-    cat.createNamespace("nd")
-    val fillers = (100L to 107L).map(i => i -> fillerOld(i.toInt))
-    StreamIngest.provisionNearDupState(cat, "nd", docSchema,
-      docsDf(Seq(1L -> sText) ++ fillers))
-    IndexMaintenance.recrawlDocs(cat, "nd",
-      docsDf((100L to 107L).map(i => i -> fillerNew(i.toInt))))
-
-    val src = Files.createTempDirectory("graft-rbl-src")
-    val ck = Files.createTempDirectory("graft-rbl-ck")
-    def addChunk(n: Int, rs: Seq[(Long, String)]): Unit = {
-      val stage = Files.createTempDirectory(s"graft-rbl-st$n")
-      docsDf(rs).coalesce(1).write.parquet(s"$stage/c")
-      Files.walk(stage).filter(_.toString.endsWith(".parquet")).forEach { p =>
-        val dst = Files.copy(p, src.resolve(s"chunk$n-${p.getFileName}"))
-        Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(1_000_000L + n * 60_000L))
-      }
-    }
-    addChunk(0, Seq(40L -> (0 until 70).map(i => s"nv$i").mkString(" ")))
-    val q = StreamIngest.nearDupIngest(spark, src.toString, docSchema,
-      cat, "nd", checkpointDir = Some(ck.toString))
-    q.processAllAvailable()
-    def docIds: Set[Long] = cat.loadTable("nd", "docs").get.read()
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(docIds.contains(40L), "pre-rebuild novel arrival must land")
-
-    // the query is STILL RUNNING; the rebuild lands between batches —
-    // the documented contract (no overlap with an in-flight batch; no
-    // restart needed, because the sink reloads the head EVERY batch).
-    // Doc 40's postings, keyed under the old head a minute ago, are
-    // re-keyed along with everything else.
-    IndexRebuild.rebuildDfHead(cat, "nd")
-
-    addChunk(1, Seq(50L -> aText,
-      51L -> (0 until 70).map(i => s"nw$i").mkString(" ")))
-    q.processAllAvailable(); q.stop()
-    assert(!docIds.contains(50L),
-      s"arrival near doc 1 must drop under the rebuilt head: $docIds")
-    assert(docIds.contains(51L), "novel arrival must still land")
-    // index lockstep: postings cover exactly the live docs
-    val postDocs = cat.loadTable("nd", "postings").get.read()
-      .select("doc_id").distinct().collect().map(_.getLong(0)).toSet
-    assert(postDocs == docIds, s"postings $postDocs vs docs $docIds")
+    // the next incremental run loads the head afresh — no restart
+    // needed: A drops against the rebuilt index read back from the lake
+    val next = pairs(cat.loadTable("nd", "shingles").get.read(),
+      cat.loadTable("nd", "postings").get.read(),
+      StandingState.loadHead(spark, cat, "nd"), arrival)
+    assert(next.contains((1L, 50L)),
+      s"arrival must drop against the rebuilt index: $next")
   }
 
   // ------------------------------------------------------------- IVF side
@@ -198,7 +144,7 @@ class RebuildSpec extends SparkSpec {
     // seeds-by-lowest-id will pick 1 (axis 0) and 2 (axis 1)
     val initial = rows(Seq(1L -> near(0, 0.01), 2L -> near(1, 0.01),
       3L -> near(0, 0.03), 4L -> near(1, 0.04), 5L -> near(0, 0.05)))
-    StreamIngest.provisionIvfState(cat, "ivf", Array(unit(0), unit(1)),
+    StandingState.provisionIvfState(cat, "ivf", Array(unit(0), unit(1)),
       initial, df => idsFn(df, Array(unit(0), unit(1))))
     cat
   }
@@ -226,7 +172,7 @@ class RebuildSpec extends SparkSpec {
     // a q184-style search against the MIXED state: route queries via
     // the NEW codebook, candidates from the OLD assignment table,
     // vectors from the landing table, exact re-rank
-    val pub = StreamIngest.loadCentroids(spark, cat, "ivf")
+    val pub = StandingState.loadCentroids(spark, cat, "ivf")
     val queries = rows(Seq(900L -> near(0, 0.02), 901L -> near(1, 0.03)))
       .select(org.apache.spark.sql.functions.col("vec_id").as("qid"),
         org.apache.spark.sql.functions.col("v").as("qv"))
@@ -276,7 +222,7 @@ class RebuildSpec extends SparkSpec {
     cat.loadTable("ivf", "vectors").get
       .addEqualityDeletes(rows(Seq(4L -> unit(0))).select("vec_id"), Seq("vec_id"))
 
-    val centsBefore = StreamIngest.loadCentroids(spark, cat, "ivf")
+    val centsBefore = StandingState.loadCentroids(spark, cat, "ivf")
 
     // a validation that rejects the candidate codebook: main unchanged
     val boom = intercept[RuntimeException] {
@@ -284,7 +230,7 @@ class RebuildSpec extends SparkSpec {
         validate = _ => throw new RuntimeException("audit rejected"))
     }
     assert(boom.getMessage == "audit rejected")
-    assert(StreamIngest.loadCentroids(spark, cat, "ivf").map(_.toSeq).toSeq
+    assert(StandingState.loadCentroids(spark, cat, "ivf").map(_.toSeq).toSeq
       == centsBefore.map(_.toSeq).toSeq,
       "failed validation must leave the published codebook untouched")
     assert(!cat.loadTable("ivf", "centroids").get.meta.branches.contains("rebuild"),
@@ -298,7 +244,7 @@ class RebuildSpec extends SparkSpec {
     val cents = IndexRebuild.rebuildIvf(cat, "ivf", 2, 2, carryFn, idsFn,
       validate = df => assert(df.count() == 2))
     // published == returned, branch gone
-    assert(StreamIngest.loadCentroids(spark, cat, "ivf").map(_.toSeq).toSeq
+    assert(StandingState.loadCentroids(spark, cat, "ivf").map(_.toSeq).toSeq
       == cents.map(_.toSeq).toSeq)
     assert(!cat.loadTable("ivf", "centroids").get.meta.branches.contains("rebuild"))
     // the retrained codebook reflects the drifted corpus: centroid 1

@@ -9,8 +9,7 @@ import org.apache.spark.sql.types._
 import graft.SparkSpec
 import graft.functions.TextOps
 import graft.lake.{LakeCatalog, Procedures}
-import graft.operators.IndexMaintenance
-import graft.streaming.StreamIngest
+import graft.operators.{IndexMaintenance, StandingState}
 
 /** Property fuzz for the MAINTAINED incremental near-dup pipeline
   * (X43 ∘ X49): random corpora with planted near-dups, random
@@ -68,7 +67,7 @@ class MaintenanceFuzzSpec extends SparkSpec {
       val wh = Files.createTempDirectory(s"graft-fuzz-wh$seed")
       val cat = new LakeCatalog(spark, wh)
       cat.createNamespace("nd")
-      StreamIngest.provisionNearDupState(cat, "nd", docSchema,
+      StandingState.provisionNearDupState(cat, "nd", docSchema,
         docsDf(stored0))
 
       // random maintenance over the stored slice: retire some, re-crawl
@@ -102,7 +101,7 @@ class MaintenanceFuzzSpec extends SparkSpec {
       val got = LlmQueries.incrementalNearDup(spark,
         cat.loadTable("nd", "shingles").get.read(),
         cat.loadTable("nd", "postings").get.read(),
-        StreamIngest.loadHead(spark, cat, "nd"),
+        StandingState.loadHead(spark, cat, "nd"),
         docsDf(batch))
         .as[(Long, Long, Double)].collect().toSet
 
@@ -132,120 +131,6 @@ class MaintenanceFuzzSpec extends SparkSpec {
           s"recrawled=${recrawled.map(_._1).sorted}\n" +
           s"got - want: ${(got -- want).toSeq.sorted}\n" +
           s"want - got: ${(want -- got).toSeq.sorted}")
-    }
-  }
-
-  private val vecSchema = StructType(Seq(
-    StructField("vec_id", LongType),
-    StructField("v", ArrayType(DoubleType))))
-  private def vecsDf(rs: Seq[(Long, Array[Double])]): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        rs.map { case (i, v) => Row(i, v.toSeq) }, 1),
-      vecSchema)
-
-  test("fuzz: maintained vector-dedup ingest ≡ greedy brute force over " +
-    "the CURRENT finite-norm state across random retire/re-embed sets") {
-    val tau = 0.9
-    for (seed <- 1 to 4) {
-      val rnd = new scala.util.Random(seed * 53)
-      def fresh(): Array[Double] = Array.fill(64)(rnd.nextDouble() * 2 - 1)
-      // sign-preserving jitter: identical signature, cosine ≈ 1 — the
-      // one dup construction whose candidates the banded index finds
-      // with certainty, making the brute-force comparison exact
-      def jitter(v: Array[Double]): Array[Double] =
-        v.map(x => x * (1.0 + 0.01 * rnd.nextDouble()))
-      var nextId = 0L
-      def id(): Long = { nextId += 1; nextId }
-      val bases = Seq.fill(10)((id(), fresh()))
-      val stored0 = bases ++ bases.filter(_ => rnd.nextInt(3) == 0)
-        .map { case (_, v) => (id(), jitter(v)) }
-      val wh = Files.createTempDirectory(s"graft-vfz-wh$seed")
-      val cat = new LakeCatalog(spark, wh)
-      cat.createNamespace("vd")
-      StreamIngest.provisionVectorDedupState(cat, "vd", vecsDf(stored0))
-
-      val shuffled = rnd.shuffle(stored0)
-      val retired = shuffled.take(rnd.nextInt(1 + stored0.size / 3))
-      val reembedded = shuffled.drop(retired.size)
-        .take(rnd.nextInt(1 + stored0.size / 3))
-        .map { case (i, _) =>
-          val nv = rnd.nextInt(4) match {
-            case 0 => Array.fill(64)(0.0) // becomes non-finite-norm
-            case _ => fresh()
-          }
-          (i, nv)
-        }
-      if (retired.nonEmpty)
-        IndexMaintenance.retireVectors(cat, "vd",
-          vecsDf(retired).select("vec_id"))
-      if (reembedded.nonEmpty)
-        IndexMaintenance.recrawlVectors(cat, "vd", vecsDf(reembedded))
-      if (seed % 2 == 0)
-        Seq("sigbands", "vectors").foreach { tn =>
-          Procedures.rewriteDataFiles(cat.loadTable("vd", tn).get,
-            Map("rewrite-all" -> "true"))
-        }
-
-      // current stored state (reference view)
-      val retiredIds = retired.map(_._1).toSet
-      val currentStored = stored0.filterNot { case (i, _) => retiredIds(i) }
-        .map { case (i, v) =>
-          (i, reembedded.collectFirst { case (ri, rv) if ri == i => rv }
-            .getOrElse(v))
-        }
-      def norm2(v: Array[Double]): Double = v.map(x => x * x).sum
-      def finite(v: Array[Double]): Boolean = {
-        val n = norm2(v); n > 0 && !n.isNaN && !n.isInfinity
-      }
-      def cos(a: Array[Double], b: Array[Double]): Double = {
-        var d = 0.0; var i = 0
-        while (i < 64) { d += a(i) * b(i); i += 1 }
-        d / math.sqrt(norm2(a) * norm2(b))
-      }
-      val storedFinite = currentStored.filter { case (_, v) => finite(v) }
-
-      // batch: jitters of current stored, jitters of earlier batch
-      // members, fresh vectors, and a zero vector (bypass)
-      val batch = scala.collection.mutable.ArrayBuffer[(Long, Array[Double])]()
-      for (_ <- 0 until 8) rnd.nextInt(4) match {
-        case 0 if storedFinite.nonEmpty =>
-          batch += ((id(), jitter(
-            storedFinite(rnd.nextInt(storedFinite.size))._2)))
-        case 1 if batch.nonEmpty =>
-          batch += ((id(), jitter(batch(rnd.nextInt(batch.size))._2)))
-        case 2 => batch += ((id(), Array.fill(64)(0.0)))
-        case _ => batch += ((id(), fresh()))
-      }
-      val src = Files.createTempDirectory(s"graft-vfz-src$seed")
-      vecsDf(batch.toSeq).coalesce(1).write.parquet(s"$src/c")
-      val q = StreamIngest.vectorDedupIngest(spark, s"$src/c", vecSchema,
-        cat, "vd", tau)
-      q.processAllAvailable(); q.stop()
-
-      // reference drop rule: a finite batch vector drops iff it
-      // cosine-verifies against CURRENT finite stored state or a
-      // smaller-id finite batch peer; non-finite batch rows bypass
-      val batchSorted = batch.toSeq.sortBy(_._1)
-      val drops = batchSorted.filter { case (i, v) =>
-        finite(v) && (
-          storedFinite.exists { case (_, sv) => cos(v, sv) >= tau } ||
-          batchSorted.exists { case (j, bv) =>
-            j < i && finite(bv) && cos(v, bv) >= tau })
-      }.map(_._1).toSet
-      val wantVec = currentStored.map(_._1).toSet ++
-        batch.map(_._1).filterNot(drops)
-      val wantIdx = storedFinite.map(_._1).toSet ++
-        batch.filter { case (i, v) => finite(v) && !drops(i) }.map(_._1)
-      def ids(tn: String): Set[Long] =
-        cat.loadTable("vd", tn).get.read()
-          .select("vec_id").distinct().collect().map(_.getLong(0)).toSet
-      assert(ids("vectors") == wantVec,
-        s"seed=$seed vectors: got ${ids("vectors").toSeq.sorted} " +
-          s"want ${wantVec.toSeq.sorted} (drops=${drops.toSeq.sorted})")
-      assert(ids("sigbands") == wantIdx,
-        s"seed=$seed sigbands: got ${ids("sigbands").toSeq.sorted} " +
-          s"want ${wantIdx.toSeq.sorted}")
     }
   }
 }

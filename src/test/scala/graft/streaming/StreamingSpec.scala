@@ -4,16 +4,18 @@ import java.nio.file.Files
 import java.sql.Timestamp
 import java.time.Instant
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.LakeStreamSink
 import org.apache.spark.sql.types._
 
 import graft.SparkSpec
 import graft.lake.LakeCatalog
 
-/** §2.10 smoke: chunked file source → (a) raw ingest into a lake table
-  * via foreachBatch append-commits, (b) watermarked tumbling-window agg
-  * to a memory sink matching the batch computation. */
+/** The `graft-lake` streaming format: the sink's per-batch commit bodies
+  * ([[LakeStreamSink]]: replay gate, conflict retries, `keys` upserts,
+  * `branch` WAP) and the source's commit-log tail (offsets, restarts,
+  * schema changes, changelog feed, rate limits). */
 class StreamingSpec extends SparkSpec {
 
   private val schema = StructType(Seq(
@@ -27,413 +29,12 @@ class StreamingSpec extends SparkSpec {
       Timestamp.from(base.plusSeconds(i * 300L)), s"t${i % 3}"))
   }
 
-  test("streaming ingest: chunked source → watermark/window agg + lake appends") {
-    val srcDir = Files.createTempDirectory("graft-stream-src")
-    val rows = mkEvents(90)
-    // 3 chunks → 3 micro-batches with maxFilesPerTrigger=1
-    rows.grouped(30).zipWithIndex.foreach { case (chunk, i) =>
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(chunk, 1), schema)
-        .write.parquet(s"$srcDir/chunk$i")
-    }
-    // file source wants a flat dir of files
-    val flat = Files.createTempDirectory("graft-stream-flat")
-    Files.walk(srcDir).filter(_.toString.endsWith(".parquet")).forEach { p =>
-      Files.copy(p, flat.resolve(s"${p.getParent.getFileName}-${p.getFileName}"))
-    }
-
-    val wh = Files.createTempDirectory("graft-stream-wh")
-    val cat = new LakeCatalog(spark, wh)
-    cat.createNamespace("db")
-    cat.createTable("db", "events_ingest", schema)
-
-    // (a) raw ingest → one append snapshot per micro-batch
-    val q1 = StreamIngest.ingestRaw(spark, flat.toString, schema, cat, "db", "events_ingest")
-    q1.processAllAvailable(); q1.stop()
-    val t = cat.loadTable("db", "events_ingest").get
-    assert(t.read().count() == 90)
-    assert(t.meta.snapshots.size == 3, "expected one commit per micro-batch")
-
-    // (b) watermarked tumbling window to memory sink == batch answer
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(flat.toString)
-    val q2 = StreamIngest.windowedCounts(stream, "ts", "event_type")
-      .writeStream.format("memory").queryName("win_counts")
-      .outputMode("complete").start()
-    q2.processAllAvailable(); q2.stop()
-
-    val streamed = spark.table("win_counts")
-      .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2))).toSet
-    val batch = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("cnt"))
-      .select(col("window.start"), col("event_type"), col("cnt"))
-      .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2))).toSet
-    assert(streamed == batch)
-  }
-
-  test("sliding-window counts: streamed hopping agg equals the batch answer, " +
-    "4 overlapping windows per event") {
-    val rows = mkEvents(60)
-    val flat = Files.createTempDirectory("graft-stream-slide")
-    rows.grouped(20).zipWithIndex.foreach { case (chunk, i) =>
-      val dir = Files.createTempDirectory(s"graft-slide-src$i")
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(chunk, 1), schema)
-        .write.parquet(s"$dir/c")
-      Files.walk(dir).filter(_.toString.endsWith(".parquet")).forEach { p =>
-        Files.copy(p, flat.resolve(s"chunk$i-${p.getFileName}"))
-      }
-    }
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(flat.toString)
-    val q = StreamIngest.slidingCounts(stream, "ts", "event_type")
-      .writeStream.format("memory").queryName("slide_counts")
-      .outputMode("complete").start()
-    q.processAllAvailable(); q.stop()
-
-    val streamed = spark.table("slide_counts")
-      .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2))).toSet
-    val batch = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
-      .groupBy(window(col("ts"), "1 hour", "15 minutes"), col("event_type"))
-      .agg(count(lit(1)).as("cnt"))
-      .select(col("window.start"), col("event_type"), col("cnt"))
-      .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2))).toSet
-    assert(streamed == batch)
-    // every event lands in exactly length/slide = 4 windows: the total
-    // of all window counts is 4 × the event count
-    assert(streamed.toSeq.map(_._3).sum == 4L * rows.size)
-  }
-
-  test("sliding approximate distinct users: streamed HLL windows equal " +
-    "the exact batch distinct (sketch state merges across micro-batches)") {
-    val userSchema = StructType(Seq(
-      StructField("event_id", LongType),
-      StructField("ts", TimestampType),
-      StructField("user_id", LongType)))
-    val base = Instant.parse("2026-01-01T00:00:00Z")
-    // 7 users cycling over 60 events, 5 min apart: every 1-hour window
-    // sees repeats WITHIN and ACROSS micro-batches, so the streamed
-    // sketch must merge state, not recount rows
-    val rows = (0 until 60).map(i => Row(i.toLong,
-      Timestamp.from(base.plusSeconds(i * 300L)), (i % 7).toLong))
-    val flat = Files.createTempDirectory("graft-stream-hll")
-    rows.grouped(20).zipWithIndex.foreach { case (chunk, i) =>
-      val dir = Files.createTempDirectory(s"graft-hll-src$i")
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(chunk, 1), userSchema)
-        .write.parquet(s"$dir/c")
-      Files.walk(dir).filter(_.toString.endsWith(".parquet")).forEach { p =>
-        Files.copy(p, flat.resolve(s"chunk$i-${p.getFileName}"))
-      }
-    }
-    val stream = spark.readStream.schema(userSchema)
-      .option("maxFilesPerTrigger", 1).parquet(flat.toString)
-    val q = StreamIngest.slidingDistinctUsers(stream, "ts", "user_id")
-      .writeStream.format("memory").queryName("slide_users")
-      .outputMode("complete").start()
-    q.processAllAvailable(); q.stop()
-    val streamed = spark.table("slide_users")
-      .collect().map(r => (r.getTimestamp(0), r.getLong(1))).toSet
-    // exact batch distinct — at 7 uniques the HLL sparse mode is exact,
-    // so streamed == exact is a deterministic equality, not a tolerance
-    val batch = spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 2), userSchema)
-      .groupBy(window(col("ts"), "1 hour", "15 minutes"))
-      .agg(count_distinct(col("user_id")).as("nd"))
-      .select(col("window.start"), col("nd"))
-      .collect().map(r => (r.getTimestamp(0), r.getLong(1))).toSet
-    assert(streamed == batch)
-    // windows fully inside the stream hold all 7 users (12 events/hour)
-    assert(streamed.exists(_._2 == 7L))
-  }
-
-  test("sliding heavy hitters: streamed Misra-Gries summaries honor the " +
-    "coverage and bound guarantees against exact per-window batch counts") {
-    val userSchema = StructType(Seq(
-      StructField("event_id", LongType),
-      StructField("ts", TimestampType),
-      StructField("user_id", LongType)))
-    val base = Instant.parse("2026-01-01T00:00:00Z")
-    // skewed keys: user 7 takes every third event, user 8 every fifth,
-    // the rest spread over 40 rares — windows see the heavies repeat
-    // WITHIN and ACROSS micro-batches, so the MG state must merge
-    val rows = (0 until 90).map { i =>
-      val u = if (i % 3 == 0) 7L else if (i % 5 == 0) 8L else 100L + (i % 40)
-      Row(i.toLong, Timestamp.from(base.plusSeconds(i * 300L)), u)
-    }
-    val flat = Files.createTempDirectory("graft-stream-mg")
-    rows.grouped(30).zipWithIndex.foreach { case (chunk, i) =>
-      val dir = Files.createTempDirectory(s"graft-mg-src$i")
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(chunk, 1), userSchema)
-        .write.parquet(s"$dir/c")
-      Files.walk(dir).filter(_.toString.endsWith(".parquet")).forEach { p =>
-        Files.copy(p, flat.resolve(s"chunk$i-${p.getFileName}"))
-      }
-    }
-    val s = 4
-    val stream = spark.readStream.schema(userSchema)
-      .option("maxFilesPerTrigger", 1).parquet(flat.toString)
-    val q = StreamIngest.slidingHeavyHitters(stream, "ts", "user_id", s)
-      .writeStream.format("memory").queryName("slide_hh")
-      .outputMode("complete").start()
-    q.processAllAvailable(); q.stop()
-    val streamed = spark.table("slide_hh")
-      .collect().map { r =>
-        r.getTimestamp(0) -> r.getSeq[Row](1)
-          .map(x => x.getLong(0) -> x.getLong(1)).toMap
-      }.toMap
-    // exact per-window batch truth
-    val exact = spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 3), userSchema)
-      .groupBy(window(col("ts"), "1 hour", "15 minutes"), col("user_id"))
-      .agg(count(lit(1)).as("cnt"))
-      .select(col("window.start"), col("user_id"), col("cnt"))
-      .collect().groupBy(_.getTimestamp(0))
-      .map { case (w, rs) =>
-        w -> rs.map(r => r.getLong(1) -> r.getLong(2)).toMap }
-    assert(streamed.keySet == exact.keySet)
-    exact.foreach { case (w, truth) =>
-      val got = streamed(w)
-      val n = truth.values.sum
-      val err = n / (s + 1) // the MG/mergeable-summaries bound
-      // coverage: every key above n/(s+1) share survives the summary
-      truth.filter(_._2 > err).foreach { case (k, c) =>
-        assert(got.contains(k),
-          s"window $w: heavy key $k (count $c, n=$n) missing from $got")
-      }
-      // bounds: reported counts are lower bounds within n/(s+1)
-      got.foreach { case (k, c) =>
-        val t = truth.getOrElse(k, 0L)
-        assert(c <= t && c >= t - err,
-          s"window $w: key $k reported $c, true $t, bound $err")
-      }
-      assert(got.size <= s, s"window $w: ${got.size} counters > s=$s")
-    }
-    // the hot key is reported at the top of every full window it leads
-    val full = exact.filter { case (_, t) => t.values.sum >= 12 }
-    assert(full.nonEmpty && full.forall { case (w, _) => streamed(w).contains(7L) })
-  }
-
-  test("dedup-at-ingest: duplicate texts within the watermark horizon land once") {
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("ts", TimestampType),
-      StructField("text", StringType)))
-    val base = Instant.parse("2026-01-01T00:00:00Z")
-    def doc(id: Long, minute: Long, text: String) =
-      Row(id, Timestamp.from(base.plusSeconds(minute * 60)), text)
-    // chunk0: two distinct + one in-batch duplicate; chunk1: cross-batch
-    // duplicate of "alpha" plus a new doc; chunk2: another "alpha" dup
-    // and a new doc — all within the 1 h horizon
-    val chunks = Seq(
-      Seq(doc(1, 0, "alpha text"), doc(2, 1, "beta text"), doc(3, 2, "alpha text")),
-      Seq(doc(4, 10, "alpha text"), doc(5, 11, "gamma text")),
-      Seq(doc(6, 20, "alpha text"), doc(7, 21, "delta text")))
-    val flat = Files.createTempDirectory("graft-dedup-flat")
-    chunks.zipWithIndex.foreach { case (chunk, i) =>
-      val dir = Files.createTempDirectory(s"graft-dedup-src$i")
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(chunk, 1), docSchema)
-        .write.parquet(s"$dir/c")
-      Files.walk(dir).filter(_.toString.endsWith(".parquet")).forEach { p =>
-        Files.copy(p, flat.resolve(s"chunk$i-${p.getFileName}"))
-      }
-    }
-    val wh = Files.createTempDirectory("graft-dedup-wh")
-    val cat = new LakeCatalog(spark, wh)
-    cat.createNamespace("db")
-    cat.createTable("db", "docs_dedup", docSchema)
-    val q = StreamIngest.dedupIngest(spark, flat.toString, docSchema,
-      cat, "db", "docs_dedup", "ts", "text")
-    q.processAllAvailable(); q.stop()
-    val landed = cat.loadTable("db", "docs_dedup").get.read()
-      .select("text").collect().map(_.getString(0))
-    assert(landed.length == landed.distinct.length,
-      s"duplicates landed: ${landed.toSeq}")
-    assert(landed.toSet ==
-      Set("alpha text", "beta text", "gamma text", "delta text"),
-      s"wrong surviving set: ${landed.toSet}")
-    // the kept copy is the FIRST micro-batch's (doc 4/6 never land)
-    val ids = cat.loadTable("db", "docs_dedup").get.read()
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(!ids.contains(4L) && !ids.contains(6L),
-      s"later duplicates should be dropped, got $ids")
-  }
-
-  test("streaming windowed counts materialize into a lake table via MERGE upserts") {
-    val srcDir = Files.createTempDirectory("graft-ups-src")
-    val rows = mkEvents(90)
-    rows.grouped(30).zipWithIndex.foreach { case (chunk, i) =>
-      spark.createDataFrame(spark.sparkContext.parallelize(chunk, 1), schema)
-        .write.parquet(s"$srcDir/chunk$i")
-    }
-    val flat = Files.createTempDirectory("graft-ups-flat")
-    // the file source orders micro-batches by modification time; stamp
-    // chunks in event-time order so the watermark never classifies a
-    // whole chunk as late (out-of-order arrival beyond the watermark is
-    // dropped by design — that's what the watermark means)
-    Files.walk(srcDir).filter(_.toString.endsWith(".parquet")).forEach { p =>
-      val chunk = p.getParent.getFileName.toString // chunk0 / chunk1 / chunk2
-      val dst = flat.resolve(s"$chunk-${p.getFileName}")
-      Files.copy(p, dst)
-      Files.setLastModifiedTime(dst, java.nio.file.attribute.FileTime.fromMillis(
-        1700000000000L + chunk.last.toInt * 60000L))
-    }
-    val wh = Files.createTempDirectory("graft-ups-wh")
-    val cat = new LakeCatalog(spark, wh)
-    cat.createNamespace("db")
-    cat.createTable("db", "win", StructType(Seq(
-      StructField("win_start", TimestampType),
-      StructField("event_type", StringType),
-      StructField("cnt", LongType))))
-    val q = StreamIngest.upsertWindowedCounts(
-      spark, flat.toString, schema, cat, "db", "win", "ts", "event_type")
-    q.processAllAvailable(); q.stop()
-    val got = cat.loadTable("db", "win").get.read()
-      .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2))).toSet
-    val batch = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("cnt"))
-      .select(col("window.start"), col("event_type"), col("cnt"))
-      .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2))).toSet
-    assert(got == batch, "materialized upsert view != batch answer")
-    // windows updated across batches went through the MERGE path
-    val t = cat.loadTable("db", "win").get
-    assert(t.meta.snapshots.exists(_.operation == "merge"))
-  }
-
-  test("streaming equality-delete upserts: O(batch) snapshots, last write wins") {
-    val kvSchema = StructType(Seq(
-      StructField("k", IntegerType), StructField("v", DoubleType)))
-    def kvDf(rows: (Int, Double)*) = spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.map { case (k, v) => Row(k, v) }, 1),
-      kvSchema)
-    val flat = Files.createTempDirectory("graft-equps-flat")
-    // batch 0: keys 1..3; batch 1: updates 2, inserts 4 (mtime-ordered)
-    Seq(Seq((1, 1.0), (2, 2.0), (3, 3.0)), Seq((2, 22.0), (4, 4.0)))
-      .zipWithIndex.foreach { case (rows, i) =>
-        val dir = Files.createTempDirectory(s"graft-equps-b$i")
-        kvDf(rows: _*).write.parquet(s"$dir/p")
-        Files.walk(dir).filter(_.toString.endsWith(".parquet")).forEach { p =>
-          val dst = flat.resolve(s"b$i-${p.getFileName}")
-          Files.copy(p, dst)
-          Files.setLastModifiedTime(dst,
-            java.nio.file.attribute.FileTime.fromMillis(1700000000000L + i * 60000L))
-        }
-      }
-    val wh = Files.createTempDirectory("graft-equps-wh")
-    val cat = new LakeCatalog(spark, wh)
-    cat.createNamespace("db")
-    cat.createTable("db", "kv", kvSchema,
-      props = Map("write.delete.mode" -> "merge-on-read"))
-    val q = StreamIngest.upsertByKeyStream(
-      spark, flat.toString, kvSchema, cat, "db", "kv", Seq("k"))
-    q.processAllAvailable(); q.stop()
-
-    val t = cat.loadTable("db", "kv").get
-    val got = t.read().collect().map(r => (r.getInt(0), r.getDouble(1))).toSet
-    assert(got == Set((1, 1.0), (2, 22.0), (3, 3.0), (4, 4.0)), s"got $got")
-    // each micro-batch = one upsert snapshot, never a target-reading join
-    assert(t.meta.snapshots.count(_.operation == "upsert") == 2)
-    assert(t.deleteFiles.count(_.kind == "equality") == 2)
-  }
-
-  test("sessionize: flatMapGroupsWithState closes sessions on watermark timeout") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val base = Instant.parse("2026-01-01T00:00:00Z")
-    def t(min: Long) = Timestamp.from(base.plusSeconds(min * 60))
-
-    val input = MemoryStream[(Timestamp, String)]
-    val sessions = StreamIngest.sessionize(
-      spark, input.toDF.toDF("ts", "user"), "ts", "user", gapMinutes = 30)
-    val q = sessions.writeStream.format("memory")
-      .queryName("sessions_out").outputMode("append").start()
-    try {
-      // u1: two events 10 min apart (one session); u2: single event;
-      // u1 again at min 100 — a 90-min gap splits into a second session
-      input.addData((t(0), "u1"), (t(10), "u1"), (t(5), "u2"))
-      q.processAllAvailable()
-      input.addData((t(100), "u1"))
-      q.processAllAvailable()
-      // push the watermark far past every lastSeen+gap, then one more
-      // trigger so the EventTimeTimeout fires for all remaining state
-      input.addData((t(1000), "u3"))
-      q.processAllAvailable()
-      input.addData((t(2000), "u3"))
-      q.processAllAvailable()
-
-      val out = spark.table("sessions_out")
-        .collect().map(r => (r.getString(0), r.getTimestamp(1),
-          r.getTimestamp(2), r.getLong(3))).toSet
-      // u1's first session: [0, 10] with 2 events (closed either by the
-      // in-batch gap at min 100 or by timeout); second session [100, 100]
-      assert(out.contains(("u1", t(0), t(10), 2L)), s"missing u1 session 1 in $out")
-      assert(out.contains(("u1", t(100), t(100), 1L)), s"missing u1 session 2 in $out")
-      assert(out.contains(("u2", t(5), t(5), 1L)), s"missing u2 session in $out")
-    } finally q.stop()
-  }
-
-  test("sessionize matches batch gaps-and-islands on random event streams") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val base = Instant.parse("2026-01-01T00:00:00Z")
-    val gapMin = 30L
-    val rnd = new scala.util.Random(20260812L)
-    // 6 keys × ~25 events over 12 hours: plenty of real session splits
-    val events = (0 until 150).map { _ =>
-      val key = s"u${rnd.nextInt(6)}"
-      val min = rnd.nextInt(12 * 60).toLong
-      (Timestamp.from(base.plusSeconds(min * 60)), key)
-    }
-
-    // ground truth: per-key sort, split on gap > 30 min
-    val truth = events.groupBy(_._2).flatMap { case (k, evs) =>
-      val ts = evs.map(_._1.getTime).sorted
-      val sessions = scala.collection.mutable.ArrayBuffer[(Long, Long, Long)]()
-      var (start, last, n) = (ts.head, ts.head, 1L)
-      ts.tail.foreach { t =>
-        if (t <= last + gapMin * 60000L) { last = t; n += 1 }
-        else { sessions += ((start, last, n)); start = t; last = t; n = 1 }
-      }
-      sessions += ((start, last, n))
-      sessions.map { case (s, e, c) => (k, s, e, c) }
-    }.toSet
-
-    val input = MemoryStream[(Timestamp, String)]
-    val q = StreamIngest.sessionize(
-      spark, input.toDF.toDF("ts", "user"), "ts", "user", gapMinutes = gapMin.toInt)
-      .writeStream.format("memory").queryName("sessions_prop")
-      .outputMode("append").start()
-    try {
-      input.addData(events: _*) // one batch: nothing is late
-      q.processAllAvailable()
-      // two flush batches: advance the watermark past every session's
-      // close point, then give the timeout a trigger to fire in
-      input.addData((Timestamp.from(base.plusSeconds(100L * 3600)), "flush"))
-      q.processAllAvailable()
-      input.addData((Timestamp.from(base.plusSeconds(200L * 3600)), "flush"))
-      q.processAllAvailable()
-
-      val got = spark.table("sessions_prop")
-        .filter(col("key") =!= "flush")
-        .collect()
-        .map(r => (r.getString(0), r.getTimestamp(1).getTime,
-          r.getTimestamp(2).getTime, r.getLong(3))).toSet
-      assert(got == truth,
-        s"streaming≠batch: missing ${truth -- got}, extra ${got -- truth}")
-    } finally q.stop()
-  }
-
   test("sink is idempotent on micro-batch redelivery (VERDICT r3 #3 restart case)") {
     val wh = Files.createTempDirectory("graft-stream-idem")
     val cat = new LakeCatalog(spark, wh)
     cat.createNamespace("db")
     cat.createTable("db", "idem", schema)
-    val sink = StreamIngest.commitBatch(cat, "db", "idem") _
+    val sink = LakeStreamSink.commitBatch(cat, "db", "idem") _
     val b0 = spark.createDataFrame(
       spark.sparkContext.parallelize(mkEvents(10), 1), schema)
 
@@ -444,12 +45,12 @@ class StreamingSpec extends SparkSpec {
     val t1 = cat.loadTable("db", "idem").get
     assert(t1.read().count() == 10, "redelivered batch landed twice")
     assert(t1.meta.snapshots.size == 1)
-    assert(t1.meta.props(StreamIngest.LastBatchProp) == "0")
+    assert(t1.meta.props(LakeStreamSink.LastBatchProp) == "0")
     // the next batch commits normally and advances the high-water mark
     sink(b0, 1L)
     val t2 = cat.loadTable("db", "idem").get
     assert(t2.read().count() == 20)
-    assert(t2.meta.props(StreamIngest.LastBatchProp) == "1")
+    assert(t2.meta.props(LakeStreamSink.LastBatchProp) == "1")
   }
 
   test("sink survives concurrent maintenance commits (reload-retry on conflict)") {
@@ -460,7 +61,7 @@ class StreamingSpec extends SparkSpec {
     val cat = new LakeCatalog(spark, wh)
     cat.createNamespace("db")
     cat.createTable("db", "race", schema)
-    val sink = StreamIngest.commitBatch(cat, "db", "race") _
+    val sink = LakeStreamSink.commitBatch(cat, "db", "race") _
     val b = spark.createDataFrame(
       spark.sparkContext.parallelize(mkEvents(5), 1), schema)
     sink(b, 0L) // seed so the compactor has files to rewrite
@@ -490,7 +91,7 @@ class StreamingSpec extends SparkSpec {
 
     val t = cat.loadTable("db", "race").get
     assert(t.read().count() == 13 * 5, "a racing batch was lost or doubled")
-    assert(t.meta.props(StreamIngest.LastBatchProp) == "12")
+    assert(t.meta.props(LakeStreamSink.LastBatchProp) == "12")
     assert(maintenance > 0, "maintenance never committed — race untested")
   }
 
@@ -525,7 +126,7 @@ class StreamingSpec extends SparkSpec {
       val b = cat.loadTable("db", "mB").get
       assert(b.meta.snapshots.count(_.operation == "append") == 2,
         "one append snapshot per delivered micro-batch")
-      assert(b.meta.props.contains(StreamIngest.LastBatchProp),
+      assert(b.meta.props.contains(LakeStreamSink.LastBatchProp),
         "batch id must ride the commit for replay skipping")
     } finally q.stop()
 
@@ -553,13 +154,17 @@ class StreamingSpec extends SparkSpec {
     val got = cat.loadTable("db", "mU").get.read().collect()
       .map(r => r.getInt(0) -> r.getString(1)).toSet
     assert(got == Set(1 -> "x", 2 -> "Y2", 3 -> "z"), s"got $got")
+    // each micro-batch = one upsert snapshot carrying one equality-delete
+    // file, never a target-reading join
     assert(cat.loadTable("db", "mU").get.meta.snapshots
       .count(_.operation == "upsert") == 2)
+    assert(cat.loadTable("db", "mU").get.deleteFiles
+      .count(_.kind == "equality") == 2)
 
     // in-batch duplicate keys would BOTH survive the one-sequence-number
     // upsert — the batch body must refuse, not silently double the key
     val dup = intercept[IllegalArgumentException](
-      StreamIngest.upsertBatch(cat, "db", "mU", Seq("id"))(
+      LakeStreamSink.upsertBatch(cat, "db", "mU", Seq("id"))(
         batch((7, "a"), (7, "b"))))
     assert(dup.getMessage.contains("multiple rows"))
 
@@ -1014,483 +619,5 @@ class StreamingSpec extends SparkSpec {
     val s3 = mkSource()
     assert(endOf(s3.getOffset) == ids(3),
       "restart after delivery must advance the cap from the persisted cursor")
-  }
-
-  test("streaming NEAR-dup ingest (X44): batch docs dedup against the " +
-    "standing lake state, survivors grow it, later arrivals dedup " +
-    "against earlier survivors") {
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType)))
-    def doc(seed: Int): String = {
-      val r = new scala.util.Random(seed)
-      (0 until 40).map(_ => s"w${r.nextInt(1000000)}").mkString(" ")
-    }
-    val d1 = doc(71); val d2 = doc(72)
-    val n1 = doc(81); val n2 = doc(82); val n3 = doc(83)
-    def nd(s: String) = s.replaceFirst("w\\d+", "changed") // jac ≈ 0.85
-
-    val wh = Files.createTempDirectory("graft-ndup-wh")
-    val cat = new LakeCatalog(spark, wh)
-    cat.createNamespace("nd")
-    StreamIngest.provisionNearDupState(cat, "nd", docSchema,
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(Seq(Row(1L, d1), Row(2L, d2)), 1),
-        docSchema))
-
-    // ids chosen so expectations hold under ANY micro-batching: each
-    // duplicate's id is larger than its original's
-    val chunks = Seq(
-      Seq(Row(10L, nd(d1)), // near-dups STORED doc 1 → dropped
-        Row(11L, n1), // novel → lands
-        Row(12L, nd(n1)), // within-batch near-dup of 11 → dropped
-        Row(13L, n2)), // novel → lands
-      Seq(Row(20L, nd(n1)), // near-dups the GROWN state (doc 11) → dropped
-        Row(21L, n3), // novel → lands
-        Row(22L, d2))) // EXACT duplicate of stored doc 2 → dropped
-    val flat = Files.createTempDirectory("graft-ndup-flat")
-    chunks.zipWithIndex.foreach { case (chunk, i) =>
-      val dir = Files.createTempDirectory(s"graft-ndup-src$i")
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(chunk, 1), docSchema)
-        .write.parquet(s"$dir/c")
-      Files.walk(dir).filter(_.toString.endsWith(".parquet")).forEach { p =>
-        val dst = Files.copy(p, flat.resolve(s"chunk$i-${p.getFileName}"))
-        // pin trigger order: the grown-state expectations (20 dropped
-        // against 11) need chunk0 processed first, and the copies
-        // otherwise share mod-time granularity (ADVICE r16 low)
-        Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(1_000_000L + i * 60_000L))
-      }
-    }
-    val q = StreamIngest.nearDupIngest(spark, flat.toString, docSchema,
-      cat, "nd")
-    q.processAllAvailable(); q.stop()
-
-    val expect = Set(1L, 2L, 11L, 13L, 21L)
-    def idsOf(table: String): Set[Long] =
-      cat.loadTable("nd", table).get.read()
-        .select("doc_id").distinct().collect().map(_.getLong(0)).toSet
-    assert(idsOf("docs") == expect, s"docs: ${idsOf("docs")}")
-    // the index tables grew in lockstep — later batches really joined
-    // against survivors' postings, and dropped docs left no index rows
-    assert(idsOf("shingles") == expect, s"shingles: ${idsOf("shingles")}")
-    assert(idsOf("postings") == expect, s"postings: ${idsOf("postings")}")
-    // the head stays the provisioned order (staleness is cost, not
-    // correctness — see provisionNearDupState scaladoc)
-    val headRows = cat.loadTable("nd", "dfhead").get.read().count()
-    assert(headRows == 0L, // 2-doc corpus: every class df < DfFloor
-      s"head should be the provisioned (empty) order, got $headRows rows")
-  }
-
-  test("streaming VECTOR dedup ingest (X48): batches dedup against stored " +
-    "embeddings by banded signature + exact cosine; state grows; zero " +
-    "vectors bypass the comparison and land") {
-    val vecSchema = StructType(Seq(
-      StructField("vec_id", LongType),
-      StructField("v", ArrayType(DoubleType))))
-    def vec(seed: Int): Array[Double] = {
-      val r = new scala.util.Random(seed)
-      Array.fill(64)(r.nextDouble() * 2 - 1)
-    }
-    // sign-preserving scale jitter: identical signature, cosine ≈ 1
-    def nd(v: Array[Double], seed: Int): Array[Double] = {
-      val r = new scala.util.Random(seed)
-      v.map(x => x * (1.0 + 0.01 * r.nextDouble()))
-    }
-    val v1 = vec(31); val v2 = vec(32)
-    val n1 = vec(41); val n2 = vec(42); val n3 = vec(43)
-    val wh = Files.createTempDirectory("graft-vdup-wh")
-    val cat = new LakeCatalog(spark, wh)
-    cat.createNamespace("vd")
-    def rows(rs: Seq[(Long, Array[Double])]): DataFrame =
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(
-          rs.map { case (i, v) => Row(i, v.toSeq) }, 1),
-        vecSchema)
-    StreamIngest.provisionVectorDedupState(cat, "vd",
-      rows(Seq(1L -> v1, 2L -> v2)))
-
-    val chunks = Seq(
-      Seq(10L -> nd(v1, 51), // near-dups STORED vector 1 → dropped
-        11L -> n1, // novel → lands
-        12L -> nd(n1, 52), // within-batch near-dup of 11 → dropped
-        13L -> n2), // novel → lands
-      Seq(20L -> nd(n1, 53), // near-dups the GROWN state (11) → dropped
-        21L -> n3, // novel → lands
-        22L -> Array.fill(64)(0.0)), // zero vector → bypasses, lands
-      // arrives AFTER the zero vector landed: all-nonnegative, so its
-      // signature is the same all-ones pattern a (wrongly) indexed zero
-      // vector would carry in every band — pre-fix that collision
-      // "verified" at NaN cosine and silently dropped this row
-      // (ADVICE r16 high); it must land
-      Seq(30L -> Array.fill(64)(0.5),
-        // NaN element → NaN norm → bypasses (NOT self-dropped via NaN
-        // cosine), lands, never indexed
-        31L -> { val a = vec(44); a(0) = Double.NaN; a }))
-    val flat = Files.createTempDirectory("graft-vdup-flat")
-    chunks.zipWithIndex.foreach { case (chunk, i) =>
-      val dir = Files.createTempDirectory(s"graft-vdup-src$i")
-      rows(chunk).write.parquet(s"$dir/c")
-      Files.walk(dir).filter(_.toString.endsWith(".parquet")).forEach { p =>
-        val dst = Files.copy(p, flat.resolve(s"chunk$i-${p.getFileName}"))
-        // pin trigger order (grown-state and post-zero-vector arcs are
-        // cross-batch); copies otherwise share mod-time granularity
-        Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(1_000_000L + i * 60_000L))
-      }
-    }
-    val q = StreamIngest.vectorDedupIngest(spark, flat.toString, vecSchema,
-      cat, "vd")
-    q.processAllAvailable(); q.stop()
-
-    val expect = Set(1L, 2L, 11L, 13L, 21L, 22L, 30L, 31L)
-    def idsOf(table: String): Set[Long] =
-      cat.loadTable("vd", table).get.read()
-        .select("vec_id").distinct().collect().map(_.getLong(0)).toSet
-    assert(idsOf("vectors") == expect, s"vectors: ${idsOf("vectors")}")
-    // the signature index grew in lockstep — later batches joined
-    // against survivors' bands — but NEVER holds a non-finite-norm
-    // vector: indexing one would poison every band it touches with
-    // NaN-cosine "verified" drops
-    assert(idsOf("sigbands") == expect -- Set(22L, 31L),
-      s"sigbands: ${idsOf("sigbands")}")
-  }
-
-  test("streaming IVF index ingest (X51): arrivals route through the " +
-    "STORED codebook into the assignment index; state grows; restarts " +
-    "with a persistent checkpoint stay idempotent") {
-    val vecSchema = StructType(Seq(
-      StructField("vec_id", LongType),
-      StructField("v", ArrayType(DoubleType))))
-    // two orthogonal centroids; test vectors sit near one or the other,
-    // so expected buckets are unambiguous under cosine
-    def unit(axis: Int): Array[Double] =
-      Array.tabulate(8)(i => if (i == axis) 1.0 else 0.0)
-    def near(axis: Int, eps: Double): Array[Double] =
-      Array.tabulate(8)(i => if (i == axis) 1.0 else eps)
-    val cents = Array(unit(0), unit(1))
-    def rows(rs: Seq[(Long, Array[Double])]): DataFrame =
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(
-          rs.map { case (i, v) => Row(i, v.toSeq) }, 1),
-        vecSchema)
-    val assignFn = (df: DataFrame, cs: Array[Array[Double]]) =>
-      graft.queries.LlmQueries.ivfAssignCompiled(
-        spark, df, "vec_id", "v", cs, 1)
-    val wh = Files.createTempDirectory("graft-ivfing-wh")
-    val cat = new LakeCatalog(spark, wh)
-    cat.createNamespace("ivf")
-    StreamIngest.provisionIvfState(cat, "ivf", cents,
-      rows(Seq(1L -> near(0, 0.01))), df => assignFn(df, cents))
-
-    val src = Files.createTempDirectory("graft-ivfing-src")
-    val ck = Files.createTempDirectory("graft-ivfing-ck")
-    val chunks = Seq(
-      Seq(10L -> near(0, 0.02), 11L -> near(1, 0.02)),
-      Seq(20L -> near(1, 0.03)))
-    chunks.zipWithIndex.foreach { case (chunk, i) =>
-      val stage = Files.createTempDirectory(s"graft-ivfing-st$i")
-      rows(chunk).coalesce(1).write.parquet(s"$stage/c")
-      Files.walk(stage).filter(_.toString.endsWith(".parquet")).forEach { pp =>
-        val dst = Files.copy(pp, src.resolve(s"chunk$i-${pp.getFileName}"))
-        Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(1_000_000L + i * 60_000L))
-      }
-    }
-    val q1 = StreamIngest.ivfIngest(spark, src.toString, vecSchema,
-      cat, "ivf", assignFn, checkpointDir = Some(ck.toString))
-    q1.processAllAvailable(); q1.stop()
-
-    def asg(): Map[Long, Long] =
-      cat.loadTable("ivf", "assign").get.read()
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(asg() == Map(1L -> 0L, 10L -> 0L, 11L -> 1L, 20L -> 1L),
-      s"assignments: ${asg()}")
-    assert(cat.loadTable("ivf", "vectors").get.read().count() == 4L)
-
-    // restart over the SAME source + checkpoint: nothing re-lands (the
-    // batch-id gate + checkpoint make redelivery a no-op)
-    val q2 = StreamIngest.ivfIngest(spark, src.toString, vecSchema,
-      cat, "ivf", assignFn, checkpointDir = Some(ck.toString))
-    q2.processAllAvailable(); q2.stop()
-    assert(cat.loadTable("ivf", "vectors").get.read().count() == 4L,
-      "restart re-landed vectors")
-    assert(asg().size == 4, "restart re-landed assignments")
-
-    // ---- restart ACROSS a retrain (X52 ∘ X51 — VERDICT r17 #1): the
-    // occupancy audit fires, the codebook is rebuilt on the CURRENT
-    // lake corpus and WAP-published, the standing corpus is reassigned
-    // in one snapshot, and the SAME checkpoint resumes the stream
-    // against the NEW codebook — batch ids continue, nothing replays,
-    // and new arrivals route through the retrained centroids.
-    val cents2 = graft.operators.IndexRebuild.rebuildIvf(
-      cat, "ivf", 2, 2,
-      (df, cs) => graft.queries.LlmQueries.ivfAssignCarry(spark, df, cs),
-      assignFn,
-      validate = df => assert(df.count() == 2))
-    // seeds were vecs 1 and 10 (both axis 0) — the retrain is free to
-    // move the codebook; what the stream contract needs is that the
-    // PUBLISHED artifact and the standing assignments agree
-    val pubCents = StreamIngest.loadCentroids(spark, cat, "ivf")
-    assert(pubCents.map(_.toSeq).toSeq == cents2.map(_.toSeq).toSeq)
-    val expectStanding = assignFn(
-      cat.loadTable("ivf", "vectors").get.read(), cents2)
-      .collect().map(r => r.getLong(0) -> r.getInt(1).toLong).toMap
-    assert(asg() == expectStanding,
-      s"standing assignments must be consistent with the new codebook: ${asg()}")
-
-    // resume: one NEW chunk arrives after the retrain
-    val late = Seq(30L -> near(1, 0.01))
-    val stage = Files.createTempDirectory("graft-ivfing-st9")
-    rows(late).coalesce(1).write.parquet(s"$stage/c")
-    Files.walk(stage).filter(_.toString.endsWith(".parquet")).forEach { pp =>
-      val dst = Files.copy(pp, src.resolve(s"chunk9-${pp.getFileName}"))
-      Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(2_000_000L))
-    }
-    val q3 = StreamIngest.ivfIngest(spark, src.toString, vecSchema,
-      cat, "ivf", assignFn, checkpointDir = Some(ck.toString))
-    q3.processAllAvailable(); q3.stop()
-    assert(cat.loadTable("ivf", "vectors").get.read().count() == 5L,
-      "resume must land exactly the new chunk (old batches gated)")
-    val expect30 = assignFn(rows(late), cents2)
-      .collect().map(_.getInt(1).toLong).head
-    assert(asg().get(30L).contains(expect30),
-      s"the resumed stream must route arrivals through the NEW codebook: ${asg()}")
-    assert(asg().size == 5, "resume must not duplicate assignments")
-  }
-
-  test("streaming k-NN graph ingest (X58): arrivals join the standing " +
-    "graph (new edge lists + affected standing anchors rebuilt) with " +
-    "the edges always ≡ a from-scratch build; checkpoint restarts stay " +
-    "idempotent and resume across a batch retire") {
-    val vecSchema = StructType(Seq(
-      StructField("vec_id", LongType),
-      StructField("v", ArrayType(DoubleType))))
-    val rnd = new scala.util.Random(17)
-    def vec(): Array[Double] = Array.fill(64)(rnd.nextDouble() * 2 - 1)
-    def rows(rs: Seq[(Long, Array[Double])]): DataFrame =
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(
-          rs.map { case (i, v) => Row(i, v.toSeq) }, 1),
-        vecSchema)
-    var corpus = (1L to 20L).map(i => i -> vec())
-    val wh = Files.createTempDirectory("graft-ging-wh")
-    val cat = new LakeCatalog(spark, wh)
-    cat.createNamespace("gx")
-    graft.operators.GraphIndex.provision(cat, "gx", rows(corpus))
-
-    def edgeSet(c: LakeCatalog): Set[(Long, Int, Long, Double, Boolean)] =
-      c.loadTable("gx", "gedges").get.read().collect().map(r =>
-        (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3),
-          r.getBoolean(4))).toSet
-    def freshBuild(cur: Seq[(Long, Array[Double])])
-        : Set[(Long, Int, Long, Double, Boolean)] = {
-      val ref = new LakeCatalog(spark,
-        Files.createTempDirectory("graft-ging-ref"))
-      ref.createNamespace("gx")
-      graft.operators.GraphIndex.provision(ref, "gx", rows(cur))
-      edgeSet(ref)
-    }
-
-    val src = Files.createTempDirectory("graft-ging-src")
-    val ck = Files.createTempDirectory("graft-ging-ck")
-    var n = 0
-    def feed(rs: Seq[(Long, Array[Double])]): Unit = {
-      val stage = Files.createTempDirectory(s"graft-ging-st$n")
-      rows(rs).coalesce(1).write.parquet(s"$stage/c")
-      Files.walk(stage).filter(_.toString.endsWith(".parquet")).forEach { p =>
-        val dst = Files.copy(p, src.resolve(s"chunk$n-${p.getFileName}"))
-        Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(1_000_000L + n * 60_000L))
-        n += 1
-      }
-    }
-    def run(): Unit = {
-      val q = StreamIngest.graphIngest(spark, src.toString, vecSchema,
-        cat, "gx", checkpointDir = Some(ck.toString))
-      q.processAllAvailable(); q.stop()
-    }
-
-    // batch 1: two arrivals + a zero-norm bypass
-    val b1 = Seq(101L -> vec(), 102L -> vec())
-    feed(b1 :+ (103L -> Array.fill(64)(0.0)))
-    run()
-    corpus = corpus ++ b1
-    val ids1 = cat.loadTable("gx", "gvec").get.read()
-      .select("vec_id").collect().map(_.getLong(0)).toSet
-    assert(ids1 == corpus.map(_._1).toSet,
-      s"zero-norm arrival must bypass the graph corpus: $ids1")
-    assert(edgeSet(cat) == freshBuild(corpus),
-      "post-ingest edges must equal a from-scratch build")
-
-    // restart with NO new data: the gate drops redelivery whole
-    val head = cat.loadTable("gx", "gedges").get.currentSnapshot.get.id
-    run()
-    assert(cat.loadTable("gx", "gedges").get.currentSnapshot.get.id == head,
-      "an idle restart must not re-commit")
-
-    // maintenance between runs (the rebuild-era restart posture): a
-    // takedown retires a standing vertex, then the stream RESUMES from
-    // the same checkpoint and keeps ingesting against the maintained
-    // graph
-    graft.operators.GraphIndex.retire(cat, "gx",
-      rows(Seq(5L -> Array.empty[Double])).select("vec_id"))
-    corpus = corpus.filterNot(_._1 == 5L)
-    val b2 = Seq(201L -> vec())
-    feed(b2)
-    run()
-    corpus = corpus ++ b2
-    assert(edgeSet(cat) == freshBuild(corpus),
-      "resume across maintenance must keep edges ≡ from-scratch")
-  }
-
-  test("streaming BM25 ingest (X57): arrivals fold into the maintained " +
-    "inverted index exactly-once (marker-gated counters, batch-gated " +
-    "final commit) and search stays ≡ a from-scratch index; the stream " +
-    "resumes across a batch retire") {
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType)))
-    def docsDf(rs: Seq[(Long, String)]): DataFrame =
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(rs.map { case (i, t) => Row(i, t) }, 1),
-        docSchema)
-    val words = Seq("spark", "table", "row", "scan", "hash", "sort", "the")
-    def doc(i: Long): String =
-      (0 until (3 + (i % 5).toInt))
-        .map(j => words(((i + j) % words.length).toInt)).mkString(" ")
-    var corpus = (1L to 15L).map(i => i -> doc(i))
-    val wh = Files.createTempDirectory("graft-bming-wh")
-    val cat = new LakeCatalog(spark, wh)
-    cat.createNamespace("ix")
-    graft.operators.Bm25Index.provision(cat, "ix", docsDf(corpus))
-
-    val terms = Seq("spark", "hash")
-    def searchRows(c: LakeCatalog): Seq[(Long, Double)] =
-      graft.operators.Bm25Index.search(c, "ix", terms, 10)
-        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    def freshSearch(cur: Seq[(Long, String)]): Seq[(Long, Double)] = {
-      val ref = new LakeCatalog(spark,
-        Files.createTempDirectory("graft-bming-ref"))
-      ref.createNamespace("ix")
-      graft.operators.Bm25Index.provision(ref, "ix", docsDf(cur))
-      searchRows(ref)
-    }
-
-    val src = Files.createTempDirectory("graft-bming-src")
-    val ck = Files.createTempDirectory("graft-bming-ck")
-    var n = 0
-    def feed(rs: Seq[(Long, String)]): Unit = {
-      val stage = Files.createTempDirectory(s"graft-bming-st$n")
-      docsDf(rs).coalesce(1).write.parquet(s"$stage/c")
-      Files.walk(stage).filter(_.toString.endsWith(".parquet")).forEach { p =>
-        val dst = Files.copy(p, src.resolve(s"chunk$n-${p.getFileName}"))
-        Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(1_000_000L + n * 60_000L))
-        n += 1
-      }
-    }
-    def run(): Unit = {
-      val q = StreamIngest.bm25Ingest(spark, src.toString, docSchema,
-        cat, "ix", checkpointDir = Some(ck.toString))
-      q.processAllAvailable(); q.stop()
-    }
-
-    // two streamed batches land as ordinary index maintenance
-    val b1 = Seq(101L -> doc(101L), 102L -> doc(102L))
-    feed(b1); run()
-    corpus = corpus ++ b1
-    assert(searchRows(cat) == freshSearch(corpus),
-      "post-ingest search must equal a from-scratch index")
-
-    // idle restart: the lens-table gate drops redelivery whole
-    val head = cat.loadTable("ix", "lens").get.currentSnapshot.get.id
-    run()
-    assert(cat.loadTable("ix", "lens").get.currentSnapshot.get.id == head,
-      "an idle restart must not re-commit")
-
-    // nightly batch maintenance between restarts (its own eventId
-    // space — markers e<id> vs the stream's s<batchId>): retire one
-    // doc, then the stream resumes from its checkpoint and the index
-    // keeps tracking the merged history
-    graft.operators.Bm25Index.retire(cat, "ix",
-      docsDf(Seq(3L -> "")).select("doc_id"), eventId = 1)
-    corpus = corpus.filterNot(_._1 == 3L)
-    val b2 = Seq(201L -> doc(201L))
-    feed(b2); run()
-    corpus = corpus ++ b2
-    assert(searchRows(cat) == freshSearch(corpus),
-      "resume across batch maintenance must keep search ≡ from-scratch")
-  }
-
-  test("streaming moment-state maintenance (X56): embedding batches fold " +
-    "into the standing cells via the decimal group law, the watermark " +
-    "doubles as the replay gate, and the maintained cells stay " +
-    "bit-identical to a recompute over everything ingested") {
-    val vecSchema = StructType(Seq(
-      StructField("vec_id", LongType),
-      StructField("v", ArrayType(DoubleType))))
-    val d = 8
-    val rnd = new scala.util.Random(23)
-    def vec(): Array[Double] = Array.fill(d)(rnd.nextDouble() * 2 - 1)
-    def rows(rs: Seq[(Long, Array[Double])]): DataFrame =
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(
-          rs.map { case (i, v) => Row(i, v.toSeq) }, 1),
-        vecSchema)
-    val corpus = (1L to 10L).map(i => i -> vec())
-    val wh = Files.createTempDirectory("graft-moming-wh")
-    val cat = new LakeCatalog(spark, wh)
-    cat.createNamespace("mx")
-    graft.operators.MomentState.provision(cat, "mx", rows(corpus), d)
-
-    val src = Files.createTempDirectory("graft-moming-src")
-    val ck = Files.createTempDirectory("graft-moming-ck")
-    var n = 0
-    def feed(rs: Seq[(Long, Array[Double])]): Unit = {
-      val stage = Files.createTempDirectory(s"graft-moming-st$n")
-      rows(rs).coalesce(1).write.parquet(s"$stage/c")
-      Files.walk(stage).filter(_.toString.endsWith(".parquet")).forEach { p =>
-        val dst = Files.copy(p, src.resolve(s"chunk$n-${p.getFileName}"))
-        Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(1_000_000L + n * 60_000L))
-        n += 1
-      }
-    }
-    def run(): Unit = {
-      val q = StreamIngest.momentIngest(spark, src.toString, vecSchema,
-        cat, "mx", d, checkpointDir = Some(ck.toString))
-      q.processAllAvailable(); q.stop()
-    }
-
-    feed(Seq(101L -> vec(), 102L -> vec()))
-    feed(Seq(103L -> vec()))
-    run()
-
-    // bit-exact identity vs one recompute over everything ingested:
-    // initial corpus ∪ the fed batches read back from the source dir
-    // (parquet round-trips the doubles exactly)
-    def cells(c: LakeCatalog): (Long, Seq[java.math.BigDecimal]) = {
-      val (cn, mu, mom) = graft.operators.MomentState.load(c, "mx", d)
-      (cn, (mu ++ mom.flatten).toSeq)
-    }
-    val union = rows(corpus).union(
-      spark.read.schema(vecSchema).parquet(src.toString)
-        .select(col("vec_id"), col("v")))
-    val ref = new LakeCatalog(spark,
-      Files.createTempDirectory("graft-moming-ref"))
-    ref.createNamespace("mx")
-    graft.operators.MomentState.provision(ref, "mx", union, d)
-    assert(cells(cat) == cells(ref),
-      "maintained cells must be bit-identical to a recompute over " +
-        "everything ingested")
-    assert(graft.operators.MomentState.watermark(cat, "mx") == 2L,
-      "two micro-batches must advance the watermark to 2")
-
-    // idle restart: the watermark gate drops redelivery whole
-    run()
-    assert(graft.operators.MomentState.watermark(cat, "mx") == 2L,
-      "an idle restart must not re-apply any delta")
   }
 }
