@@ -32,11 +32,11 @@ class LakeExtensions extends (SparkSessionExtensions => Unit) {
 object LakeExtensions {
   val WarehouseConf = "spark.graft.warehouse"
 
-  /** Optional session principal for the DSv2 path: when set, the table
-    * grants model (M10, lake_formation_setup.py:93-145) gates native
-    * `lake.db.t` reads and writes exactly as it gates dispatcher
-    * statements; unset, the registered catalog stays the administrative
-    * surface it was through round 5. */
+  /** Optional session principal for direct `spark.sql` users of the
+    * DSv2 path: when set, the table grants model (M10,
+    * lake_formation_setup.py:93-145) gates native `lake.db.t` reads and
+    * writes; unset, the registered catalog is administrative. A
+    * [[LakeSql.run]] statement checks its own principal instead. */
   val PrincipalConf = "spark.graft.principal"
 
   /** The codegen'd fused-loop cosine expression — the same node the
@@ -63,12 +63,21 @@ private[lake] object Grants {
     if (!held.contains("ALL") && !held.contains(perm))
       throw new AccessDeniedException(s"principal $principal lacks $perm on $name")
 
-  /** No [[LakeExtensions.PrincipalConf]] principal configured →
-    * unrestricted administrative session; otherwise check the table's
-    * grants. */
+  /** The principal a gate checks: the one a running [[LakeSql.run]]
+    * statement pinned (None = administrative), else the session's
+    * [[LakeExtensions.PrincipalConf]]; unset → unrestricted. */
+  def principal(session: org.apache.spark.sql.SparkSession): Option[String] =
+    LakeSql.pinned match {
+      case Some(pin) => pin.principal
+      case None => session.conf.getOption(LakeExtensions.PrincipalConf)
+    }
+
   def require(session: org.apache.spark.sql.SparkSession,
       t: LakeTable, perm: String): Unit =
-    session.conf.getOption(LakeExtensions.PrincipalConf).foreach { p =>
+    require(principal(session), t, perm)
+
+  def require(principal: Option[String], t: LakeTable, perm: String): Unit =
+    principal.foreach { p =>
       check(p, t.meta.grants.getOrElse(p, Nil), perm, t.name)
     }
 }

@@ -7,17 +7,17 @@ import org.apache.spark.sql.connector.read.{LocalScan, Scan}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native `CALL lake.system.<proc>(…)` procedures (Spark 4's DSv2
-  * ProcedureCatalog) — the same maintenance surface the LakeSql
-  * dispatcher exposes (`CALL rewrite_data_files/expire_snapshots/…`,
-  * reference: README.md:25-38), typed directly at a `spark-sql` prompt.
-  * Spark binds named arguments (`table => 'db.t'`) to the declared
-  * parameters, so the reference's own CALL spelling works verbatim with
-  * the catalog prefix.
+/** `CALL lake.system.<proc>(…)` procedures (Spark 4's DSv2
+  * ProcedureCatalog) — the one CALL path (`CALL rewrite_data_files/
+  * expire_snapshots/…`, reference: README.md:25-38): [[LakeSql.run]]
+  * sends bare and `system.` names here, and a `spark-sql` prompt types
+  * them with the catalog prefix. Spark binds named arguments
+  * (`table => 'db.t'`) to the declared parameters, so the reference's
+  * own CALL spelling works verbatim.
   *
   * Procedures execute driver-side (they orchestrate metadata commits;
   * any heavy lifting — compaction rewrites — launches distributed Spark
-  * jobs inside [[Procedures]] exactly as the dispatcher path does) and
+  * jobs inside [[Procedures]]) and
   * return their result rows through a [[LocalScan]].
   */
 private[lake] object LakeProcedures {
@@ -223,8 +223,8 @@ private[lake] object LakeProcedures {
   /** One fixed-signature procedure: `bind` is identity (Spark aligns the
     * CALL's named/positional args to `params` and applies defaults), and
     * `call` loads the table fresh, enforces `perm` for the session
-    * principal (ALTER for maintenance procedures — the dispatcher's rule
-    * for CALL — SELECT for read-only ones), runs the body, and wraps the
+    * principal (ALTER for maintenance procedures, SELECT for read-only
+    * ones), runs the body, and wraps the
     * result rows in a LocalScan. */
   private def proc(
       cat: LakeCatalog,

@@ -36,7 +36,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *  - DELETEd coordinates land in a position-delete parquet file;
   *  - UPDATEd rows land in a rewrite data file (v3: with their `_row_id`
   *    carried through the scan's metadata projection, preserving lineage
-  *    exactly like the dispatcher's MoR update);
+  *    exactly like [[LakeTable.update]]'s MoR path);
   *  - MERGE-inserted rows land in a plain data file whose v3 row-id
   *    range is minted at commit time.
   *
@@ -49,8 +49,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * committing deletes against rewritten files (the reason is spelled
   * out on [[LakeDeltaBatchWrite]]). This class serves merge-on-read
   * tables; copy-on-write tables plan through
-  * [[LakeCowRowLevelOperation]]. The LakeSql dispatcher remains the
-  * fallback surface for all three statements.
+  * [[LakeCowRowLevelOperation]]. This is the one SQL path for all three
+  * statements: [[LakeSql.run]] hands them to Spark.
   */
 private[lake] class LakeRowLevelOperation(
     t: LakeTable, cmd: RowLevelOperation.Command) extends SupportsDelta {
@@ -194,7 +194,7 @@ private[lake] case class LakeDeltaWriteConf(
     partitionCols: Seq[String] = Nil,
     /** "position" (classic parquet coordinates) or "dv" (M37 deletion
       * vectors): the native DML writers honor the table's
-      * write.delete.format like the dispatcher path does. */
+      * write.delete.format like [[LakeTable]]'s DataFrame DML does. */
     deleteFormat: String = "position")
 
 /** One data file written by a task: path, row count, and the partition
@@ -205,8 +205,8 @@ private[lake] case class DataFilePart(
 
 /** Internal-value → hive-decoded-external partition rendering for the
   * executor-side writers. The rendered string MUST be byte-identical to
-  * what [[LakeTable.partitionValuesFromPath]] records for dispatcher
-  * writes (Spark's hive-path encode → URLDecoder decode round-trip), or
+  * what [[LakeTable.partitionValuesFromPath]] records for
+  * [[LakeTable]]'s own writes (Spark's hive-path encode → URLDecoder decode round-trip), or
   * partition pruning would wrongly drop/keep files — so only the types
   * with a proven-stable rendering are rendered (the same conservative
   * domain as [[PartitionFilterValues]]); anything else records NO value
@@ -219,7 +219,7 @@ private[lake] object PartitionRender {
   /** Per-partition-field renderers resolved against the write schema.
     * Spec entries may be transforms (M36): those evaluate the
     * transform's [[PartitionTransform.valueExpr]] — the SAME catalyst
-    * tree the dispatcher write path and prune time use — over a
+    * tree [[LakeTable]]'s write path and prune time use — over a
     * [[org.apache.spark.sql.catalyst.expressions.BoundReference]] per
     * row, so all three renderings agree by construction. Identity keeps
     * the typed renderers below. A column missing from the schema
@@ -460,7 +460,7 @@ private[lake] class LakeDeltaWriter(conf: LakeDeltaWriteConf, suffix: String)
   * with CommitConflictException — reloading here would CAS against the
   * NEW version and let a position-delete file referencing rewritten
   * (dead) paths commit as a silent no-op, losing the delete. Same
-  * stale-handle contract the dispatcher DML path enforces
+  * stale-handle contract [[LakeTable]]'s DataFrame DML enforces
   * (ConcurrencySpec: state-dependent DML never lands silently). */
 private[lake] class LakeDeltaBatchWrite(
     t: LakeTable, cmd: RowLevelOperation.Command, rowSchema: StructType)
@@ -473,9 +473,9 @@ private[lake] class LakeDeltaBatchWrite(
   private val withRowIds =
     cmd != RowLevelOperation.Command.DELETE && t.meta.formatVersion >= 3
 
-  // native DML honors the table's DV preference like the dispatcher
-  // path — the shared gate lives on LakeTable so the two surfaces can
-  // never drift (review r7)
+  // native DML honors the table's DV preference like LakeTable's
+  // DataFrame DML — the shared gate lives on LakeTable so the two
+  // surfaces can never drift (review r7)
   private val deleteFormat = t.validatedDeleteFormat
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory =
@@ -669,7 +669,7 @@ private[lake] class LakeCowRowLevelOperation(
   }
 
   /** v3: every written-back row must keep its lineage id (CoW copies
-    * preserve `_row_id` — same rule as the dispatcher's cowRewrite).
+    * preserve `_row_id` — same rule as [[LakeTable]]'s cowRewrite).
     * v2 still requests `_file_path`: a group-based write with NO
     * projected metadata takes Spark's plain DataWritingSparkTask, which
     * does not apply the row projection — the writer would receive the
@@ -766,6 +766,22 @@ private[lake] class LakeCowBatchWrite(
       parquetConf = LakeDeltaWriter.mirroredParquetConf() ++ t.bloomFilterConf,
       partitionCols = t.meta.partitionCols))
 
+  /** Spark's MERGE row counts, recorded in the merge snapshot's summary
+    * as the delta path records its own (`matched-records`,
+    * `inserted-records`). */
+  private var mergeCounts = Map.empty[String, String]
+
+  override def commit(messages: Array[WriterCommitMessage], summary: WriteSummary): Unit = {
+    summary match {
+      case m: MergeSummary => mergeCounts = Map(
+        "matched-records" ->
+          (m.numTargetRowsMatchedUpdated + m.numTargetRowsMatchedDeleted).toString,
+        "inserted-records" -> m.numTargetRowsInserted.toString)
+      case _ =>
+    }
+    commit(messages)
+  }
+
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val cs = messages.collect { case c: LakeCowCommit => c }
     val cur = t // analysis-time handle: see class Scaladoc
@@ -836,7 +852,7 @@ private[lake] class LakeCowBatchWrite(
         // routes every row to the minted file — no lineage to preserve)
         ("merge", Map("rewritten-files" -> scope.size.toString) ++
           (if (withRowIds) Map("inserted-records" -> nMint.toString)
-           else Map("written-records" -> written.toString)))
+           else Map("written-records" -> written.toString)) ++ mergeCounts)
     }
     cur.commitSnapshot(
       cur.newSnapshot(opName, keep ++ presMetas ++ mintMetas,

@@ -12,7 +12,7 @@ import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownFilters, V1Scan}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo, SupportsTruncate, V1Write, Write, WriteBuilder}
-import org.apache.spark.sql.sources.{BaseRelation, EqualTo, Filter, In, InsertableRelation, TableScan}
+import org.apache.spark.sql.sources.{AlwaysTrue, BaseRelation, EqualTo, Filter, In, InsertableRelation, TableScan}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -38,9 +38,11 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * copy-on-write tables ([[LakeCowRowLevelOperation]]); maintenance
   * procedures through ProcedureCatalog ([[LakeProcedures]]).
   *
-  * The warehouse root is read from `spark.graft.warehouse` at every call,
-  * so one registered catalog serves whatever warehouse the session
-  * currently points at (tests swap warehouses per suite).
+  * A statement running under [[LakeSql.run]] resolves through that
+  * `LakeSql`'s own [[LakeCatalog]] (its warehouse and clock), pinned per
+  * thread. Otherwise the warehouse root is read from
+  * `spark.graft.warehouse` at every call, so one registered catalog
+  * serves whatever warehouse the session currently points at.
   */
 class LakeSparkCatalog extends TableCatalog with SupportsNamespaces
     with ProcedureCatalog with ViewCatalog {
@@ -52,7 +54,7 @@ class LakeSparkCatalog extends TableCatalog with SupportsNamespaces
 
   override def name(): String = catalogName
 
-  private def cat: LakeCatalog = {
+  private def cat: LakeCatalog = LakeSql.pinned.map(_.catalog).getOrElse {
     val spark = SparkSession.active
     val wh = spark.conf.getOption(LakeExtensions.WarehouseConf).getOrElse(
       throw new IllegalStateException(
@@ -92,7 +94,7 @@ class LakeSparkCatalog extends TableCatalog with SupportsNamespaces
         case _ => None
       }
       return make.flatMap(f => cat.loadTable(dbName, tblName).map { t =>
-        new LakeMetaV2Table(s"${t.name}.$kind", t, f): Table
+        new LakeMetaV2Table(s"${t.name}.$kind", t, f, principal): Table
       }).getOrElse(
         throw new NoSuchTableException(ident.namespace() :+ ident.name()))
     }
@@ -103,12 +105,12 @@ class LakeSparkCatalog extends TableCatalog with SupportsNamespaces
         // M49: Spark 4.1's SQL layer never consults ViewCatalog.loadView
         // for reads (its v2 view DDL/resolution is unfinished — CREATE
         // VIEW on a non-session catalog throws MISSING_CATALOG_ABILITY),
-        // so views surface as read-only V2 tables: the scan runs the
-        // stored definition through the dispatcher with the session
-        // principal — same late binding and invoker-rights gates as the
-        // dispatcher path
+        // so views surface as read-only V2 tables: the scan expands the
+        // stored definition through LakeSql with the session principal —
+        // same late binding and invoker-rights gates
         c.viewInfo(db(ident), ident.name()) match {
-          case Some(vm) => new LakeViewV2Table(s"${db(ident)}.${ident.name()}", vm, c)
+          case Some(vm) =>
+            new LakeViewV2Table(s"${db(ident)}.${ident.name()}", vm, c, principal)
           case None =>
             throw new NoSuchTableException(ident.namespace() :+ ident.name())
         }
@@ -120,7 +122,8 @@ class LakeSparkCatalog extends TableCatalog with SupportsNamespaces
     * argument is a snapshot id, anything else resolves as a snapshot tag
     * or a branch head (Iceberg's branch/tag time travel; a branch name
     * reads its current head), with a diagnostic listing the table's refs
-    * instead of a raw NumberFormatException. Tags win a (discouraged)
+    * (a [[SqlParseException]]: the statement does not resolve) instead of
+    * a raw NumberFormatException. Tags win a (discouraged)
     * name collision — they are immutable, so the read is reproducible. */
   override def loadTable(ident: Identifier, version: String): Table =
     cat.loadTable(db(ident), ident.name()) match {
@@ -128,7 +131,7 @@ class LakeSparkCatalog extends TableCatalog with SupportsNamespaces
         val snapId = version.toLongOption
           .orElse(t.meta.tags.get(version))
           .orElse(t.meta.branches.get(version))
-          .getOrElse(throw new IllegalArgumentException(
+          .getOrElse(throw new SqlParseException(
             s"VERSION AS OF '$version': not a snapshot id, tag or branch " +
               s"on ${t.name} (tags: ${t.meta.tags.keys.mkString(", ")}; " +
               s"branches: ${t.meta.branches.keys.mkString(", ")})"))
@@ -144,17 +147,20 @@ class LakeSparkCatalog extends TableCatalog with SupportsNamespaces
       case None => throw new NoSuchTableException(ident.namespace() :+ ident.name())
     }
 
+  /** The principal the handles loaded now check (as [[LakeV2Table]]'s
+    * default does): gates that run after the statement's analysis still
+    * see the principal that loaded the handle. */
+  private def principal: Option[String] = Grants.principal(SparkSession.active)
+
   override def tableExists(ident: Identifier): Boolean =
     cat.tableExists(db(ident), ident.name())
 
   // ------------------------------------------------------------ procedures
 
-  /** Native `CALL lake.system.<proc>(table => 'db.t', …)` — the same
-    * maintenance procedures the dispatcher's CALL grammar runs
-    * ([[LakeProcedures]]). */
+  /** `CALL lake.system.<proc>(table => 'db.t', …)` — the maintenance
+    * procedures ([[LakeProcedures]]); [[LakeSql.run]] sends bare and
+    * `system.` names here. */
   override def loadProcedure(ident: Identifier): procedures.UnboundProcedure = {
-    val principal =
-      SparkSession.active.conf.getOption(LakeExtensions.PrincipalConf)
     val known = ident.namespace().toSeq == Seq("system")
     (if (known) LakeProcedures.load(cat, ident.name(), principal) else None)
       .getOrElse(throw new RuntimeException(
@@ -174,8 +180,8 @@ class LakeSparkCatalog extends TableCatalog with SupportsNamespaces
       properties: JMap[String, String]): Table = {
     val partCols = partitions.toSeq.map { t =>
       // identity like the reference's PARTITIONED BY (category), plus the
-      // Iceberg transforms (M36) — mapped onto the same spec grammar
-      // LakeSql's DDL accepts, so both surfaces create identical tables
+      // Iceberg transforms (M36) — mapped onto the spec grammar
+      // LakeCatalog.createTable takes
       def ref: String = {
         val refs = t.references()
         if (refs.length != 1)
@@ -210,41 +216,50 @@ class LakeSparkCatalog extends TableCatalog with SupportsNamespaces
   override def alterTable(ident: Identifier, changes: TableChange*): Table = {
     val t = cat.loadTable(db(ident), ident.name()).getOrElse(
       throw new NoSuchTableException(ident.namespace() :+ ident.name()))
-    // same gate the dispatcher's ALTER applies (M27 — the native DDL
+    // same gate LakeSql's ALTER applies (M27 — the native DDL
     // surface must not bypass the grants model)
     Grants.require(SparkSession.active, t, "ALTER")
-    // M48 schema evolution through Spark's native ALTER TABLE: RENAME
-    // COLUMN and widening ALTER COLUMN … TYPE arrive as TableChanges and
-    // run the same metadata-only engine paths as the dispatcher DDL
+    // checked before any change commits
+    val handled = changes.count {
+      case _: TableChange.SetProperty | _: TableChange.RemoveProperty |
+           _: TableChange.RenameColumn | _: TableChange.UpdateColumnType |
+           _: TableChange.DeleteColumn => true
+      case _ => false
+    }
+    if (handled != changes.size)
+      throw new UnsupportedOperationException("only SET/UNSET TBLPROPERTIES, " +
+        "RENAME COLUMN, ALTER COLUMN TYPE and DROP COLUMN are supported")
+    // M48 schema evolution: RENAME COLUMN, widening ALTER COLUMN … TYPE
+    // and DROP COLUMN arrive as TableChanges and run the metadata-only
+    // engine paths
     val evolved = changes.foldLeft(t) { (acc, ch) =>
+      def one(names: Array[String], what: String) =
+        if (names.length == 1) names(0)
+        else throw new UnsupportedOperationException(s"nested column $what is not supported")
       ch match {
-        case r: TableChange.RenameColumn =>
-          if (r.fieldNames().length != 1) throw new UnsupportedOperationException(
-            "nested column rename is not supported")
-          acc.renameColumn(r.fieldNames()(0), r.newName())
+        case r: TableChange.RenameColumn => acc.renameColumn(one(r.fieldNames(), "rename"), r.newName())
         case u: TableChange.UpdateColumnType =>
-          if (u.fieldNames().length != 1) throw new UnsupportedOperationException(
-            "nested column type change is not supported")
-          acc.widenColumn(u.fieldNames()(0), u.newDataType())
+          acc.widenColumn(one(u.fieldNames(), "type change"), u.newDataType())
+        case d: TableChange.DeleteColumn =>
+          val name = one(d.fieldNames(), "drop")
+          if (d.ifExists() && !acc.schema.fieldNames.contains(name)) acc
+          else acc.dropColumn(name)
         case _ => acc
       }
     }
     val props = changes.collect {
       case s: TableChange.SetProperty => s.property() -> s.value()
     }.toMap
-    val handled = changes.count(ch => ch.isInstanceOf[TableChange.SetProperty] ||
-      ch.isInstanceOf[TableChange.RenameColumn] ||
-      ch.isInstanceOf[TableChange.UpdateColumnType])
-    if (handled != changes.size)
-      throw new UnsupportedOperationException(
-        "only SET TBLPROPERTIES, RENAME COLUMN and ALTER COLUMN TYPE are supported")
+    // UNSET of a key the table lacks is a no-op (IF EXISTS semantics)
+    val unset = changes.collect { case r: TableChange.RemoveProperty => r.property() }
     // the format-version property is the v2→v3 upgrade — mint next-row-id
     // and land the remaining properties in the SAME commit (a two-commit
     // ALTER could be half-applied if a concurrent writer lands between)
     val t2 = props.get("format-version") match {
       case Some(v) => Procedures.upgradeFormatVersion(evolved, v.toInt,
         extraProps = props - "format-version")
-      case None if props.nonEmpty => evolved.setProperties(props)
+      case None if props.nonEmpty || unset.nonEmpty =>
+        evolved.withMeta(evolved.meta.copy(props = evolved.meta.props -- unset ++ props))
       case None => evolved
     }
     new LakeV2Table(t2)
@@ -270,8 +285,8 @@ class LakeSparkCatalog extends TableCatalog with SupportsNamespaces
     * parses the stored text with `currentCatalog` pointed back here, so
     * underlying `db.t` references become native lake relations and every
     * SELECT grant gate fires with the READER's principal (invoker
-    * rights, same rule as the dispatcher's view expansion). Storage is
-    * the same one-JSON-per-view metadata the dispatcher uses, so both
+    * rights, same rule as LakeSql's view expansion). Storage is
+    * the same one-JSON-per-view metadata LakeSql uses, so both
     * surfaces see one view namespace. */
   override def listViews(namespace: String*): Array[Identifier] = {
     if (namespace.length != 1)
@@ -407,11 +422,12 @@ object LakeV2Table {
 /** Read-only V2 handle for a metadata table (`lake.db.t.history` /
   * `.snapshots` / `.files`): driver-side snapshot-header projections
   * (metadata-scale — no data file is opened), bridged through V1Scan
-  * like the main scan. SELECT on the base table gates access when a
-  * session principal is set. */
+  * like the main scan. SELECT on the base table gates access for the
+  * principal that loaded the handle. */
 class LakeMetaV2Table(
     tableName: String, base: LakeTable,
-    make: LakeTable => org.apache.spark.sql.DataFrame)
+    make: LakeTable => org.apache.spark.sql.DataFrame,
+    principal: Option[String])
     extends Table with SupportsRead {
 
   private lazy val df = make(base)
@@ -422,7 +438,7 @@ class LakeMetaV2Table(
     java.util.EnumSet.of(TableCapability.BATCH_READ)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    Grants.require(SparkSession.active, base, "SELECT")
+    Grants.require(principal, base, "SELECT")
     new ScanBuilder {
       override def build(): Scan = new V1Scan {
         override def readSchema(): StructType = df.schema
@@ -438,22 +454,21 @@ class LakeMetaV2Table(
   }
 }
 
-/** Read-only V2 handle for a stored view (M49): `SELECT … FROM
-  * lake.db.v` scans the DataFrame the dispatcher's view expansion
-  * produces — late-binding (re-planned per scan) and invoker-rights (the
-  * session principal rides into every underlying table's SELECT gate).
-  * Writes/DDL stay on the dispatcher. */
-class LakeViewV2Table(viewName: String, vm: ViewMetadata, cat: LakeCatalog)
+/** Read-only V2 handle for a stored view (M49), reached by direct
+  * `spark.sql` users of `lake.db.v`: the scan is [[LakeSql.run]]'s
+  * expansion of the view — late-binding (re-planned per scan) and
+  * invoker-rights (the loading principal rides into every underlying
+  * table's SELECT gate). `LakeSql.run` itself expands views on the parsed
+  * plan, so this handle never loads under it and the call cannot recurse.
+  * View DDL stays on LakeSql. */
+class LakeViewV2Table(viewName: String, vm: ViewMetadata, cat: LakeCatalog,
+    principal: Option[String])
     extends Table with SupportsRead {
 
-  private def plan(): org.apache.spark.sql.DataFrame = {
-    val principal = cat.spark.conf.getOption("spark.graft.principal")
-    // resolve BY NAME, not by inlining vm.sql: the dispatcher's view
-    // expansion owns the materialized-view fast path (M51 freshness →
-    // storage scan), and going through it keeps the two surfaces'
-    // semantics identical by construction
+  // resolve BY NAME, not by inlining vm.sql: LakeSql's view expansion
+  // owns the materialized-view fast path (M51 freshness → storage scan)
+  private def plan(): org.apache.spark.sql.DataFrame =
     new LakeSql(cat).run(s"SELECT * FROM ${vm.name}", principal)
-  }
 
   // late-binding: the CURRENT expansion's schema, not the stored one —
   // underlying-table evolution since CREATE VIEW must not desync the
@@ -481,7 +496,11 @@ class LakeViewV2Table(viewName: String, vm: ViewMetadata, cat: LakeCatalog)
     }
 }
 
-class LakeV2Table(t: LakeTable, pinnedSnapshot: Option[Long] = None)
+/** `principal` is the one the catalog resolved when it loaded the handle
+  * ([[Grants.principal]]); every gate on this handle checks it. */
+class LakeV2Table(t: LakeTable, pinnedSnapshot: Option[Long] = None,
+    private[lake] val principal: Option[String] =
+      Grants.principal(SparkSession.active))
     extends Table with SupportsRead with SupportsWrite
     with SupportsMetadataColumns with SupportsRowLevelOperations
     with SupportsDelete {
@@ -496,14 +515,21 @@ class LakeV2Table(t: LakeTable, pinnedSnapshot: Option[Long] = None)
     * analysis-time handle; deleteWhere re-proves on a FRESH reload so a
     * commit landing in between can never widen the delete — a proof that
     * no longer holds fails loudly (retryable), exactly like the delta
-    * paths' CAS. */
+    * paths' CAS. A WHERE-less DELETE and TRUNCATE TABLE arrive as
+    * `AlwaysTrue` and truncate the reloaded table: every live data and
+    * delete file drops. */
   override def canDeleteWhere(filters: Array[Filter]): Boolean =
-    pinnedSnapshot.isEmpty && t.metadataDeleteSet(filters.toSeq).isDefined
+    pinnedSnapshot.isEmpty &&
+      (deletesAll(filters) || t.metadataDeleteSet(filters.toSeq).isDefined)
+
+  private def deletesAll(filters: Array[Filter]): Boolean =
+    filters.nonEmpty && filters.forall(_.isInstanceOf[AlwaysTrue])
 
   override def deleteWhere(filters: Array[Filter]): Unit = {
     requirePerm("DELETE")
     val fresh = t.reloaded()
-    fresh.metadataDeleteIfProvable(filters.toSeq).getOrElse(
+    if (deletesAll(filters)) fresh.truncate()
+    else fresh.metadataDeleteIfProvable(filters.toSeq).getOrElse(
       throw new IllegalStateException(
         s"metadata DELETE on ${t.name}: the whole-file proof no longer " +
           "holds after reload (a concurrent commit changed the file " +
@@ -559,7 +585,7 @@ class LakeV2Table(t: LakeTable, pinnedSnapshot: Option[Long] = None)
           "run repair_v3_metadata before DML")
     requirePerm("DELETE")
     if (info.command() != RowLevelOperation.Command.DELETE)
-      requirePerm("INSERT") // rewrites/inserts add data files, like the dispatcher
+      requirePerm("INSERT") // rewrites/inserts add data files
     () =>
       if (mor) new LakeRowLevelOperation(t, info.command())
       else new LakeCowRowLevelOperation(t, info.command())
@@ -569,12 +595,25 @@ class LakeV2Table(t: LakeTable, pinnedSnapshot: Option[Long] = None)
     t.name + pinnedSnapshot.map(id => s"@$id").getOrElse("")
 
   /** Grants hook on the native path (VERDICT r4 #8 / r5 next #5): reads
-    * need SELECT, appends INSERT, overwrites DELETE+INSERT — the same
-    * rules [[LakeSql.requirePerm]] applies to dispatcher statements.
+    * need SELECT, appends INSERT, overwrites and DML DELETE(+INSERT) —
+    * checked once, here, for every statement [[LakeSql.run]] routes.
     * Shared rule lives in [[Grants]]. */
   private def requirePerm(perm: String): Unit =
-    Grants.require(SparkSession.active, t, perm)
-  override def schema(): StructType = t.schema
+    Grants.require(principal, t, perm)
+  /** The table schema, with each v3 write-default (M46) as Spark's
+    * column-default metadata, so a column-list INSERT fills unlisted
+    * columns the way the table declares. */
+  override def schema(): StructType = {
+    val defaults = t.meta.columnDefaults.flatMap(d => d.write.map(d.colName -> _)).toMap
+    if (defaults.isEmpty) t.schema
+    else StructType(t.schema.fields.map(f => defaults.get(f.name).fold(f) { v =>
+      f.copy(metadata = new org.apache.spark.sql.types.MetadataBuilder()
+        .withMetadata(f.metadata)
+        .putString("CURRENT_DEFAULT",
+          s"CAST('${v.replace("'", "''")}' AS ${f.dataType.sql})")
+        .build())
+    }))
+  }
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_READ,
       TableCapability.V1_BATCH_WRITE, TableCapability.TRUNCATE)
@@ -600,9 +639,9 @@ class LakeV2Table(t: LakeTable, pinnedSnapshot: Option[Long] = None)
               val cur = t.reloaded()
               // dynamic partition overwrite can't reach here: the V1
               // write bridge has no dynamic exec, so Spark refuses the
-              // statement at analysis (TableCapabilityCheck) — the
-              // dispatcher and overwriteDynamic() are the surfaces that
-              // carry those semantics
+              // statement at analysis (TableCapabilityCheck) — LakeSql
+              // and overwriteDynamic() are the surfaces that carry those
+              // semantics
               if (replace || overwrite) cur.overwrite(data) else cur.append(data)
             }
           }

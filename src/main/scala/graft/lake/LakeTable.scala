@@ -711,9 +711,9 @@ class LakeTable(
       .toDF("version", "timestamp", "metadata_file", "is_current")
   }
 
-  /** Canonical `SHOW CREATE TABLE` rendering: a statement the dispatcher
-    * itself accepts (round-trippable), including the partition-transform
-    * spec and table properties. */
+  /** Canonical `SHOW CREATE TABLE` rendering: a statement
+    * [[LakeSql.run]] accepts (round-trippable), including the
+    * partition-transform spec and table properties. */
   def showCreate(): String = {
     val cols = schema.fields
       .map(f => s"${f.name} ${f.dataType.sql}").mkString(", ")
@@ -725,8 +725,8 @@ class LakeTable(
     val part =
       if (specs.isEmpty) ""
       else specs.mkString(" PARTITIONED BY (", ", ", ")")
-    // standard SQL quote-doubling, mirrored by LakeSql.parseProps — a
-    // value containing ' must not break the round-trip contract
+    // standard SQL quote-doubling, read back by Spark's parser — a
+    // value containing ' must round-trip
     def q(s: String) = s"'${s.replace("'", "''")}'"
     val props =
       if (meta.props.isEmpty) ""
@@ -1131,8 +1131,8 @@ class LakeTable(
   /** Table property selecting the position-delete representation:
     * classic 2-column parquet (`position`, default) or v3 deletion
     * vectors (`dv`, M37). DV requires format-version 3 — a v2 reader has
-    * no notion of them. One definition gates BOTH the dispatcher write
-    * path and the native DML writers (review r7). */
+    * no notion of them. One definition gates BOTH this class's DataFrame
+    * DML and the native DML writers (review r7). */
   private[lake] def validatedDeleteFormat: String = {
     val f = meta.props.getOrElse("write.delete.format", "position")
     if (f == "dv" && meta.formatVersion < 3)

@@ -54,9 +54,10 @@ case class NativeReadRule(session: SparkSession) extends Rule[LogicalPlan]
       case _ => None
     }
 
-  /** Grant gate identical to the bridged ScanBuilder's ([[Grants]]). */
+  /** Grant gate identical to the bridged ScanBuilder's ([[Grants]]),
+    * for the principal that loaded the table. */
   private def requireSelect(t: LakeV2Table): Unit =
-    Grants.require(session, t.lakeTable, "SELECT")
+    Grants.require(t.principal, t.lakeTable, "SELECT")
 
   /** COUNT(*)/COUNT(1), non-distinct, unfiltered. */
   private def isCountStar(ae: AggregateExpression): Boolean =
@@ -182,8 +183,8 @@ case class NativeReadRule(session: SparkSession) extends Rule[LogicalPlan]
     *     projected to `__fp`, distinct, collected — yielding exactly the
     *     files that CONTAIN matching rows. This is Iceberg's runtime
     *     group filtering done at plan time (the V1-bridge engine can't
-    *     host a DPP subquery), and the same affected-path pattern the
-    *     dispatcher's cowRewrite uses: a 100 TB DELETE touching one file
+    *     host a DPP subquery), and the same affected-path pattern
+    *     [[LakeTable]]'s cowRewrite uses: a 100 TB DELETE touching one file
     *     reads the table once narrow and rewrites that one file, instead
     *     of rewriting everything the stats couldn't bound. A conjunct
     *     SUBSET keeps discovery sound (matching-file superset); any

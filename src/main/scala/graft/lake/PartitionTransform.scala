@@ -33,7 +33,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * single source of truth for the transform's rendered value, evaluated
   * in all three places that MUST agree byte-for-byte or pruning silently
   * drops matching files:
-  *   - the dispatcher write path (as a Column over the source column),
+  *   - [[LakeTable]]'s write path (as a Column over the source column),
   *   - the executor-side DML writers (interpreted eval over a
   *     [[BoundReference]] per row — [[PartitionRender]]),
   *   - prune time (eval over a [[Literal]] of the predicate's value).

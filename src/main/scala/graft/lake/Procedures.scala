@@ -344,9 +344,9 @@ object Procedures {
     * position-scoped delete files (classic parquet and deletion
     * vectors) into one freshly-written set in the table's current
     * `write.delete.format`. Returns (table, consolidated, written). */
-  /** M38 `CALL add_files(table, source)` — shared by both SQL surfaces
-    * (dispatcher and native DSv2 CALL) so dir-vs-file resolution and the
-    * result contract can't drift. `source` is one parquet file or a
+  /** M38 `CALL add_files(table, source)` — the native DSv2 CALL
+    * ([[LakeProcedures]]) lands here, for `spark.sql` and `LakeSql.run`
+    * alike. `source` is one parquet file or a
     * directory walked recursively. Returns (table, files added, rows
     * added — from footer counts, nothing scanned). */
   def addFiles(t: LakeTable, source: String): (LakeTable, Int, Long) = {

@@ -12,8 +12,9 @@ import org.apache.spark.internal.Logging
   * The seams, each documented in place at its use site:
   *
   *  1. **`org.apache.spark.sql.graft.ColumnBridge`** — pins
-  *     `org.apache.spark.sql.classic.ExpressionColumnNode(expr)` and
-  *     `classic.SparkSession#expression(Column)` (both `private[sql]`
+  *     `org.apache.spark.sql.classic.ExpressionColumnNode(expr)`,
+  *     `classic.SparkSession#expression(Column)` and
+  *     `classic.Dataset.ofRows(session, plan)` (all `private[sql]`
   *     since Spark 4.0 split the classic module out of the api module).
   *     Hosting a shim inside `org.apache.spark.sql` is the established
   *     pattern for catalyst-extension libraries. Breakage mode: compile

@@ -72,7 +72,7 @@ object V1StatsRule {
     * after pushdown and before physical join selection is the "User
     * Provided Optimizers" batch, i.e. `experimental.extraOptimizations`,
     * the LAST optimizer batch. Installation is idempotent and invoked
-    * from both session surfaces (the SQL dispatcher and the DSv2
+    * from both session surfaces (LakeSql and the DSv2
     * catalog), so whichever path touches the session first wires it. */
   def install(session: SparkSession): Unit = synchronized {
     val cur = session.experimental.extraOptimizations

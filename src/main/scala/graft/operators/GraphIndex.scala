@@ -56,17 +56,6 @@ import graft.lake.{LakeCatalog, LakeTable}
   * each row commit. */
 object GraphIndex {
 
-  /** q162's graph-corpus rule over a column named `v` — the HOF
-    * spelling, kept as the declarative cross-check the specs compare
-    * against; the hot path runs the codegen'd twins below (r20
-    * optimization round, guide §4). */
-  private[graft] val NormPred = "aggregate(v, 0D, (acc, x) -> acc + x * x) > 0D"
-  /** q162's 64-bit sign signature over a column named `v` (HOF twin). */
-  private[graft] val SigExpr =
-    "aggregate(transform(sequence(0, 63), " +
-      "i -> IF(element_at(v, i + 1) >= 0D, shiftleft(1L, i), 0L)), " +
-      "0L, (acc, x) -> acc | x)"
-
   private[graft] val Degree = 10 // edges per anchor (q162's k)
 
   /** (vec_id, v, sig) of the embeddable slice of `vectors` (vec_id, v)

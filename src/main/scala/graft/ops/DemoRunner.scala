@@ -18,7 +18,7 @@ final case class DemoReport(steps: Seq[DemoStep]) {
   *   upgrade to v3 + compact → strict reader SUCCEEDS →
   *   new v3 MoR DELETE → still strict-readable, counts drop by 1.
   *
-  * Every statement goes through the LakeSql dispatcher as a SQL string —
+  * Every statement goes through [[LakeSql.run]] as a SQL string —
   * the same statement sequence the reference ships over ssh, minus the
   * ssh. */
 class DemoRunner(sql: LakeSql, db: String = "demo", table: String = "v2_mor_demo") {

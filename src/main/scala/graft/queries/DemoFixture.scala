@@ -64,8 +64,8 @@ object DemoFixture {
 
   def apply(spark: SparkSession): States = cache(spark)(build)
 
-  /** SQL statement list driving the same state machine through the
-    * dispatcher — the reference's actual compatibility surface
+  /** SQL statement list driving the same state machine through
+    * `LakeSql.run` — the reference's actual compatibility surface
     * (create_demo_table.py:97-137 emits these strings over spark-sql).
     * The UPDATE is the bare reference statement; the engine's assignment
     * cast to the column type rounds HALF_UP, which the DuckDB oracle

@@ -96,11 +96,11 @@ object LakeQueries {
     Some(replay("demo_q08", 5, "SELECT * FROM demo_q08 ORDER BY id LIMIT 5")),
     (s, _) => DemoFixture(s).upgraded.read().orderBy("id").limit(5))
 
-  // Q45: the whole DML arc replayed as SQL *statements* through LakeSql
-  // dispatch (create/insert/delete/update/call/alter), final state read
-  // back via dispatcher SELECT — the reference's actual SQL-in interface
+  // Q45: the whole DML arc replayed as SQL *statements* through
+  // LakeSql.run (create/insert/delete/update/call/alter), final state read
+  // back via a SQL SELECT — the reference's actual SQL-in interface
   // behind the hash gate (VERDICT r3 next #7). Same DuckDB replay oracle
-  // as q06: the dispatcher route must land byte-identical to the API route.
+  // as q06: the SQL route must land byte-identical to the API route.
   val q45 = QueryDef(
     "q45_sql_dispatcher",
     Some(replay("demo_q45", 5, "SELECT * FROM demo_q45 ORDER BY id")),
@@ -145,8 +145,8 @@ object LakeQueries {
   // Q49: INSERT OVERWRITE (SELECT body across tables) + TRUNCATE behind
   // the hash gate. DuckDB has neither statement, so the oracle replays
   // their decomposition — DELETE-all + INSERT…SELECT / DELETE-all — on
-  // plain tables; the engine route runs the real statements through the
-  // dispatcher and must land byte-identical.
+  // plain tables; the engine route runs the real statements through
+  // LakeSql.run and must land byte-identical.
   private val owFixture =
     new SessionMemo[graft.lake.LakeSql]
 
@@ -217,7 +217,7 @@ object LakeQueries {
   // Q52: NATIVE row-level DELETE behind the hash gate — the statement
   // runs through spark.sql on the registered DSv2 catalog
   // (SupportsRowLevelOperations → WriteDelta → distributed
-  // position-delete writers), not the LakeSql dispatcher; the oracle
+  // position-delete writers), the path LakeSql.run also takes; the oracle
   // replays the same DELETE on a plain DuckDB table.
   private val ndFixture =
     new SessionMemo[java.nio.file.Path]
@@ -370,7 +370,7 @@ object LakeQueries {
             SELECT * FROM demo_q60 ORDER BY id"""),
     (s, _) => nativeRead(s, "cm"))
 
-  // Q50: time travel behind the hash gate — the dispatcher's VERSION AS OF
+  // Q50: time travel behind the hash gate — a SQL VERSION AS OF
   // reads snapshot 1 (the initial append) of the fully-mutated q45 table;
   // the oracle replays only the first two statements, so the hash matches
   // exactly when the historical state survives the later DELETE/UPDATE/
@@ -395,11 +395,12 @@ object LakeQueries {
             SELECT * FROM demo_q48 ORDER BY id"""),
     (s, _) => q48Table(s).read().orderBy("id"))
 
-  // Q92: full multi-clause conditional MERGE through the dispatcher
-  // grammar (r10): two ordered WHEN MATCHED clauses (conditional DELETE
-  // first — clause ORDER is load-bearing, a <100 row satisfies both) and
-  // a conditional explicit-column INSERT whose unlisted created_at lands
-  // NULL. DuckDB has no MERGE: the oracle replays the decomposition —
+  // Q92: full multi-clause conditional MERGE through LakeSql.run, planned
+  // by Spark's row-level MERGE (r10): two ordered WHEN MATCHED clauses
+  // (conditional DELETE first — clause ORDER is load-bearing, a <100 row
+  // satisfies both) and a conditional explicit-column INSERT whose
+  // unlisted created_at lands NULL. DuckDB has no MERGE: the oracle
+  // replays the decomposition —
   // conditioned DELETE/UPDATE/INSERT against the same source VALUES,
   // with "not matched" spelled as the ORIGINAL target id set (MERGE
   // matches against statement-start state). No trailing-zero decimal
@@ -709,7 +710,7 @@ object LakeQueries {
     })
 
   // Q82: metadata-only schema evolution (M48) behind the hash gate — the
-  // dispatcher arc RENAMEs a column, WIDENs two (INT→BIGINT,
+  // SQL arc RENAMEs a column, WIDENs two (INT→BIGINT,
   // DECIMAL(10,2)→DECIMAL(18,2)) without touching a file, then inserts a
   // row only the widened types can hold and deletes through the renamed
   // name (a CoW delete, so the final state mixes rewritten current-epoch

@@ -1,8 +1,9 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.classic.{ExpressionColumnNode, SparkSession => ClassicSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.classic.{Dataset, ExpressionColumnNode, SparkSession => ClassicSession}
 
 /** Column ⇄ Expression bridge for custom catalyst expressions.
   *
@@ -14,7 +15,9 @@ import org.apache.spark.sql.classic.{ExpressionColumnNode, SparkSession => Class
   *
   * Seam pin (Spark 4.1.2 — see [[graft.lake.SparkSeams]] for the full
   * internal-API inventory): `classic.ExpressionColumnNode(Expression)`
-  * and `classic.SparkSession#expression(Column)`. Both are `private[sql]`
+  * and `classic.SparkSession#expression(Column)`, plus
+  * `classic.Dataset.ofRows(session, plan)` for running a rewritten parsed
+  * plan (the SQL front door, [[graft.lake.LakeSql]]). All are `private[sql]`
   * members of the classic module; a signature change surfaces as a
   * compile error HERE, never as silent misbehavior downstream.
   */
@@ -23,4 +26,9 @@ object ColumnBridge {
 
   def expression(c: Column): Expression =
     SparkSession.active.asInstanceOf[ClassicSession].expression(c)
+
+  /** A DataFrame over `plan`: analysed now, and executed now when it is a
+    * command — what `spark.sql` does after parsing. */
+  def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
+    Dataset.ofRows(spark.asInstanceOf[ClassicSession], plan)
 }

@@ -135,8 +135,7 @@ final class LakeStreamSource(
   }
 
   /** Every poll re-checks the SELECT grant (same session-principal rule
-    * as every other read surface — dispatcher, DSv2 scan, native
-    * splice): a stream is a long-lived reader, so a revocation takes
+    * as every other read surface — DSv2 scan, native splice): a stream is a long-lived reader, so a revocation takes
     * effect at the next micro-batch, not never. */
   private def loadTable(): LakeTable = {
     val t = catalog.loadTable(db, table).getOrElse(
@@ -311,8 +310,8 @@ final class LakeStreamSink(
           s"${catalog.warehouse}"))
     t.requireGrant("INSERT")
     // an equality upsert hides existing rows — that is a row-removing
-    // write, so keys mode needs the same DELETE grant the dispatcher and
-    // DSv2 row-level DML require (INSERT alone must not delete by upsert)
+    // write, so keys mode needs the same DELETE grant DSv2 row-level DML
+    // requires (INSERT alone must not delete by upsert)
     if (keys.nonEmpty) t.requireGrant("DELETE")
     if (keys.isEmpty)
       LakeStreamSink.commitBatch(catalog, db, table, branch)(batch, batchId)

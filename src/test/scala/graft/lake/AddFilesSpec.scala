@@ -178,7 +178,7 @@ class AddFilesSpec extends SparkSpec {
 
     // dispatcher surface
     val res = sql.run(s"CALL snapshot(table => db.snapr, source => '$srcDir')")
-    assert(res.collect().head.getInt(1) >= 1)
+    assert(res.collect().head.getInt(0) >= 1) // added_files_count
     val t = sql.catalog.loadTable("db", "snapr").get
     assert(t.schema.fieldNames.toSeq ==
       spark.read.parquet(srcDir).schema.fieldNames.toSeq,

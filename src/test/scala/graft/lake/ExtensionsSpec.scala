@@ -2,6 +2,8 @@ package graft.lake
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -998,6 +1000,91 @@ class ExtensionsSpec extends SparkSpec {
     // no principal set → the catalog stays administrative (unrestricted)
     assert(spark.sql("SELECT COUNT(*) AS c FROM lake.db.g").head().getLong(0) == 2)
     assert(sql.catalog.loadTable("db", "g").get.read().count() == 2)
+  }
+
+  test("native DELETE with no WHERE drops every live file on CoW and MoR tables") {
+    val wh = Files.createTempDirectory("graft-dall-wh")
+    val sql = new LakeSql(new LakeCatalog(spark, wh))
+    val mor = " TBLPROPERTIES ('write.delete.mode'='merge-on-read')"
+    for ((t, props) <- Seq("cow" -> "", "mor" -> mor)) {
+      sql.run(s"CREATE TABLE db.$t (id INT, category STRING) PARTITIONED BY (category)$props")
+      sql.run(s"INSERT INTO db.$t VALUES (1, 'a'), (2, 'b'), (3, 'a')")
+      sql.run(s"DELETE FROM db.$t WHERE id = 3") // MoR: a live delete file
+      spark.conf.set(LakeExtensions.WarehouseConf, wh.toString)
+      spark.sql(s"DELETE FROM lake.db.$t")
+      val after = sql.catalog.loadTable("db", t).get
+      assert(after.dataFiles.isEmpty && after.deleteFiles.isEmpty, t)
+      assert(after.meta.snapshots.last.operation == "truncate", t)
+      assert(spark.sql(s"SELECT COUNT(*) FROM lake.db.$t").head().getLong(0) == 0, t)
+      sql.run(s"DELETE FROM db.$t") // an empty table deletes cleanly too
+      sql.run(s"INSERT INTO db.$t VALUES (4, 'c')")
+      assert(sql.run(s"SELECT id FROM db.$t").collect().map(_.getInt(0)).toSeq == Seq(4), t)
+    }
+  }
+
+  test("LakeSql.run resolves through its own catalog: two warehouses in one " +
+    "session, and DSv2 commits stamped by the injected clock") {
+    val (wa, wb) = (Files.createTempDirectory("graft-wa-wh"), Files.createTempDirectory("graft-wb-wh"))
+    val fixed = java.time.Instant.parse("2026-03-01T00:00:00Z").toEpochMilli
+    val a = new LakeSql(new LakeCatalog(spark, wa, () => fixed))
+    val b = new LakeSql(new LakeCatalog(spark, wb)) // the session warehouse now points at wb
+    for ((sql, n) <- Seq(a -> 1, b -> 3)) {
+      sql.run("CREATE TABLE db.t (id INT) TBLPROPERTIES ('write.update.mode'='merge-on-read')")
+      sql.run(s"INSERT INTO db.t SELECT CAST(id AS INT) FROM range($n)")
+    }
+    a.run("UPDATE db.t SET id = id + 10")
+    b.run("DELETE FROM db.t WHERE id = 0")
+    assert(a.run("SELECT id FROM db.t").collect().map(_.getInt(0)).toSeq == Seq(10))
+    assert(b.run("SELECT id FROM db.t ORDER BY id").collect().map(_.getInt(0)).toSeq == Seq(1, 2))
+    val ta = a.catalog.loadTable("db", "t").get
+    assert(ta.meta.snapshots.map(_.operation) == Seq("append", "update"))
+    assert(ta.meta.snapshots.forall(_.timestampMs == fixed))
+  }
+
+  test("LakeSql.run: a principal without SELECT never reads, whatever the spelling") {
+    val wh = Files.createTempDirectory("graft-deny-wh")
+    val sql = new LakeSql(new LakeCatalog(spark, wh))
+    sql.run("CREATE TABLE db.secret (id INT)")
+    sql.run("INSERT INTO db.secret VALUES (1), (2)")
+    sql.run("CREATE TABLE db.open (id INT) TBLPROPERTIES ('write.delete.mode'='merge-on-read')")
+    sql.run("INSERT INTO db.open VALUES (1), (2), (3)")
+    sql.catalog.grant("db", "open", "eve", Seq("SELECT", "DELETE"))
+    val snap = sql.catalog.loadTable("db", "secret").get.currentSnapshot.get.id
+    for (q <- Seq("SELECT * FROM db.secret",
+        s"SELECT * FROM db.secret VERSION AS OF $snap",
+        "SELECT * FROM db.secret.files",
+        "SELECT COUNT(*) FROM db.open WHERE id IN (SELECT id FROM db.secret)"))
+      intercept[AccessDeniedException](sql.run(q, Some("eve")).collect())
+    intercept[AccessDeniedException](
+      sql.run("DELETE FROM db.open WHERE id IN (SELECT id FROM db.secret)", Some("eve")).collect())
+    // nothing was deleted, and the granted table still reads
+    assert(sql.run("SELECT COUNT(*) FROM db.open", Some("eve")).head().getLong(0) == 3)
+  }
+
+  test("LakeSql.run refuses statements outside the grants model and changes nothing") {
+    val wh = Files.createTempDirectory("graft-refuse-wh")
+    val sql = new LakeSql(new LakeCatalog(spark, wh))
+    sql.run("CREATE TABLE db.t (id INT)")
+    sql.run("INSERT INTO db.t VALUES (1), (2)")
+    val dir = sql.catalog.loadTable("db", "t").get.location
+    def listing() = {
+      val w = Files.walk(dir)
+      try w.iterator().asScala.map(f => (f.toString, Files.size(f))).toSet finally w.close()
+    }
+    val files = listing()
+    val confs = Seq(LakeExtensions.WarehouseConf, LakeExtensions.PrincipalConf)
+    val before = confs.map(spark.conf.getOption)
+    for (p <- Seq(Some("eve"), None); q <- Seq(
+        s"SET ${LakeExtensions.PrincipalConf}=admin",
+        s"SET ${LakeExtensions.WarehouseConf}=${wh.resolve("elsewhere")}",
+        s"RESET ${LakeExtensions.WarehouseConf}",
+        s"INSERT OVERWRITE DIRECTORY '$dir' USING parquet SELECT 1 AS id",
+        "CACHE TABLE db.t",
+        "INSERT INTO spark_catalog.default.t VALUES (1)"))
+      intercept[SqlParseException](sql.run(q, p))
+    assert(confs.map(spark.conf.getOption) == before)
+    assert(listing() == files)
+    assert(sql.run("SELECT COUNT(*) FROM db.t").head().getLong(0) == 2)
   }
 
   test("branch DDL surfaces: ALTER CREATE/DROP BRANCH + CALL fast_forward " +

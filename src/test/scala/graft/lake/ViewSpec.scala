@@ -216,6 +216,16 @@ class ViewSpec extends SparkSpec {
     assert(!cat.tableExists("db", "__mv_mv"))
   }
 
+  test("a materialized view over a WITH clause stamps the tables inside it") {
+    val (cat, sql) = fresh(); seed(cat)
+    sql.run("CREATE MATERIALIZED VIEW db.cm AS " +
+      "WITH x AS (SELECT id FROM db.t) SELECT id FROM x")
+    assert(cat.viewInfo("db", "cm").get.props("deps").startsWith("db.t="))
+    sql.run("INSERT INTO db.t VALUES (4, 'c', 40.0)")
+    // the base moved: the read falls back to live expansion, never stale storage
+    assert(sql.run("SELECT COUNT(*) FROM db.cm").head().getLong(0) == 4)
+  }
+
   test("incremental MV refresh: append-only selection appends the delta only") {
     val (cat, sql) = fresh(); seed(cat)
     sql.run("CREATE MATERIALIZED VIEW db.imv AS " +
