@@ -35,8 +35,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *
   *  - DELETEd coordinates land in a position-delete parquet file;
   *  - UPDATEd rows land in a rewrite data file (v3: with their `_row_id`
-  *    carried through the scan's metadata projection, preserving lineage
-  *    exactly like [[LakeTable.update]]'s MoR path);
+  *    carried through the scan's metadata projection, preserving
+  *    lineage);
   *  - MERGE-inserted rows land in a plain data file whose v3 row-id
   *    range is minted at commit time.
   *
@@ -49,12 +49,15 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * committing deletes against rewritten files (the reason is spelled
   * out on [[LakeDeltaBatchWrite]]). This class serves merge-on-read
   * tables; copy-on-write tables plan through
-  * [[LakeCowRowLevelOperation]]. This is the one SQL path for all three
-  * statements: [[LakeSql.run]] hands them to Spark.
+  * [[LakeCowRowLevelOperation]]. This is the one path for all three
+  * statements, whether they arrive as SQL ([[LakeSql.run]] hands them to
+  * Spark) or as [[LakeTable.delete]], `update`, `merge` and
+  * `mergeClauses`, which build the same row-level commands.
   */
 private[lake] class LakeRowLevelOperation(
-    t: LakeTable, cmd: RowLevelOperation.Command) extends SupportsDelta {
+    target: LakeV2Table, cmd: RowLevelOperation.Command) extends SupportsDelta {
 
+  private val t = target.lakeTable
   private def v3 = t.meta.formatVersion >= 3
 
   override def command(): RowLevelOperation.Command = cmd
@@ -62,7 +65,7 @@ private[lake] class LakeRowLevelOperation(
   /** The operation reads through the table's ordinary MoR-aware scan —
     * Spark asks it for the rowId/metadata columns by name. */
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new LakeV2Table(t).newScanBuilder(options)
+    target.newScanBuilder(options)
 
   override def newWriteBuilder(info: LogicalWriteInfo): DeltaWriteBuilder = {
     val rowSchema = info.schema()
@@ -92,7 +95,7 @@ private[lake] class LakeRowLevelOperation(
             : Array[org.apache.spark.sql.connector.expressions.SortOrder] =
           Array.empty
         override def toBatch: DeltaBatchWrite =
-          new LakeDeltaBatchWrite(t, cmd, rowSchema)
+          new LakeDeltaBatchWrite(t, cmd, rowSchema, h => target.committed = Some(h))
       }
     }
   }
@@ -152,6 +155,10 @@ private[lake] object LakeDeltaWriter {
       .build()
   }
 
+  /** Remove a task's delete file with its directory (checksum included). */
+  def dropDeleteFile(path: String): Unit =
+    LakeTable.deleteRecursively(Paths.get(path).getParent)
+
   /** Effective session values for every conf key ParquetWriteSupport and
     * its schema converter read at init (disassembled from 4.1.2) —
     * EXCEPT the rebase modes: session default EXCEPTION asks the *write
@@ -193,8 +200,8 @@ private[lake] case class LakeDeltaWriteConf(
       * values and stay prunable (VERDICT r6 next #3). */
     partitionCols: Seq[String] = Nil,
     /** "position" (classic parquet coordinates) or "dv" (M37 deletion
-      * vectors): the native DML writers honor the table's
-      * write.delete.format like [[LakeTable]]'s DataFrame DML does. */
+      * vectors): the delta writers honor the table's
+      * write.delete.format, as maintenance's delete rewrite does. */
     deleteFormat: String = "position")
 
 /** One data file written by a task: path, row count, and the partition
@@ -342,7 +349,10 @@ private[lake] class LakeDeltaWriter(conf: LakeDeltaWriteConf, suffix: String)
   // --- position-delete file (simple fixed schema: parquet Group API)
   private var delWriter: ParquetWriter[org.apache.parquet.example.data.Group] = null
   private val delFactory = new SimpleGroupFactory(LakeDeltaWriter.DeleteFileType)
-  private val delPath = s"${conf.deletesDir}/$suffix.parquet"
+  // one directory per writing task under `deletes/`, the layout of
+  // LakeTable's delete-file sets: a task's file never shares a directory
+  // with another task's, and abort drops the directory whole
+  private val delPath = s"${conf.deletesDir}/$suffix/deletes.parquet"
   private var delRows = 0L
 
   // --- data files (arbitrary Spark schema: Spark's own WriteSupport),
@@ -444,7 +454,7 @@ private[lake] class LakeDeltaWriter(conf: LakeDeltaWriteConf, suffix: String)
 
   override def abort(): Unit = {
     if (delWriter != null) delWriter.close()
-    Files.deleteIfExists(Paths.get(delPath))
+    LakeDeltaWriter.dropDeleteFile(delPath)
     updWriters.abort()
     insWriters.abort()
   }
@@ -459,11 +469,13 @@ private[lake] class LakeDeltaWriter(conf: LakeDeltaWriteConf, suffix: String)
   * files, another DML), Meta.commit's expectedVersion CAS must reject
   * with CommitConflictException — reloading here would CAS against the
   * NEW version and let a position-delete file referencing rewritten
-  * (dead) paths commit as a silent no-op, losing the delete. Same
-  * stale-handle contract [[LakeTable]]'s DataFrame DML enforces
-  * (ConcurrencySpec: state-dependent DML never lands silently). */
+  * (dead) paths commit as a silent no-op, losing the delete.
+  * ConcurrencySpec drives stale [[LakeTable]] handles through this
+  * commit: state-dependent DML never lands silently. */
 private[lake] class LakeDeltaBatchWrite(
-    t: LakeTable, cmd: RowLevelOperation.Command, rowSchema: StructType)
+    t: LakeTable, cmd: RowLevelOperation.Command, rowSchema: StructType,
+    /** Receives the handle the commit returns. */
+    committed: LakeTable => Unit = _ => ())
     extends DeltaBatchWrite {
 
   Files.createDirectories(t.location.resolve("deletes"))
@@ -473,9 +485,8 @@ private[lake] class LakeDeltaBatchWrite(
   private val withRowIds =
     cmd != RowLevelOperation.Command.DELETE && t.meta.formatVersion >= 3
 
-  // native DML honors the table's DV preference like LakeTable's
-  // DataFrame DML — the shared gate lives on LakeTable so the two
-  // surfaces can never drift (review r7)
+  // DML honors the table's DV preference through the same gate
+  // consolidatePositionDeletes uses (review r7)
   private val deleteFormat = t.validatedDeleteFormat
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory =
@@ -553,18 +564,18 @@ private[lake] class LakeDeltaBatchWrite(
         ("merge", Map("matched-records" -> nDel.toString,
           "inserted-records" -> nIns.toString))
     }
-    cur.commitSnapshot(
+    committed(cur.commitSnapshot(
       cur.newSnapshot(opName, cur.dataFiles ++ updFinal ++ plainMetas,
         cur.deleteFiles ++ delMetas, summary),
       m => if (m.nextRowId >= 0 && minted > 0) m.copy(nextRowId = start + minted)
-        else m)
+        else m))
     cleanupIfEmpty()
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
     messages.foreach {
       case c: LakeDeltaCommit =>
-        if (c.deletePath != null) Files.deleteIfExists(Paths.get(c.deletePath))
+        if (c.deletePath != null) LakeDeltaWriter.dropDeleteFile(c.deletePath)
         (c.rowIdFiles ++ c.plainFiles).foreach(f =>
           Files.deleteIfExists(Paths.get(f.path)))
       case _ => ()
@@ -623,7 +634,9 @@ private[lake] class LakeDeltaBatchWrite(
   * merge-inserted rows (null metadata) land in a separate file and mint
   * fresh ids at commit. */
 private[lake] class LakeCowRowLevelOperation(
-    t: LakeTable, cmd: RowLevelOperation.Command) extends RowLevelOperation {
+    target: LakeV2Table, cmd: RowLevelOperation.Command) extends RowLevelOperation {
+
+  private val t = target.lakeTable
 
   /** The group-scope predicate, set by NativeReadRule's splice during
     * optimization (single-threaded), read at commit. Default admits
@@ -632,6 +645,8 @@ private[lake] class LakeCowRowLevelOperation(
   @volatile private var scopePred: DataFileMeta => Boolean = _ => true
 
   private[lake] def table: LakeTable = t
+  /** The principal the target table checks; the scan splice gates on it. */
+  private[lake] def principal: Option[String] = target.principal
   private[lake] def setScope(p: DataFileMeta => Boolean): Unit = scopePred = p
 
   override def command(): RowLevelOperation.Command = cmd
@@ -640,7 +655,7 @@ private[lake] class LakeCowRowLevelOperation(
     * reaches BatchScanExec and fails loudly (see class Scaladoc). The
     * real scan is the NativeReadRule splice. */
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new LakeV2Table(t).newScanBuilder(options)
+    target.newScanBuilder(options)
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
     val rowSchema = info.schema()
@@ -663,13 +678,14 @@ private[lake] class LakeCowRowLevelOperation(
             : Array[org.apache.spark.sql.connector.expressions.SortOrder] =
           Array.empty
         override def toBatch: BatchWrite =
-          new LakeCowBatchWrite(t, cmd, rowSchema, () => scopePred)
+          new LakeCowBatchWrite(t, cmd, rowSchema, () => scopePred,
+            h => target.committed = Some(h))
       }
     }
   }
 
   /** v3: every written-back row must keep its lineage id (CoW copies
-    * preserve `_row_id` — same rule as [[LakeTable]]'s cowRewrite).
+    * preserve `_row_id`, as compaction's rewrites do).
     * v2 still requests `_file_path`: a group-based write with NO
     * projected metadata takes Spark's plain DataWritingSparkTask, which
     * does not apply the row projection — the writer would receive the
@@ -748,7 +764,8 @@ private[lake] class LakeCowWriter(conf: LakeDeltaWriteConf, suffix: String)
   * rather than silently basing the swap on rewritten state. */
 private[lake] class LakeCowBatchWrite(
     t: LakeTable, cmd: RowLevelOperation.Command, rowSchema: StructType,
-    scopePred: () => DataFileMeta => Boolean)
+    scopePred: () => DataFileMeta => Boolean,
+    committed: LakeTable => Unit)
     extends BatchWrite {
 
   private val dataDir = t.location.resolve("data").resolve(UUID.randomUUID().toString)
@@ -854,11 +871,11 @@ private[lake] class LakeCowBatchWrite(
           (if (withRowIds) Map("inserted-records" -> nMint.toString)
            else Map("written-records" -> written.toString)) ++ mergeCounts)
     }
-    cur.commitSnapshot(
+    committed(cur.commitSnapshot(
       cur.newSnapshot(opName, keep ++ presMetas ++ mintMetas,
         cur.deleteFiles, summary),
       m => if (m.nextRowId >= 0 && minted > 0) m.copy(nextRowId = start + minted)
-        else m)
+        else m))
     cleanupIfEmpty()
   }
 

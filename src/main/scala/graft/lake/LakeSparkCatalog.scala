@@ -54,6 +54,11 @@ class LakeSparkCatalog extends TableCatalog with SupportsNamespaces
 
   override def name(): String = catalogName
 
+  /** Column defaults (M46): lets the parser hand `ADD COLUMN … DEFAULT`
+    * and `ALTER COLUMN … SET DEFAULT` to [[alterTable]]. */
+  override def capabilities(): java.util.Set[TableCatalogCapability] =
+    java.util.EnumSet.of(TableCatalogCapability.SUPPORT_COLUMN_DEFAULT_VALUE)
+
   private def cat: LakeCatalog = LakeSql.pinned.map(_.catalog).getOrElse {
     val spark = SparkSession.active
     val wh = spark.conf.getOption(LakeExtensions.WarehouseConf).getOrElse(
@@ -224,19 +229,29 @@ class LakeSparkCatalog extends TableCatalog with SupportsNamespaces
       case _: TableChange.SetProperty | _: TableChange.RemoveProperty |
            _: TableChange.RenameColumn | _: TableChange.UpdateColumnType |
            _: TableChange.DeleteColumn => true
+      case a: TableChange.AddColumn => a.position() == null
+      case u: TableChange.UpdateColumnDefaultValue => u.newCurrentDefault() != null
       case _ => false
     }
     if (handled != changes.size)
       throw new UnsupportedOperationException("only SET/UNSET TBLPROPERTIES, " +
-        "RENAME COLUMN, ALTER COLUMN TYPE and DROP COLUMN are supported")
-    // M48 schema evolution: RENAME COLUMN, widening ALTER COLUMN … TYPE
-    // and DROP COLUMN arrive as TableChanges and run the metadata-only
-    // engine paths
+        "ADD COLUMN, RENAME COLUMN, ALTER COLUMN TYPE, ALTER COLUMN SET " +
+        "DEFAULT and DROP COLUMN are supported")
+    // M48 schema evolution and M46 column defaults: ADD COLUMN (with a v3
+    // DEFAULT), RENAME COLUMN, widening ALTER COLUMN … TYPE, ALTER
+    // COLUMN … SET DEFAULT and DROP COLUMN arrive as TableChanges and run
+    // the metadata-only engine paths
     val evolved = changes.foldLeft(t) { (acc, ch) =>
       def one(names: Array[String], what: String) =
         if (names.length == 1) names(0)
         else throw new UnsupportedOperationException(s"nested column $what is not supported")
       ch match {
+        case a: TableChange.AddColumn =>
+          acc.addColumn(one(a.fieldNames(), "add"), a.dataType(),
+            Option(a.defaultValue()).map(d => defaultLiteral(d.getSql)))
+        case u: TableChange.UpdateColumnDefaultValue =>
+          acc.setWriteDefault(one(u.fieldNames(), "default"),
+            defaultLiteral(u.newCurrentDefault().getSql))
         case r: TableChange.RenameColumn => acc.renameColumn(one(r.fieldNames(), "rename"), r.newName())
         case u: TableChange.UpdateColumnType =>
           acc.widenColumn(one(u.fieldNames(), "type change"), u.newDataType())
@@ -263,6 +278,18 @@ class LakeSparkCatalog extends TableCatalog with SupportsNamespaces
       case None => evolved
     }
     new LakeV2Table(t2)
+  }
+
+  /** A DEFAULT clause's literal as the table records it: the SQL text
+    * folded to its string value (`'en'` → `en`, `7` → `7`); the engine
+    * checks it against the column type. */
+  private def defaultLiteral(sql: String): String = {
+    val folded = org.apache.spark.sql.catalyst.expressions.Cast(
+      SparkSession.active.sessionState.sqlParser.parseExpression(sql),
+      org.apache.spark.sql.types.StringType)
+    Option(scala.util.Try(folded.eval()).getOrElse(null)).map(_.toString)
+      .getOrElse(throw new IllegalArgumentException(
+        s"DEFAULT $sql is not a non-null literal"))
   }
 
   override def dropTable(ident: Identifier): Boolean = {
@@ -517,7 +544,8 @@ class LakeV2Table(t: LakeTable, pinnedSnapshot: Option[Long] = None,
     * no longer holds fails loudly (retryable), exactly like the delta
     * paths' CAS. A WHERE-less DELETE and TRUNCATE TABLE arrive as
     * `AlwaysTrue` and truncate the reloaded table: every live data and
-    * delete file drops. */
+    * delete file drops. The handle that commit returns (one version past
+    * the reload) is what [[committed]] hands back. */
   override def canDeleteWhere(filters: Array[Filter]): Boolean =
     pinnedSnapshot.isEmpty &&
       (deletesAll(filters) || t.metadataDeleteSet(filters.toSeq).isDefined)
@@ -528,17 +556,23 @@ class LakeV2Table(t: LakeTable, pinnedSnapshot: Option[Long] = None,
   override def deleteWhere(filters: Array[Filter]): Unit = {
     requirePerm("DELETE")
     val fresh = t.reloaded()
-    if (deletesAll(filters)) fresh.truncate()
-    else fresh.metadataDeleteIfProvable(filters.toSeq).getOrElse(
-      throw new IllegalStateException(
-        s"metadata DELETE on ${t.name}: the whole-file proof no longer " +
-          "holds after reload (a concurrent commit changed the file " +
-          "set) — retry the statement"))
+    committed = Some(
+      if (deletesAll(filters)) fresh.truncate()
+      else fresh.metadataDeleteIfProvable(filters.toSeq).getOrElse(
+        throw new IllegalStateException(
+          s"metadata DELETE on ${t.name}: the whole-file proof no longer " +
+            "holds after reload (a concurrent commit changed the file " +
+            "set) — retry the statement")))
   }
 
   // NativeReadRule swaps eligible SQL reads onto LakeTable.read()'s plan
   private[lake] def lakeTable: LakeTable = t
   private[lake] def pinned: Option[Long] = pinnedSnapshot
+
+  /** The handle returned by the latest commit made through this table —
+    * a row-level write, a metadata delete or an append. [[LakeTable]]'s
+    * DML hands it back so chained calls keep CAS-ing forward. */
+  @volatile private[lake] var committed: Option[LakeTable] = None
 
   private def metaCol(n: String, dt: org.apache.spark.sql.types.DataType) =
     new MetadataColumn {
@@ -587,8 +621,8 @@ class LakeV2Table(t: LakeTable, pinnedSnapshot: Option[Long] = None,
     if (info.command() != RowLevelOperation.Command.DELETE)
       requirePerm("INSERT") // rewrites/inserts add data files
     () =>
-      if (mor) new LakeRowLevelOperation(t, info.command())
-      else new LakeCowRowLevelOperation(t, info.command())
+      if (mor) new LakeRowLevelOperation(this, info.command())
+      else new LakeCowRowLevelOperation(this, info.command())
   }
 
   override def name(): String =
@@ -642,7 +676,8 @@ class LakeV2Table(t: LakeTable, pinnedSnapshot: Option[Long] = None,
               // statement at analysis (TableCapabilityCheck) — LakeSql
               // and overwriteDynamic() are the surfaces that carry those
               // semantics
-              if (replace || overwrite) cur.overwrite(data) else cur.append(data)
+              committed = Some(
+                if (replace || overwrite) cur.overwrite(data) else cur.append(data))
             }
           }
       }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.analysis.{EliminateSubqueryAliases, Relatio
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Expression, Literal, NamedArgumentExpression, SubqueryExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count, HllSketchAgg, HllUnionAgg, Max, Min, Sum}
 import org.apache.spark.sql.catalyst.plans.{Cross, Inner, LeftOuter, RightOuter}
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, AlterColumns, Call, Command, CreateTable, CreateTableAsSelect, DeleteFromTable, Distinct, DropColumns, DropTable, ExecutableDuringAnalysis, Filter, InsertIntoDir, InsertIntoStatement, Join, LogicalPlan, MergeIntoTable, ParsedStatement, Project, RenameColumn, SetTableProperties, SubqueryAlias, TruncateTable, UnresolvedWith, UnsetTableProperties, UpdateTable}
+import org.apache.spark.sql.catalyst.plans.logical.{AddColumns, Aggregate, AlterColumns, Call, Command, CreateTable, CreateTableAsSelect, DeleteFromTable, Distinct, DropColumns, DropTable, ExecutableDuringAnalysis, Filter, InsertIntoDir, InsertIntoStatement, Join, LogicalPlan, MergeIntoTable, ParsedStatement, Project, RenameColumn, SetTableProperties, SubqueryAlias, TruncateTable, UnresolvedWith, UnsetTableProperties, UpdateTable}
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
@@ -34,7 +34,8 @@ class SqlParseException(msg: String, cause: Throwable = null)
   * plans SELECT/WITH (time travel and metadata tables included), INSERT,
   * static INSERT OVERWRITE, TRUNCATE, DELETE, UPDATE, MERGE, CREATE
   * TABLE (CTAS too), DROP TABLE, ALTER TABLE SET/UNSET TBLPROPERTIES,
-  * RENAME COLUMN, ALTER COLUMN TYPE, DROP COLUMN and CALL, and its gates
+  * ADD COLUMN(S) (with a v3 DEFAULT), RENAME COLUMN, ALTER COLUMN TYPE,
+  * ALTER COLUMN SET DEFAULT, DROP COLUMN and CALL, and its gates
   * check the grants. A lake VIEW name is replaced by its analysed
   * expansion first. Any other statement Spark parses is refused.
   *
@@ -84,7 +85,8 @@ class LakeSql(val catalog: LakeCatalog) {
   /** One statement through Catalyst on the pinned catalog. Commands run
     * eagerly; a query is optimised here, so its grants gates (which run
     * at optimisation) fire inside `run`. Parse and analysis failures
-    * surface as [[SqlParseException]] with Spark's message and cause.
+    * surface as [[SqlParseException]] with Spark's message and cause (an
+    * invalid DEFAULT literal as IllegalArgumentException).
     * Spark returns no rows for INSERT/DELETE/UPDATE/MERGE; those report
     * the target's head snapshot as one status row instead. */
   private def query(s: String, p: Option[String], depth: Int = 0,
@@ -94,7 +96,14 @@ class LakeSql(val catalog: LakeCatalog) {
     val plan = qualify(parsed, p, depth, swap)
     val df =
       try ColumnBridge.ofRows(spark, plan)
-      catch { case e: AnalysisException => throw new SqlParseException(e.getMessage, e) }
+      catch {
+        // a DEFAULT literal the column type rejects is a bad argument, as
+        // the engine's addColumn/setWriteDefault report it
+        case e: AnalysisException
+            if Option(e.getCondition).exists(_.startsWith("INVALID_DEFAULT_VALUE")) =>
+          throw new IllegalArgumentException(e.getMessage, e)
+        case e: AnalysisException => throw new SqlParseException(e.getMessage, e)
+      }
     df.queryExecution.optimizedPlan
     val target = Some(plan).collect {
       case i: InsertIntoStatement => i.table
@@ -149,10 +158,11 @@ class LakeSql(val catalog: LakeCatalog) {
       case d: DropTable => target(d.child)
       case t: TruncateTable => target(t.table)
       case a @ (_: SetTableProperties | _: UnsetTableProperties | _: RenameColumn |
-          _: DropColumns) => target(a.children.head)
-      case a: AlterColumns => target(a.table) && a.specs.forall(c => c.newDataType.isDefined &&
+          _: DropColumns | _: AddColumns) => target(a.children.head)
+      case a: AlterColumns => target(a.table) && a.specs.forall(c =>
+        (c.newDataType.isDefined || c.newDefaultExpression.isDefined) &&
         c.newNullability.isEmpty && c.newComment.isEmpty && c.newPosition.isEmpty &&
-        c.newDefaultExpression.isEmpty && !c.dropDefault)
+        !c.dropDefault)
       case c: Call => c.procedure match {
         case UnresolvedProcedure(Seq(_)) => true
         case UnresolvedProcedure(Seq(sys, _)) => sys == "system"
@@ -164,8 +174,8 @@ class LakeSql(val catalog: LakeCatalog) {
   }
 
   /** An ALTER TABLE spelling Spark parses and the native catalog applies;
-    * the others (tags, branches, write order, partition fields, ADD
-    * COLUMN, SET DEFAULT) stay in [[alter]]. */
+    * the others (tags, branches, write order, partition fields) stay in
+    * [[alter]]. */
   private def sparkAlter(s: String): Boolean =
     try routed(parse(s)) catch { case _: SqlParseException => false }
 
@@ -714,9 +724,9 @@ class LakeSql(val catalog: LakeCatalog) {
     status(s"Overwrote $db.$table (${n.getOrElse("?")} row(s))")
   }
 
-  /** The ALTER TABLE spellings the native catalog does not apply: Iceberg's
-    * branch, tag, write-order and partition-field DDL (Spark's parser
-    * rejects them), ALTER COLUMN … SET DEFAULT and ADD COLUMN(S). */
+  /** The ALTER TABLE spellings the native catalog does not apply:
+    * Iceberg's branch, tag, write-order and partition-field DDL (Spark's
+    * parser rejects them). */
   private def alter(s: String, p: Option[String]): DataFrame = {
     val head = """(?is)^ALTER\s+TABLE\s+([\w.]+)\s+(.*)$""".r
       .findFirstMatchIn(s).getOrElse(fail("ALTER TABLE …", s))
@@ -750,14 +760,6 @@ class LakeSql(val catalog: LakeCatalog) {
       t.dropTag(tm.group(1))
       return status(s"Dropped tag ${tm.group(1)} from $db.$table")
     }
-    // v3 column defaults (M46): SET DEFAULT changes the WRITE default
-    // only — initial-defaults are immutable once set (already-written
-    // rows keep reading back the same values)
-    """(?is)^ALTER\s+COLUMN\s+(\w+)\s+SET\s+DEFAULT\s+(.+?)\s*$""".r
-      .findFirstMatchIn(rest).foreach { m =>
-        t.setWriteDefault(m.group(1), unquote(m.group(2)))
-        return status(s"Set write default for ${m.group(1)} on $db.$table")
-      }
     // Iceberg's write-order DDL: sugar over the write.sort-order
     // property the append path already honors (task-local sort → tight
     // footer bounds from day one). Names are validated HERE — the write
@@ -821,20 +823,7 @@ class LakeSql(val catalog: LakeCatalog) {
         t.setPartitionSpec(remaining.map(_._2))
         return status(s"Dropped partition field $spec from $db.$table")
       }
-    // ADD COLUMN(S): each spec is `name TYPE [DEFAULT <literal>]` (M46)
-    val am = """(?is)^ADD\s+COLUMNS?\s+\(?(.*?)\)?\s*$""".r.findFirstMatchIn(rest)
-      .getOrElse(fail("ALTER TABLE …", s))
-    val specs = topLevelSplit(am.group(1), ',').map(_.trim).filter(_.nonEmpty)
-    specs.foldLeft(t) { (acc, spec) =>
-      val (ddlPart, default) =
-        """(?is)^(.*?)\s+DEFAULT\s+(.+)$""".r.findFirstMatchIn(spec) match {
-          case Some(m2) => (m2.group(1), Some(unquote(m2.group(2).trim)))
-          case None => (spec, None)
-        }
-      val f = StructType.fromDDL(ddlPart).fields.head
-      acc.addColumn(f.name, f.dataType, default)
-    }
-    status(s"Added ${specs.size} column(s) to $db.$table")
+    fail("ALTER TABLE …", s)
   }
 
   /** SHOW TABLES [IN db] / SHOW PARTITIONS db.t / SHOW CREATE TABLE
@@ -1043,32 +1032,5 @@ object LakeSql {
       case 2 => (parts(0), parts(1))
       case _ => (parts(parts.length - 2), parts.last)
     }
-  }
-
-  /** Split on `sep` at paren depth 0, outside quotes. */
-  private[lake] def topLevelSplit(s: String, sep: Char): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    var depth = 0; var inQuote = false; var start = 0
-    for (i <- 0 until s.length) {
-      val c = s.charAt(i)
-      if (inQuote) { if (c == '\'') inQuote = false }
-      else c match {
-        case '\'' => inQuote = true
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case `sep` if depth == 0 =>
-          out += s.substring(start, i).trim; start = i + 1
-        case _ =>
-      }
-    }
-    out += s.substring(start).trim
-    out.result().filter(_.nonEmpty)
-  }
-
-  private[lake] def unquote(s: String): String = {
-    val t = s.trim
-    if (t.startsWith("'") && t.endsWith("'") && t.length >= 2)
-      t.substring(1, t.length - 1)
-    else t
   }
 }

@@ -8,8 +8,11 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, CaseWhen, Cast, GreaterThan, LessThan, Literal, Not}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, CaseWhen, Cast, Expression, GreaterThan, LessThan, Literal, Not}
 import org.apache.spark.sql.catalyst.expressions.objects.Invoke
+import org.apache.spark.sql.catalyst.plans.logical.{Assignment, DeleteAction, DeleteFromTable, InsertAction, InsertStarAction, LogicalPlan, MergeAction, MergeIntoTable, SubqueryAlias, UpdateAction, UpdateTable}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{BinaryType, IntegerType, LongType, ObjectType, StringType, StructField, StructType}
@@ -62,6 +65,13 @@ class MissingRowLineageException(msg: String) extends RuntimeException(msg)
   * Building a read launches no Spark job. Writes produce
   * immutable parquet data files; every mutation is a new snapshot
   * committed via Meta.commit.
+  *
+  * DML (`delete`, `update`, `merge`, `mergeClauses`) plans through
+  * Spark's row-level operations, the path SQL DML takes. On
+  * copy-on-write tables the rewrite's scan is [[NativeReadRule]]'s
+  * splice, so the session needs `spark.sql.extensions =
+  * graft.lake.LakeExtensions`; without it a copy-on-write DELETE,
+  * UPDATE or MERGE fails at planning.
   *
   * Row lineage (v3): rows appended to implicit files get ids
   * firstRowId + row_index; files produced by UPDATE/CoW/compaction carry
@@ -185,8 +195,6 @@ class LakeTable(
 
   private def isMorDelete: Boolean =
     meta.props.getOrElse("write.delete.mode", "copy-on-write") == "merge-on-read"
-  private def isMorUpdate: Boolean =
-    meta.props.getOrElse("write.update.mode", "copy-on-write") == "merge-on-read"
 
   /** Sequence number the next commit will carry (single-writer model, like
     * the reference's single upgrade driver — SURVEY.md §7.4). */
@@ -1131,8 +1139,8 @@ class LakeTable(
   /** Table property selecting the position-delete representation:
     * classic 2-column parquet (`position`, default) or v3 deletion
     * vectors (`dv`, M37). DV requires format-version 3 — a v2 reader has
-    * no notion of them. One definition gates BOTH this class's DataFrame
-    * DML and the native DML writers (review r7). */
+    * no notion of them. One definition gates BOTH the row-level DML
+    * writers and [[consolidatePositionDeletes]] (review r7). */
   private[lake] def validatedDeleteFormat: String = {
     val f = meta.props.getOrElse("write.delete.format", "position")
     if (f == "dv" && meta.formatVersion < 3)
@@ -1142,8 +1150,9 @@ class LakeTable(
     f
   }
 
-  /** Write a position-delete file set; returns None (and leaves no orphan
-    * files) when the predicate matched nothing. One data pass: the write,
+  /** Write a position-delete file set from (file_path, pos) rows — the
+    * output of [[consolidatePositionDeletes]]; returns None (and leaves no
+    * orphan files) when there are no rows. One data pass: the write,
     * then each file's row count from its footer on the driver. Routes to
     * deletion vectors when the table asks for them
     * ([[validatedDeleteFormat]]). */
@@ -1555,36 +1564,23 @@ class LakeTable(
       Map("removed-data-files" -> dataFiles.size.toString)))
 
   // ------------------------------------------------------------------- DML
+  //
+  // DELETE, UPDATE and MERGE have one code path, the SQL statements': each
+  // call builds Spark's row-level command over this handle's own
+  // [[LakeV2Table]] and Catalyst plans it — WriteDelta
+  // ([[LakeRowLevelOperation]]) on merge-on-read tables, ReplaceData
+  // ([[LakeCowRowLevelOperation]], scanned through [[NativeReadRule]]) on
+  // copy-on-write ones, and the whole-file metadata delete through
+  // `canDeleteWhere`/`deleteWhere`.
 
   /** DELETE FROM … WHERE cond (M4): a predicate provably covering whole
     * files commits METADATA-ONLY (the files drop from the live set — no
     * scan, no rewrite, no delete files; Iceberg's metadata delete and
     * the shape "drop last month from a 100 TB table" must take);
-    * otherwise merge-on-read writes a position-delete file and
-    * copy-on-write rewrites affected data files. */
-  def delete(cond: Column): LakeTable = {
-    // Resolve the predicate against an empty LocalRelation probe: Spark 4
-    // Columns carry UnresolvedFunction('=') nodes, and only analysis
-    // turns them into the EqualTo/In shapes the proof matches. Zero I/O;
-    // an unanalyzable condition just forfeits the metadata path and the
-    // row-level paths raise their canonical error.
-    val conjuncts: Seq[org.apache.spark.sql.catalyst.expressions.Expression] =
-      try {
-        val probe = spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-          .filter(cond)
-        probe.queryExecution.analyzed.collectFirst {
-          case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
-        }.map(SourceFilters.splitConjuncts).getOrElse(Nil)
-      } catch { case scala.util.control.NonFatal(_) => Nil }
-    val translated = conjuncts.map(SourceFilters.toSource)
-    // the proof needs EVERY conjunct represented — a dropped conjunct
-    // would widen the delete, so any untranslatable part forfeits the
-    // metadata path entirely
-    val asFilters = if (translated.forall(_.isDefined)) translated.flatten else Nil
-    (if (asFilters.nonEmpty) metadataDeleteIfProvable(asFilters) else None)
-      .getOrElse(if (isMorDelete) morDelete(cond, None) else cowRewrite(cond, None))
-  }
+    * otherwise merge-on-read writes position deletes (or DVs) and
+    * copy-on-write rewrites the affected data files. */
+  def delete(cond: Column): LakeTable =
+    rowLevel(target => DeleteFromTable(target, expression(cond)))
 
   /** Iceberg's metadata DELETE: Some(committed table) when every file
     * the filters might touch is PROVABLY all-match — each conjunct an
@@ -1594,8 +1590,8 @@ class LakeTable(
     * (null OR empty string) never proves, so a proven file contains ONLY
     * rows where the predicate is TRUE — NULL-predicate rows (which must
     * survive a SQL DELETE) cannot exist in it. Transformed partitions
-    * (bucket/truncate/time) are many-to-one and never prove. Also the
-    * DSv2 `SupportsDelete.deleteWhere` body. Any doubt → None → the
+    * (bucket/truncate/time) are many-to-one and never prove. The DSv2
+    * `SupportsDelete.deleteWhere` body. Any doubt → None → the
     * row-level paths own correctness. */
   private[lake] def metadataDeleteIfProvable(
       filters: Seq[org.apache.spark.sql.sources.Filter]): Option[LakeTable] =
@@ -1638,84 +1634,53 @@ class LakeTable(
     else Some((drop, keep))
   }
 
-  /** UPDATE … SET assignments WHERE cond (M5): MoR emits one commit with a
-    * position-delete file + appended rewritten rows (J3); CoW rewrites the
-    * affected files in place. v3 rewritten rows keep their `_row_id`. */
+  /** UPDATE … SET assignments WHERE cond (M5): merge-on-read deletes the
+    * old rows' positions and appends the rewritten rows in one commit
+    * (J3); copy-on-write rewrites the affected files. v3 rewritten rows
+    * keep their `_row_id`. */
   def update(assignments: Map[String, Column], cond: Column): LakeTable = {
-    val as = resolveAssignments(assignments)
-    if (isMorUpdate) morDelete(cond, Some(as)) else cowRewrite(cond, Some(as))
+    val set = resolveAssignments(assignments)
+    rowLevel(target => UpdateTable(target, set, Some(expression(cond))))
   }
 
   /** SET-clause targets resolved against the schema case-insensitively
-    * (Spark SQL's default resolution); an unknown target fails loudly —
-    * silently dropping it would rewrite every affected file with
-    * unchanged values and report success (review r6). */
-  private def resolveAssignments(as: Map[String, Column]): Map[String, Column] = {
-    val byLower = schema.fieldNames.map(n => n.toLowerCase -> n).toMap
-    as.map { case (k, v) =>
-      byLower.getOrElse(k.toLowerCase, throw new IllegalArgumentException(
+    * (Spark SQL's default resolution), each value cast to its column's
+    * type; an unknown target fails loudly — silently dropping it would
+    * rewrite every affected file with unchanged values and report
+    * success (review r6). */
+  private def resolveAssignments(as: Map[String, Column]): Seq[Assignment] = {
+    val byLower = schema.fields.map(f => f.name.toLowerCase -> f).toMap
+    as.toSeq.map { case (k, v) =>
+      val f = byLower.getOrElse(k.toLowerCase, throw new IllegalArgumentException(
         s"assignment targets unknown column '$k' " +
-          s"(columns: ${schema.fieldNames.mkString(", ")})")) -> v
+          s"(columns: ${schema.fieldNames.mkString(", ")})"))
+      Assignment(UnresolvedAttribute.quoted(f.name), expression(v.cast(f.dataType)))
     }
   }
 
-  private def applyAssignments(
-      df: DataFrame, as: Map[String, Column], keepRowId: Boolean): DataFrame = {
-    val dataCols = schema.fields.map { f =>
-      as.get(f.name).map(_.cast(f.dataType).as(f.name)).getOrElse(col(f.name))
-    }
-    df.select((dataCols ++ (if (keepRowId) Seq(col(RowIdCol)) else Nil)): _*)
-  }
+  private def expression(c: Column): Expression = ColumnBridge.expression(c)
 
-  private def morDelete(cond: Column, upd: Option[Map[String, Column]]): LakeTable = {
-    val seq = nextSeq
-    upd match {
-      case None =>
-        // delete-only: only the (file, pos) coordinates flow — narrow
-        // columns, full column pruning at the scan.
-        val coords = readWithCoords().filter(cond)
-          .select(col(FileCol).as("file_path"), col(PosCol).as("pos"))
-        writeDeleteFiles(coords, seq) match {
-          case None => this
-          case Some((delMeta, n)) =>
-            commitSnapshot(newSnapshot("delete", dataFiles, deleteFiles ++ delMeta,
-              Map("deleted-records" -> n.toString)))
-        }
-      case Some(as) =>
-        val keepIds = meta.formatVersion >= 3
-        val matched = readWithCoords(withRowIds = keepIds).filter(cond).cache()
-        try {
-          val coords = matched
-            .select(col(FileCol).as("file_path"), col(PosCol).as("pos"))
-          writeDeleteFiles(coords, seq) match {
-            case None => this
-            case Some((delMeta, n)) =>
-              val rewritten = applyAssignments(matched, as, keepRowId = keepIds)
-              if (keepIds) {
-                // v3: updated rows keep their lineage ids — no new ids minted
-                val newData = writeDataFiles(rewritten, -1L, seq, withRowIdCol = true)
-                commitSnapshot(
-                  newSnapshot("update", dataFiles ++ newData, deleteFiles ++ delMeta,
-                    Map("updated-records" -> n.toString)))
-              } else {
-                val start = meta.computedNextRowId
-                val newData = writeDataFiles(rewritten, start, seq)
-                commitSnapshot(
-                  newSnapshot("update", dataFiles ++ newData, deleteFiles ++ delMeta,
-                    Map("updated-records" -> n.toString)))
-              }
-          }
-        } finally matched.unpersist()
-    }
+  /** Runs one row-level command against this handle and returns the
+    * handle its commit produced (so `t.delete(..).update(..)` keeps
+    * CAS-ing forward), or this one when nothing committed. The target is
+    * this handle's own [[LakeV2Table]], not a catalog lookup: a branch
+    * handle commits to its branch, the injected clock stamps the
+    * snapshot, a [[LakeCatalog]] registered under any name (or none)
+    * works, and a stale handle fails the delta/rewrite commit's CAS with
+    * [[CommitConflictException]]. `principal = None`: the DataFrame API
+    * is ungated, as [[append]] is. */
+  private def rowLevel(command: LogicalPlan => LogicalPlan): LakeTable = {
+    val target = new LakeV2Table(this, principal = None)
+    ColumnBridge.ofRows(spark,
+      command(DataSourceV2Relation.create(target, None, None))) // runs now
+    target.committed.getOrElse(this)
   }
 
   /** Paths of the files among `files` whose LIVE rows match `cond`
-    * (rows where it is TRUE) — the ONE matched-file discovery used by
-    * both CoW rewrite paths (builder [[cowRewrite]] and the native
-    * ReplaceData scope in NativeReadRule), so live-row semantics and
-    * path normalization cannot diverge between them. One narrow scan:
-    * Catalyst prunes to the predicate's columns + the file path. Driver
-    * memory is O(matched file paths). */
+    * (rows where it is TRUE) — the matched-file discovery that scopes
+    * the copy-on-write ReplaceData scan in [[NativeReadRule]]. One narrow
+    * scan: Catalyst prunes to the predicate's columns + the file path.
+    * Driver memory is O(matched file paths). */
   private[lake] def matchedFilePaths(
       cond: Column, files: Seq[DataFileMeta]): Set[String] =
     readLiveFiles(files, withRowIds = false)
@@ -1727,71 +1692,11 @@ class LakeTable(
     * gate for surfaces outside the lake package (the streaming source). */
   def requireGrant(perm: String): Unit = Grants.require(spark, this, perm)
 
-  /** Copy-on-write delete/update: rewrite only the files containing
-    * matched rows; untouched files are carried over.
-    *
-    * Two passes, neither cached (VERDICT r4 #2): affected-path discovery
-    * is a narrow projection (Catalyst prunes the scan to the predicate's
-    * columns + file path), then the rewrite re-scans ONLY the affected
-    * files — the shape compaction already uses. A CoW DELETE touching one
-    * file of a 100 TB table reads the table once narrow and that one file
-    * wide, instead of pinning a full-table cache. */
-  private def cowRewrite(cond: Column, upd: Option[Map[String, Column]]): LakeTable = {
-    val seq = nextSeq
-    val keepIds = meta.formatVersion >= 3
-    val affectedPaths = matchedFilePaths(cond, dataFiles)
-    if (affectedPaths.isEmpty) return this
-    val (affectedMeta, keep) = dataFiles.partition(f => affectedPaths.contains(f.path))
-    val affectedRows = readLiveFiles(affectedMeta, withRowIds = keepIds)
-    val outCols = schema.fieldNames.map(col) ++
-      (if (keepIds) Seq(col(RowIdCol)) else Nil)
-    // SQL WHERE semantics: a row is matched only when cond is TRUE —
-    // rows where cond evaluates to NULL must SURVIVE the rewrite, so the
-    // survivor filter is !coalesce(cond, false), not !cond (which would
-    // silently drop NULL-predicate rows from rewritten files)
-    val survivors = affectedRows
-      .filter(!coalesce(cond, lit(false))).select(outCols: _*)
-    val replacement = upd match {
-      case None => survivors
-      case Some(as) =>
-        survivors.unionByName(
-          applyAssignments(affectedRows.filter(cond), as, keepRowId = keepIds))
-    }
-    if (keepIds) {
-      // v3: survivor + updated rows carry their original _row_id
-      val newData = writeDataFiles(replacement, -1L, seq, withRowIdCol = true)
-      commitSnapshot(
-        newSnapshot(if (upd.isEmpty) "delete" else "update",
-          keep ++ newData, deleteFiles,
-          Map("rewritten-files" -> affectedMeta.size.toString)))
-    } else {
-      val start = if (meta.nextRowId >= 0) meta.nextRowId else meta.computedNextRowId
-      val newData = writeDataFiles(replacement, start, seq)
-      val written = newData.map(_.rowCount).sum
-      commitSnapshot(
-        newSnapshot(if (upd.isEmpty) "delete" else "update",
-          keep ++ newData, deleteFiles,
-          Map("rewritten-files" -> affectedMeta.size.toString)),
-        m => if (m.nextRowId >= 0) m.copy(nextRowId = start + written) else m)
-    }
-  }
-
-  /** MERGE INTO (upsert): one atomic commit combining a position-delete
-    * file for matched target rows, rewritten rows for WHEN MATCHED
-    * UPDATE, and appended source rows for WHEN NOT MATCHED INSERT.
-    *
-    * The target is exposed under alias `t` and the source under `s`, so
-    * `on` and assignment expressions use qualified refs
-    * (`col("t.id") === col("s.id")`, `col("s.amount")`). Multiple source
-    * rows matching one target row is an error (ambiguous update — the
-    * standard MERGE cardinality rule). INSERT takes the source's
-    * target-schema columns by name. v3 lineage: updated rows keep their
-    * `_row_id`; inserted rows mint new ids.
-    *
-    * Scale: the matched side flows as (coords + joined columns) through
-    * an ordinary equi-join on the merge key (shuffle or broadcast by
-    * size); the cardinality check is a metadata-thin aggregate over the
-    * matched coords only. */
+  /** MERGE INTO (upsert) with unconditional clauses: WHEN MATCHED
+    * UPDATE/DELETE and WHEN NOT MATCHED INSERT *. The target is exposed
+    * under alias `t` and the source under `s`, so `on` and assignment
+    * expressions use qualified refs (`col("t.id") === col("s.id")`,
+    * `col("s.amount")`). */
   def merge(
       source: DataFrame,
       on: Column,
@@ -1804,14 +1709,17 @@ class LakeTable(
       if (insertNotMatched) Some(MergeWhenNotMatched(None, None)) else None,
       targetAlias, sourceAlias)
 
-  /** Full multi-clause MERGE (r10): matched clauses fire in order per
-    * row (first condition that holds wins; no clause ⇒ row untouched),
-    * at most one conditional NOT MATCHED insert with `INSERT *` or an
-    * explicit column list (unlisted columns take the v3 write-default
-    * when declared, else NULL). Conditions and assignments see both
-    * aliases. Same physical shape as before: MoR mints ONE position-
-    * delete file over the ACTED rows + appends rewrites/inserts; CoW
-    * swaps only files containing acted rows and never mints deletes. */
+  /** Full multi-clause MERGE (r10), planned as Spark's `MergeIntoTable`
+    * with the target under `targetAlias` and the source under
+    * `sourceAlias`: matched clauses fire in order per row (first
+    * condition that holds wins; no clause ⇒ row untouched), at most one
+    * conditional NOT MATCHED insert with `INSERT *` or an explicit column
+    * list (unlisted columns take the v3 write-default when declared, else
+    * NULL). Conditions and assignments see both aliases. Multiple source
+    * rows matching one target row that a clause acts on is an
+    * `IllegalArgumentException` (the standard MERGE cardinality rule).
+    * One commit; v3 updated rows keep their `_row_id`, inserted rows
+    * mint new ids; a copy-on-write table never gets a delete file. */
   def mergeClauses(
       source: DataFrame,
       on: Column,
@@ -1824,158 +1732,31 @@ class LakeTable(
         * source match — conditions/assignments see the target alias
         * only. Same first-wins ordering as the matched clauses. */
       notMatchedBySource: Seq[MergeWhenMatched] = Nil): LakeTable = {
-    val seq = nextSeq
-    val keepIds = meta.formatVersion >= 3 && meta.nextRowId >= 0
-    val tgt = readWithCoords(withRowIds = keepIds).alias(targetAlias)
-    val src = source.alias(sourceAlias)
-    // clause dispatch: 1-based index of the FIRST clause whose condition
-    // holds; 0 = matched but no clause fires (row untouched)
-    def dispatch(cls: Seq[MergeWhenMatched]): Column = cls.zipWithIndex
-      .foldLeft(when(lit(false), 0)) { case (acc, (cl, i)) =>
-        acc.when(cl.condition.getOrElse(lit(true)), i + 1)
-      }.otherwise(0)
-    val matched = tgt.join(src, on, "inner")
-      .withColumn(MergeClauseCol, dispatch(matchedClauses)).cache()
-    // target rows with NO source pairing (each appears exactly once —
-    // anti-join — so no cardinality guard is needed on this side)
-    val unmatchedTgt =
-      if (notMatchedBySource.isEmpty) None
-      else Some(tgt.join(src, on, "left_anti")
-        .withColumn(MergeClauseCol, dispatch(notMatchedBySource)).cache())
-    try {
-      val acted = matched.filter(col(MergeClauseCol) > 0)
-      val actedU = unmatchedTgt.map(_.filter(col(MergeClauseCol) > 0))
-      def coordsOf(df: DataFrame) =
-        df.select(col(FileCol).as("file_path"), col(PosCol).as("pos"))
-      val actedCoords = actedU.map(u => coordsOf(acted).union(coordsOf(u)))
-        .getOrElse(coordsOf(acted))
-      // cardinality guard only when a matched ACTION exists — standard
-      // MERGE semantics forbid ambiguous update/delete, not insert-only
-      // merges whose source happens to multi-match. The guard covers ALL
-      // matched pairs (conditional clauses included): which clause fires
-      // for a doubly-matched row depends on the pairing, so the
-      // ambiguity exists even when only one pairing passes a condition.
-      if (matchedClauses.nonEmpty) {
-        val dups = matched.groupBy(col(FileCol), col(PosCol)).count()
-          .filter(col("count") > 1).limit(1).count()
-        if (dups > 0)
-          throw new IllegalArgumentException(
-            "MERGE: multiple source rows match the same target row " +
-              "(ambiguous update); deduplicate the source on the merge key")
-      }
-
-      // WHEN MATCHED UPDATE output: clause-i rows with assignments applied
-      def updatedRows(rows: DataFrame, i: Int,
-          rawAs: Map[String, Column]): DataFrame = {
-        val as = resolveAssignments(rawAs)
-        val outCols = schema.fields.map { f =>
-          as.get(f.name).map(_.cast(f.dataType).as(f.name))
-            .getOrElse(col(s"$targetAlias.${f.name}").as(f.name))
-        } ++ (if (keepIds) Seq(col(RowIdCol)) else Nil)
-        rows.filter(col(MergeClauseCol) === i + 1).select(outCols.toSeq: _*)
-      }
-      def updateParts(rows: DataFrame, cls: Seq[MergeWhenMatched]) =
-        cls.zipWithIndex.collect {
-          case (MergeWhenMatched(_, MergeMatched.Update(as)), i) =>
-            updatedRows(rows, i, as)
-        }
-      val updateUnion: Option[DataFrame] =
-        (updateParts(matched, matchedClauses) ++
-          unmatchedTgt.toSeq.flatMap(u => updateParts(u, notMatchedBySource)))
-          .reduceOption(_ unionByName _)
-      // implicit-id accounting (v2 / unminted v3): rewritten rows take
-      // [start, start+nRw), inserts continue from there — disjoint ranges
-      // keep a later v3 upgrade's computedNextRowId collision-free
-      val start = if (meta.nextRowId >= 0) meta.nextRowId else meta.computedNextRowId
-      def writeInserts(from: Long): Seq[DataFileMeta] = notMatched match {
-        case None => Nil
-        case Some(MergeWhenNotMatched(cond, values)) =>
-          val base0 = src.join(tgt, on, "left_anti")
-          val base = cond.map(base0.filter).getOrElse(base0)
-          val writeDefaults = meta.columnDefaults
-            .flatMap(d => d.write.map(d.colName -> _)).toMap
-          val projected = values match {
-            case None => base.select(schema.fields.map(f =>
-              col(f.name).cast(f.dataType).as(f.name)).toSeq: _*)
-            case Some(vs0) =>
-              val vs = resolveAssignments(vs0)
-              base.select(schema.fields.map { f =>
-                vs.get(f.name).map(_.cast(f.dataType).as(f.name)).getOrElse(
-                  writeDefaults.get(f.name)
-                    .map(v => lit(v).cast(f.dataType).as(f.name))
-                    .getOrElse(lit(null).cast(f.dataType).as(f.name)))
-              }.toSeq: _*)
-          }
-          writeDataFiles(projected, from, seq)
-      }
-
-      if (isMorUpdate) {
-        // MoR: acted coords → one position-delete file; updates append
-        val delOpt =
-          if (matchedClauses.isEmpty && notMatchedBySource.isEmpty) None
-          else writeDeleteFiles(actedCoords, seq)
-        val rewritten: Seq[DataFileMeta] = updateUnion match {
-          case Some(u) if delOpt.isDefined =>
-            writeDataFiles(u, start, seq, withRowIdCol = keepIds)
-          case _ => Nil // delete-only clauses (or nothing acted): no rewrite
-        }
-        val nRw = if (keepIds) 0L else rewritten.map(_.rowCount).sum
-        val inserted = writeInserts(start + nRw)
-        val nIns = inserted.map(_.rowCount).sum
-        if (delOpt.isEmpty && inserted.isEmpty) return this
-        val (delMeta, nMatched) = delOpt.getOrElse((Nil, 0L))
-        commitSnapshot(
-          newSnapshot("merge", dataFiles ++ rewritten ++ inserted,
-            deleteFiles ++ delMeta,
-            Map("matched-records" -> nMatched.toString,
-              "inserted-records" -> nIns.toString)),
-          m => if (m.nextRowId >= 0) m.copy(nextRowId = start + nIns) else m)
-      } else {
-        // CoW: rewrite only the files containing ACTED rows — a merge
-        // on a copy-on-write table must NOT mint delete files (they would
-        // break strict v2 readers, the failure this engine exists to fix).
-        // No firing clause ⇒ matched rows are untouched: rewrite NOTHING
-        // (an unconditional rewrite here silently deleted every matched
-        // row on insert-only merges — review r6)
-        val affectedPaths =
-          if (matchedClauses.isEmpty && notMatchedBySource.isEmpty)
-            Set.empty[String]
-          else actedCoords.select("file_path").distinct()
-            .collect().map(_.getString(0)).toSet
-        val (affectedMeta, keep) = dataFiles.partition(f =>
-          affectedPaths.contains(f.path))
-        val nMatched = acted.count() + actedU.map(_.count()).getOrElse(0L)
-        val rewritten: Seq[DataFileMeta] =
-          if (affectedMeta.isEmpty) Nil
-          else {
-            val affectedRows = tgt.join(broadcast(fileAttrs(affectedMeta)),
-              col(FileCol) === col(AttrPath), "left_semi")
-            val survivors = affectedRows
-              .join(broadcast(actedCoords),
-                col(FileCol) === col("file_path") && col(PosCol) === col("pos"),
-                "left_anti")
-              .select((schema.fieldNames.map(n => col(s"$targetAlias.$n").as(n)) ++
-                (if (keepIds) Seq(col(RowIdCol)) else Nil)).toSeq: _*)
-            val replacement = updateUnion match {
-              case Some(u) => survivors.unionByName(u)
-              case None => survivors // delete-only clauses: drop acted rows
-            }
-            writeDataFiles(replacement, start, seq, withRowIdCol = keepIds)
-          }
-        val nRw = if (keepIds) 0L else rewritten.map(_.rowCount).sum
-        val inserted = writeInserts(start + nRw)
-        val nIns = inserted.map(_.rowCount).sum
-        if (affectedMeta.isEmpty && inserted.isEmpty) return this
-        commitSnapshot(
-          newSnapshot("merge", keep ++ rewritten ++ inserted, deleteFiles,
-            Map("matched-records" -> nMatched.toString,
-              "inserted-records" -> nIns.toString,
-              "rewritten-files" -> affectedMeta.size.toString)),
-          m => if (m.nextRowId >= 0) m.copy(nextRowId = start + nIns) else m)
-      }
-    } finally {
-      matched.unpersist()
-      unmatchedTgt.foreach(_.unpersist())
+    def action(cl: MergeWhenMatched): MergeAction = cl.action match {
+      case MergeMatched.Update(as) =>
+        UpdateAction(cl.condition.map(expression), resolveAssignments(as), fromStar = false)
+      case MergeMatched.Delete => DeleteAction(cl.condition.map(expression))
+    }
+    val matched = matchedClauses.map(action)
+    val bySource = notMatchedBySource.map(action)
+    val inserts = notMatched.toSeq.map {
+      case MergeWhenNotMatched(c, None) => InsertStarAction(c.map(expression))
+      case MergeWhenNotMatched(c, Some(vs)) =>
+        InsertAction(c.map(expression), resolveAssignments(vs))
+    }
+    val src = SubqueryAlias(sourceAlias, source.queryExecution.analyzed)
+    try rowLevel(target => MergeIntoTable(SubqueryAlias(targetAlias, target), src,
+      expression(on), matched, inserts, bySource, withSchemaEvolution = false))
+    catch {
+      case e: Exception if Iterator.iterate[Throwable](e)(_.getCause)
+          .takeWhile(_ != null).exists {
+            case s: org.apache.spark.SparkThrowable =>
+              s.getCondition == "MERGE_CARDINALITY_VIOLATION"
+            case _ => false
+          } =>
+        throw new IllegalArgumentException(
+          "MERGE: multiple source rows match the same target row " +
+            "(ambiguous update); deduplicate the source on the merge key", e)
     }
   }
 
@@ -2453,8 +2234,6 @@ object LakeTable {
   private[lake] val FileCol = "__fp"
   private[lake] val PosCol = "__pos"
   private[lake] val RowIdCol = "_row_id"
-  /** 1-based index of the first firing WHEN MATCHED clause (0 = none). */
-  private[lake] val MergeClauseCol = "__merge_clause"
   private[lake] val PartPrefix = "__p_"
   private[lake] val AttrPath = "__attr_path"
   private[lake] val AttrSeq = "__attr_seq"

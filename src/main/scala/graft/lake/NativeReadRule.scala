@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeSet
 import org.apache.spark.sql.catalyst.{expressions => cexp}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count}
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Command, Filter, LocalRelation, LogicalPlan, Project, ReplaceData}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Command, Distinct, Filter, LocalRelation, LogicalPlan, Project, ReplaceData}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, DataSourceV2ScanRelation}
 
@@ -183,17 +183,19 @@ case class NativeReadRule(session: SparkSession) extends Rule[LogicalPlan]
     *     projected to `__fp`, distinct, collected — yielding exactly the
     *     files that CONTAIN matching rows. This is Iceberg's runtime
     *     group filtering done at plan time (the V1-bridge engine can't
-    *     host a DPP subquery), and the same affected-path pattern
-    *     [[LakeTable]]'s cowRewrite uses: a 100 TB DELETE touching one file
+    *     host a DPP subquery): a 100 TB DELETE touching one file
     *     reads the table once narrow and rewrites that one file, instead
     *     of rewriting everything the stats couldn't bound. A conjunct
     *     SUBSET keeps discovery sound (matching-file superset); any
     *     discovery failure falls back to the metadata-only scope —
-    *     conservative, never wrong. */
+    *     conservative, never wrong. A MERGE's condition constrains the
+    *     source too: its discovery runs Spark's group filter instead
+    *     ([[mergeScope]]). */
   private def spliceCowScan(cow: LakeCowRowLevelOperation,
-      output: Seq[Attribute], conjuncts: Seq[Expression]): LogicalPlan = {
+      output: Seq[Attribute], conjuncts: Seq[Expression],
+      groupFilter: Option[Expression]): LogicalPlan = {
     val lake = cow.table
-    Grants.require(session, lake, "SELECT") // same gate as the bridged scan
+    Grants.require(cow.principal, lake, "SELECT") // same gate as the bridged scan
     val outSet = AttributeSet(output)
     val targetConjuncts = conjuncts.filter(_.references.subsetOf(outSet))
     val translated = targetConjuncts.flatMap(toSource)
@@ -202,7 +204,10 @@ case class NativeReadRule(session: SparkSession) extends Rule[LogicalPlan]
     val statsPred = StatsPruning.filePredicate(lake.schema, translated)
     val pruned: DataFileMeta => Boolean =
       f => partPred(f.partitionValues) && statsPred(f)
-    val scope = matchedFileScope(lake, targetConjuncts, pruned)
+    val scope = groupFilter match {
+      case Some(e: cexp.Exists) => mergeScope(lake, e, output, pruned)
+      case _ => matchedFileScope(lake, targetConjuncts, pruned)
+    }
     cow.setScope(scope)
     val wantsRowIds = output.exists(_.name == LakeTable.RowIdCol)
     val base = lake.readWithCoords(withRowIds = wantsRowIds, fileFilter = scope)
@@ -222,11 +227,11 @@ case class NativeReadRule(session: SparkSession) extends Rule[LogicalPlan]
   /** Exact group scope for CoW DML: of the metadata-pruned files, keep
     * only those whose LIVE rows actually match the condition's usable
     * (deterministic, name-resolvable) conjuncts — one narrow discovery
-    * scan through [[LakeTable.matchedFilePaths]], the same helper the
-    * builder-path cowRewrite uses (shared live-row semantics and path
-    * normalization). Any failure (unresolvable refs, subquery planning,
-    * anything) falls back to the metadata-only predicate: a larger scope
-    * is only extra rewrite work, never wrong.
+    * scan through [[LakeTable.matchedFilePaths]] (live-row semantics and
+    * path normalization of the table's own read). Any failure
+    * (unresolvable refs, subquery planning, anything) falls back to the
+    * metadata-only predicate: a larger scope is only extra rewrite work,
+    * never wrong.
     *
     * Skipped entirely when every usable conjunct references only
     * PARTITION columns: a file admitted by the partition predicate then
@@ -268,6 +273,33 @@ case class NativeReadRule(session: SparkSession) extends Rule[LogicalPlan]
     }.getOrElse(pruned)
   }
 
+  /** MERGE's group scope: of the metadata-pruned files, those holding a
+    * live target row that some source row matches. `groupFilter` is the
+    * `EXISTS (SELECT … FROM source WHERE <on>)` Spark's MERGE rewrite
+    * attaches to the ReplaceData (correlated on the target's output); it
+    * runs here as one eager semi-join over the pruned files' live rows —
+    * Iceberg's runtime group filtering, done at plan time like
+    * [[matchedFileScope]]. Absent for a MERGE with NOT MATCHED BY SOURCE
+    * clauses, which must rewrite every scoped file. Any failure falls
+    * back to the metadata-only predicate. */
+  private def mergeScope(lake: LakeTable, groupFilter: cexp.Exists,
+      output: Seq[Attribute],
+      pruned: DataFileMeta => Boolean): DataFileMeta => Boolean =
+    scala.util.Try {
+      val live = lake.readLiveFiles(lake.dataFiles.filter(pruned), withRowIds = false)
+        .queryExecution.analyzed
+      val byName = live.output.map(a => a.name -> a).toMap
+      val fp = byName(LakeTable.FileCol)
+      // the live rows under the target relation's exprIds, so the
+      // filter's outer references resolve against them
+      val target = Project(output.filter(a => byName.contains(a.name))
+        .map(a => Alias(byName(a.name), a.name)(exprId = a.exprId)) :+ fp, live)
+      val paths = org.apache.spark.sql.graft.ColumnBridge.ofRows(session,
+        Distinct(Project(Seq(fp), Filter(groupFilter, target))))
+        .collect().map(_.getString(0)).toSet
+      (f: DataFileMeta) => pruned(f) && paths.contains(f.path)
+    }.getOrElse(pruned)
+
   override def apply(plan: LogicalPlan): LogicalPlan = plan match {
     case rd: ReplaceData =>
       // Only the QUERY subtree is transformed: rd.table/originalTable are
@@ -278,7 +310,7 @@ case class NativeReadRule(session: SparkSession) extends Rule[LogicalPlan]
         case rel: DataSourceV2Relation =>
           NativeReadRule.rowLevelOperationOf(rel.table) match {
             case Some(cow: LakeCowRowLevelOperation) =>
-              spliceCowScan(cow, rel.output, conjuncts)
+              spliceCowScan(cow, rel.output, conjuncts, rd.groupFilterCondition)
             case _ => rel
           }
       })

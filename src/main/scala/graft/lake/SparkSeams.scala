@@ -77,8 +77,22 @@ import org.apache.spark.internal.Logging
   *     a method-lookup failure at analysis if argument classes change.
   *     Canary: EqualityDeleteSpec (every case reads both ways).
   *
+  *  9. **`LakeTable`'s DML** — pins the Catalyst row-level command
+  *     constructors `catalyst.plans.logical.{DeleteFromTable,
+  *     UpdateTable, MergeIntoTable(…, withSchemaEvolution), Assignment,
+  *     UpdateAction(…, fromStar), DeleteAction, InsertAction,
+  *     InsertStarAction, SubqueryAlias}` and
+  *     `DataSourceV2Relation.create(table, None, None)`: `delete`,
+  *     `update` and `mergeClauses` build the commands SQL DML parses to,
+  *     over the handle's own table. [[NativeReadRule]]'s MERGE scope
+  *     also reads `ReplaceData.groupFilterCondition` (the rewrite's
+  *     `EXISTS` group filter). Breakage modes: compile error on a
+  *     constructor change; a CoW MERGE rewriting every scoped file if the
+  *     group filter's shape changes. Canaries: LakeTableSpec (job counts,
+  *     CoW MERGE carry-over, branch DML), DmlModelSpec.
+  *
   * [[check]] logs one WARN when the running Spark is not the pinned
-  * minor — cheap early signal that the eight canaries above deserve a
+  * minor — cheap early signal that the nine canaries above deserve a
   * look before trusting a new runtime. */
 object SparkSeams extends Logging {
   /** Spark minor these seams were written and tested against. */
@@ -94,7 +108,7 @@ object SparkSeams extends Logging {
         s"graft's Spark-internal seams are pinned to Spark $PinnedMinor.x " +
           s"but this runtime is $v — run the seam canaries (TableStatsSpec, " +
           "ExtensionsSpec, StreamingSpec, LakeTableSpec, SchemaEvolutionSpec, " +
-          "AddFilesSpec, EqualityDeleteSpec) before trusting it; " +
+          "AddFilesSpec, EqualityDeleteSpec, DmlModelSpec) before trusting it; " +
           "see graft.lake.SparkSeams for the seam inventory")
     }
   }

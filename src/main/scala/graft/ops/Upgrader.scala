@@ -134,6 +134,9 @@ object Upgrader {
       .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // LakeSql reads splice the native plan and copy-on-write DML plans
+      // at all only with the extensions, as in every other session
+      .config("spark.sql.extensions", "graft.lake.LakeExtensions")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val up = new Upgrader(new LakeSql(new LakeCatalog(spark, Paths.get(warehouse))))

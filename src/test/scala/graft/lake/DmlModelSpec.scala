@@ -65,13 +65,12 @@ class DmlModelSpec extends SparkSpec {
               model = model.filterNot(_._1 <= cut)
             } else {
               val c = cats(rnd.nextInt(3))
-              // MoR trials route half the deletes through the NATIVE
-              // SupportsRowLevelOperations path — same model, so the
-              // two DML surfaces are differentially fuzzed against each
-              // other as well as against the oracle. Both write modes
-              // run natively now: MoR → WriteDelta, CoW → group-based
-              // ReplaceData (partition-split writers + scope pruning,
-              // since this table partitions by category)
+              // half the deletes arrive as SQL through spark.sql, half
+              // as LakeTable.delete — both plan the same row-level
+              // command, and the model stays the reference for each:
+              // MoR → WriteDelta, CoW → group-based ReplaceData
+              // (partition-split writers + scope pruning, since this
+              // table partitions by category)
               if (rnd.nextBoolean()) {
                 spark.conf.set(LakeExtensions.WarehouseConf, wh.toString)
                 spark.sql(s"DELETE FROM lake.db.t WHERE category = '$c'")

@@ -976,6 +976,12 @@ class ExtensionsSpec extends SparkSpec {
       spark.sql("UPDATE lake.db.bk SET category = 'b' WHERE id = 1")
     }
     assert(err.getMessage.contains("repair_v3_metadata"))
+    // LakeTable.update plans the same command and fails the same way
+    val dfErr = intercept[MissingRowLineageException] {
+      sql.catalog.loadTable("db", "bk").get
+        .update(Map("category" -> lit("b")), col("id") === 1)
+    }
+    assert(dfErr.getMessage.contains("repair_v3_metadata"))
   }
 
   test("DSv2 catalog: session principal gates native reads and writes (M10)") {
@@ -1241,6 +1247,20 @@ class ExtensionsSpec extends SparkSpec {
     // invalid literal surfaces at DDL time
     assertThrows[IllegalArgumentException](
       sql.run("ALTER TABLE db.cd ADD COLUMN bad INT DEFAULT 'oops'"))
+  }
+
+  test("direct spark.sql: ADD COLUMN ... DEFAULT and SET DEFAULT apply through the catalog") {
+    val wh = Files.createTempDirectory("graft-cdd-wh")
+    val sql = new LakeSql(new LakeCatalog(spark, wh))
+    sql.run("CREATE TABLE db.cdd (id INT)")
+    sql.run("INSERT INTO db.cdd VALUES (1)")
+    spark.sql("ALTER TABLE lake.db.cdd ADD COLUMN score INT DEFAULT 7")
+    spark.sql("ALTER TABLE lake.db.cdd ALTER COLUMN score SET DEFAULT 9")
+    spark.sql("INSERT INTO lake.db.cdd (id) VALUES (2)")
+    // the pre-column row reads the initial default, the new row the
+    // write default SET DEFAULT installed
+    assert(spark.sql("SELECT id, score FROM lake.db.cdd ORDER BY id").collect()
+      .map(r => r.getInt(0) -> r.getInt(1)).toSeq == Seq(1 -> 7, 2 -> 9))
   }
 
   test("DSv2 catalog: metadata tables lake.db.t.history/snapshots/files resolve natively") {

@@ -215,6 +215,21 @@ class LakeTableSpec extends SparkSpec {
       assert(t.deleteFiles.nonEmpty && t.deleteFiles.map(_.rowCount).sum == 13, t0.name)
       assert(ids(t) == (1 to 66).filterNot(_ % 5 == 0), t0.name)
     }
+    // an UPDATE plans like the SQL statement: the delta write, plus the
+    // lineage-carrying scan's job on v3 with DVs
+    for ((t0, budget) <- Seq(pos -> 2, dv -> 3)) {
+      val t1 = t0.reloaded()
+      var t = t1
+      val jobs = jobsDuring {
+        t = t1.update(Map("amount" -> lit(-1.0)), col("id") % 7 === 0)
+      }
+      assert(jobs <= budget, s"${t0.name}: UPDATE ran $jobs jobs")
+      // 8 multiples of 7 survive the DELETE (35 went); their old
+      // positions join the 13 deleted ones
+      assert(t.deleteFiles.map(_.rowCount).sum == 13 + 8, t0.name)
+      assert(ids(t) == (1 to 66).filterNot(_ % 5 == 0), t0.name)
+      assert(t.read().filter(col("amount") === -1.0).count() == 8, t0.name)
+    }
   }
 
   test("an equality-deleted read runs no more jobs than its clean twin") {
@@ -1020,6 +1035,23 @@ class LakeTableSpec extends SparkSpec {
     assertThrows[IllegalArgumentException](expired.onBranch("nope"))
     assertThrows[IllegalArgumentException](expired.createBranch("keep"))
     assertThrows[IllegalArgumentException](expired.dropBranch("gone"))
+    // UPDATE and MERGE on a branch handle run through the row-level
+    // writers and land on the branch, not main
+    def state(t: LakeTable): Seq[(Int, Double)] = t.read().collect()
+      .map(r => (r.getInt(0), r.getDouble(2))).toSeq.sorted
+    val mainBefore = state(expired)
+    val audit = expired.createBranch("audit").onBranch("audit")
+      .update(Map("amount" -> lit(0.0)), col("id") === 2)
+      .merge(df((3, "b", 33.0), (9, "e", 90.0)), col("t.id") === col("s.id"),
+        Some(MergeMatched.Update(Map("amount" -> col("s.amount")))),
+        insertNotMatched = true)
+    val branchState = state(audit)
+    assert(branchState.contains((2, 0.0)) && branchState.contains((3, 33.0)) &&
+      branchState.contains((9, 90.0)), s"branch DML: $branchState")
+    val mainNow = cat.loadTable("db", "wap").get
+    assert(state(mainNow) == mainBefore,
+      "main must not see the branch's UPDATE and MERGE before fastForward")
+    assert(state(mainNow.fastForward("audit")) == branchState)
   }
 
   test("incremental read: (from, to] append diffs; replace skipped; " +

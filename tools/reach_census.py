@@ -11,9 +11,11 @@ interpolated string are kept). Each name gets one verdict:
   none       referenced nowhere
 
 The census is name-based: overloads and same-named members share one
-count, and a reference through reflection or a framework callback is
-invisible (`override` defs and `main` are therefore skipped). It lists
-candidates for a human decision and gates nothing; it always exits 0.
+count, and a reference through reflection, a framework callback or
+Scala syntax is invisible: `override` defs and `main` are skipped, and so
+are `apply` and `unapply`, which call sites reach as `X(...)` and as a
+`case X(...)` pattern. It lists candidates for a human decision and gates
+nothing; it always exits 0.
 
 Usage, from any directory: python3 tools/reach_census.py [--all] [filter ...]
 prints the test-only/none rows (every row with --all) and totals, counting
@@ -30,6 +32,8 @@ TEST_DIRS = ["src/test/scala"]
 DEF_RE = re.compile(r"(?<![\w.])(override\s+(?:lazy\s+)?)?(?:lazy\s+)?"
                     r"(def|val|var)\s+([A-Za-z_]\w*)")
 WORD_RE = re.compile(r"[A-Za-z_]\w*")
+# reached without their name appearing at the call site
+SYNTAX_CALLED = {"main", "apply", "unapply"}
 
 
 def strip(src):
@@ -96,7 +100,7 @@ def census(filters, show_all):
         for m in DEF_RE.finditer(t):
             def_sites[(is_main[p], m.group(3))] += 1
             if p.startswith("src/main/scala") and not m.group(1) \
-                    and m.group(3) != "main":
+                    and m.group(3) not in SYNTAX_CALLED:
                 defs.append((p, t.count("\n", 0, m.start()) + 1,
                              m.group(2), m.group(3)))
     verdicts = Counter()
